@@ -10,15 +10,7 @@ import org.apache.spark.sql.functions._
   * distinct (order, part) → order-keyed self-join → pair-count
   * relation from lineitem; at the 100× rehearsal that builder is
   * ~80 s of each query's total, paid four times per catalog pass.
-  *
-  * The built relation is MATERIALIZED to a per-process parquet
-  * scratch dir (TmpDirs — shutdown-hook cleaned) rather than held as
-  * a cached/checkpointed Spark relation: the bench's between-query
-  * block hygiene unpersists every RDD (a localCheckpoint reused
-  * across queries would lose its blocks with no lineage to rebuild),
-  * and a file is exactly what a production pipeline would do with a
-  * shared derived relation at 100 TB — build once, scan many times,
-  * with column pruning and predicate pushdown on every consumer.
+  * Built through [[TmpDirs.buildOnce]] (parquet scratch, see there).
   *
   * Contents: one row per unordered part pair (`pa` < `pb`) that
   * shares at least one order, with `n_orders` = the number of
@@ -30,44 +22,35 @@ import org.apache.spark.sql.functions._
   */
 object CoPurchase {
 
-  private val built = scala.collection.mutable.Set[String]()
-
   /** The weighted pair relation (pa, pb, n_orders), built at most once
     * per process per sfDir and served from parquet thereafter.
     */
-  def pairCounts(s: SparkSession, dir: String): DataFrame = {
-    val canonical = new java.io.File(dir).getCanonicalPath
-    val out = TmpDirs.perProcess("graft_copurchase", canonical)
-    this.synchronized {
-      if (!built.contains(canonical)) BuildTimes.timed("copurchase_rel") {
-        val op = Tables(s, dir, "lineitem")
-          .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-          .distinct()
-          // corpus-sized (57M rows at 100×) and feeding both self-join
-          // sides — DISK_ONLY checkpoint (the q172 unroll-cliff lesson)
-          .localCheckpoint(true,
-            org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        val a = op.select(col("o"), col("p").as("pa"))
-        val b = op.select(col("o"), col("p").as("pb"))
-        a.join(b, Seq("o")).filter(col("pa") < col("pb"))
-          .groupBy(col("pa"), col("pb")).agg(count(lit(1)).as("n_orders"))
-          .write.mode("overwrite").parquet(out)
-        // The write above is a hard job barrier — the relation now
-        // lives in parquet and NOTHING may keep the builder's footprint
-        // alive into the consumer's execution (r13 verdict item 4: the
-        // standalone q172 census OOMed a 24 GB heap because the
-        // builder's checkpoint blocks + uncollected shuffle state
-        // overlapped the census peak in one JVM; the catalog run only
-        // survived because q166 paid the build in a separate query).
-        // Release eagerly: drop the checkpoint blocks, then force a GC
-        // so the ContextCleaner reclaims the build's shuffle files and
-        // broadcasts NOW instead of whenever a driver GC happens to
-        // land mid-census.
-        op.unpersist(blocking = true)
-        System.gc()
-        built.add(canonical): Unit
-      }
-    }
-    s.read.parquet(out)
-  }
+  def pairCounts(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(TmpDirs.buildOnce("copurchase_rel", dir) { out =>
+      val op = Tables(s, dir, "lineitem")
+        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
+        .distinct()
+        // corpus-sized (57M rows at 100×) and feeding both self-join
+        // sides — DISK_ONLY checkpoint (the q172 unroll-cliff lesson)
+        .localCheckpoint(true,
+          org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      val a = op.select(col("o"), col("p").as("pa"))
+      val b = op.select(col("o"), col("p").as("pb"))
+      a.join(b, Seq("o")).filter(col("pa") < col("pb"))
+        .groupBy(col("pa"), col("pb")).agg(count(lit(1)).as("n_orders"))
+        .write.mode("overwrite").parquet(out)
+      // The write above is a hard job barrier — the relation now
+      // lives in parquet and NOTHING may keep the builder's footprint
+      // alive into the consumer's execution (r13 verdict item 4: the
+      // standalone q172 census OOMed a 24 GB heap because the
+      // builder's checkpoint blocks + uncollected shuffle state
+      // overlapped the census peak in one JVM; the catalog run only
+      // survived because q166 paid the build in a separate query).
+      // Release eagerly: drop the checkpoint blocks, then force a GC
+      // so the ContextCleaner reclaims the build's shuffle files and
+      // broadcasts NOW instead of whenever a driver GC happens to
+      // land mid-census.
+      op.unpersist(blocking = true)
+      System.gc()
+    })
 }

@@ -14,11 +14,8 @@ import org.apache.spark.sql.functions._
   * alphaCoef = 0.6 − 1e-4 (measured 2.56 / 1.92 s steady at sf0.1,
   * the shared stages ~80% of each).
   *
-  * Materialized to per-process parquet scratch (TmpDirs; build seconds
-  * drained to `queries_build` via [[BuildTimes]]). NOT a cross-run
-  * cache: a fresh process rebuilds from the parquet inputs. Both
-  * relations are exact-integer-valued, so the round-trip is
-  * bit-lossless:
+  * Built through [[TmpDirs.buildOnce]]. Both relations are
+  * exact-integer-valued, so the parquet round-trip is bit-lossless:
   *  - `docmap`: (id, __n, __rep, __m, __second) — the class-annotated
   *    per-doc set relation MINUS the __byRarity payload (only the pair
   *    machinery reads it, and that runs inside the build);
@@ -31,30 +28,21 @@ object ContainmentRel {
   val Threshold = 0.6
   val ShingleWords = 3
 
-  private val built = scala.collection.mutable.Set[String]()
-
-  private def ensure(s: SparkSession, dir: String): String = {
-    val canonical = new java.io.File(dir).getCanonicalPath
-    val root = TmpDirs.perProcess("graft_containrel", canonical)
-    this.synchronized {
-      if (!built.contains(canonical)) BuildTimes.timed("containment_rel") {
-        val docs = Tables(s, dir, "documents")
-        val docMap = operators.Dedup.perDocSetsWithClasses(docs, "doc_id",
-            "text", ShingleWords, operators.Dedup.DefaultMaxShingleDf)
-          .localCheckpoint()
-        operators.Dedup
-          .repPairsFromDocMap(docMap, alphaCoef = Threshold - 1e-4)
-          .write.mode("overwrite").parquet(s"$root/reppairs")
-        docMap.select(col("id"), col("__n"), col("__rep"), col("__m"),
-            col("__second"))
-          .write.mode("overwrite").parquet(s"$root/docmap")
-        // release the corpus-sized __byRarity checkpoint blocks before
-        // any consumer executes (the CoPurchase footprint lesson)
-        docMap.unpersist(blocking = true)
-        built.add(canonical): Unit
-      }
-    }
-    root
+  private def ensure(s: SparkSession, dir: String): String =
+    TmpDirs.buildOnce("containment_rel", dir) { root =>
+      val docs = Tables(s, dir, "documents")
+      val docMap = operators.Dedup.perDocSetsWithClasses(docs, "doc_id",
+          "text", ShingleWords, operators.Dedup.DefaultMaxShingleDf)
+        .localCheckpoint()
+      operators.Dedup
+        .repPairsFromDocMap(docMap, alphaCoef = Threshold - 1e-4)
+        .write.mode("overwrite").parquet(s"$root/reppairs")
+      docMap.select(col("id"), col("__n"), col("__rep"), col("__m"),
+          col("__second"))
+        .write.mode("overwrite").parquet(s"$root/docmap")
+      // release the corpus-sized __byRarity checkpoint blocks before
+      // any consumer executes (the CoPurchase footprint lesson)
+      docMap.unpersist(blocking = true)
   }
 
   /** (id, __n, __rep, __m, __second) — class-annotated per-doc sets. */

@@ -17,23 +17,13 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
 
-  /** Register graft's native functions (vec_dot, vec_l2norm, bitset_inter,
-    * minhash_array, simhash_array, shingle_hashes, minhash_agg,
-    * lang_marker_scores) in the session's function registry for SQL use.
-    * Idempotent.
+  /** Register every graft kernel ([[functions.Kernels]]: vector, sketch,
+    * text, sketch-gate, range-bucket and aggregate functions, plus
+    * `asof_marker` with its optimizer rule/strategy so SQL text can spell
+    * an as-of join) in the session for SQL use. Idempotent.
     */
   def init(spark: SparkSession): SparkSession = {
-    val prev = SparkSession.getActiveSession
-    SparkSession.setActiveSession(spark)
-    try {
-      functions.VectorExprs.ensureRegistered()
-      functions.SketchExprs.ensureRegistered()
-      functions.TextExprs.ensureRegistered()
-      plans.MinHashAgg.ensureRegistered()
-      // asof_marker + its optimizer rule/strategy, so SQL text can spell
-      // an as-of join (JOIN ... ON asof_marker(k_l, k_r, t_l, t_r, mode))
-      plans.AsOfJoin.ensureRegistered(spark)
-    } finally prev.foreach(SparkSession.setActiveSession)
+    functions.Kernels.register(spark)
     spark
   }
 

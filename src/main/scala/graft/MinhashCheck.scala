@@ -30,6 +30,11 @@ import graft.operators.Dedup
   */
 private[graft] object MinhashCheck {
 
+  /** The exact-jaccard bar: the exact side's pair threshold and the
+    * full-set jaccard below which a miss is universe-divergent.
+    */
+  val ExactBar = 0.8
+
   final case class Result(
       nSampled: Long, exact: Set[(Long, Long)], banded: Set[(Long, Long)],
       exactSecs: Double, bandedSecs: Double,
@@ -48,7 +53,7 @@ private[graft] object MinhashCheck {
       * re-verification is what PROVES a miss genuine.)
       */
     def divergent: Set[(Long, Long)] =
-      missed.filter(p => fullSetJ.getOrElse(p, 1.0) < 0.8)
+      missed.filter(p => fullSetJ.getOrElse(p, 1.0) < ExactBar)
     /** Misses at full-set j ≥ 0.8 — real sketch recall failures,
       * bounded by a quantitative floor instead of missed=0, which is
       * unattainable for a probabilistic sketch at corpus scale.
@@ -78,7 +83,7 @@ private[graft] object MinhashCheck {
       */
     def pass: Boolean = exact.nonEmpty && recallGenuine >= 0.9999
     def detail: String =
-      s"exact(j>=0.8)=${exact.size} minhash=${banded.size} " +
+      s"exact(j>=$ExactBar)=${exact.size} minhash=${banded.size} " +
         s"missed=${missed.size} missed_divergent_universe=${divergent.size} " +
         s"missed_genuine=${genuine.size} " +
         f"recall_genuine=$recallGenuine%.6f sampled_docs=$nSampled"
@@ -89,9 +94,11 @@ private[graft] object MinhashCheck {
 
   /** Full-shingle-set jaccard for a handful of (id, id) pairs — the
     * per-missed-pair re-verification (driver-side over collected
-    * shingle sets; |missed| is tiny by construction).
+    * shingle sets; |missed| is tiny by construction). An id absent
+    * from the documents table is a lookup bug, not a jaccard of 0 —
+    * it throws, so it can never excuse a miss as divergent.
     */
-  private def fullSetJaccard(spark: SparkSession, sfDir: String,
+  private[graft] def fullSetJaccard(spark: SparkSession, sfDir: String,
       pairs: Set[(Long, Long)]): Map[(Long, Long), Double] = {
     if (pairs.isEmpty) return Map.empty
     val ids = pairs.flatMap(p => Seq(p._1, p._2)).toSeq
@@ -103,9 +110,12 @@ private[graft] object MinhashCheck {
           .as("__sh"))
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
+    def shingles(id: Long): Set[Long] = sets.getOrElse(id,
+      throw new IllegalStateException(
+        s"MinhashCheck: doc id $id of a missed pair is not in " +
+          s"$sfDir/documents"))
     pairs.iterator.map { case p @ (a, b) =>
-      val (sa, sb) = (sets.getOrElse(a, Set.empty),
-        sets.getOrElse(b, Set.empty))
+      val (sa, sb) = (shingles(a), shingles(b))
       val inter = sa.intersect(sb).size
       val uni = sa.size + sb.size - inter
       p -> (if (uni == 0) 0.0 else inter.toDouble / uni)
@@ -122,7 +132,7 @@ private[graft] object MinhashCheck {
     def inSample(id: Long): Boolean =
       everyKthFamily <= 1L || (id % 100000000L) % everyKthFamily == 0L
     val t0 = System.nanoTime()
-    val exact = Dedup.jaccardPairs(sampled, "doc_id", "text", 0.8)
+    val exact = Dedup.jaccardPairs(sampled, "doc_id", "text", ExactBar)
       .select(col("id_a"), col("id_b")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val exactSecs = (System.nanoTime() - t0) / 1e9

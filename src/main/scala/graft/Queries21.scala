@@ -16,9 +16,6 @@ object Queries21 {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables(s, dir, name)
 
-  private val builtPq = scala.collection.mutable.Set[String]()
-  private val builtIvfPq = scala.collection.mutable.Set[String]()
-
   private def plantedCorpus(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
     val base = t(s, dir, "embeddings")
@@ -39,16 +36,11 @@ object Queries21 {
     */
   def q187_pq_store_topk(s: SparkSession, dir: String): DataFrame = {
     val (base, corpus) = plantedCorpus(s, dir)
-    val canonical = new java.io.File(dir).getCanonicalPath
-    val store = TmpDirs.perProcess("graft_pqstore", canonical)
-    this.synchronized {
-      if (!builtPq.contains(canonical)) BuildTimes.timed("pq_store") {
-        val idx = Similarity.PqIndex.trainCached(s"$dir:embeddings:pq",
-          base, "e", m = 8, ksub = 16)
-        IndexStore.savePq(s, store, idx,
-          Similarity.pqEncode(corpus, "vec_id", "e", idx), "vec_id")
-        builtPq.add(canonical): Unit
-      }
+    val store = TmpDirs.buildOnce("pq_store", dir) { store =>
+      val idx = Similarity.PqIndex.trainCached(s"$dir:embeddings:pq",
+        base, "e", m = 8, ksub = 16)
+      IndexStore.savePq(s, store, idx,
+        Similarity.pqEncode(corpus, "vec_id", "e", idx), "vec_id")
     }
     val (idx, codes) = IndexStore.loadPq(s, store)
     val queries = corpus.filter(col("vec_id") % 10 === 0 &&
@@ -67,19 +59,14 @@ object Queries21 {
     */
   def q188_ivfpq_store_topk(s: SparkSession, dir: String): DataFrame = {
     val (base, corpus) = plantedCorpus(s, dir)
-    val canonical = new java.io.File(dir).getCanonicalPath
-    val store = TmpDirs.perProcess("graft_ivfpqstore", canonical)
-    this.synchronized {
-      if (!builtIvfPq.contains(canonical)) BuildTimes.timed("ivfpq_store") {
-        val coarse = Similarity.IvfIndex.trainCached(
-          s"$dir:embeddings:ivfpq-coarse", base, "e", nlist = 16)
-        val pq = Similarity.trainPqResidualsCached(
-          s"$dir:embeddings:ivfpq-res", base, "e", coarse, m = 8, ksub = 16)
-        IndexStore.saveIvfPq(s, store, coarse, pq,
-          Similarity.ivfPqEncode(corpus, "vec_id", "e", coarse, pq),
-          "vec_id")
-        builtIvfPq.add(canonical): Unit
-      }
+    val store = TmpDirs.buildOnce("ivfpq_store", dir) { store =>
+      val coarse = Similarity.IvfIndex.trainCached(
+        s"$dir:embeddings:ivfpq-coarse", base, "e", nlist = 16)
+      val pq = Similarity.trainPqResidualsCached(
+        s"$dir:embeddings:ivfpq-res", base, "e", coarse, m = 8, ksub = 16)
+      IndexStore.saveIvfPq(s, store, coarse, pq,
+        Similarity.ivfPqEncode(corpus, "vec_id", "e", coarse, pq),
+        "vec_id")
     }
     val (coarse, pq, enc) = IndexStore.loadIvfPq(s, store)
     val queries = corpus.filter(col("vec_id") % 10 === 0 &&
@@ -153,8 +140,6 @@ object Queries21 {
       .orderBy(col("stage"))
   }
 
-  private val builtIvf = scala.collection.mutable.Set[String]()
-
   /** Plain-IVF ANN served from a PERSISTED store (centroids + the
     * corpus assignment + the measured nprobe): q46's exact contract
     * with the probe job paying only an id-keyed join instead of the
@@ -165,17 +150,12 @@ object Queries21 {
     */
   def q195_ivf_store_topk(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
-    val canonical = new java.io.File(dir).getCanonicalPath
-    val store = TmpDirs.perProcess("graft_ivfstore", canonical)
-    this.synchronized {
-      if (!builtIvf.contains(canonical)) BuildTimes.timed("ivf_store") {
-        val (idx, nprobe) = Similarity.IvfIndex.trainCachedScaled(
-          s"$dir:embeddings", emb, "embedding")
-        IndexStore.saveIvf(s, store, idx,
-          Similarity.ivfAssign(emb, "vec_id", "embedding", idx),
-          "vec_id", nprobe)
-        builtIvf.add(canonical): Unit
-      }
+    val store = TmpDirs.buildOnce("ivf_store", dir) { store =>
+      val (idx, nprobe) = Similarity.IvfIndex.trainCachedScaled(
+        s"$dir:embeddings", emb, "embedding")
+      IndexStore.saveIvf(s, store, idx,
+        Similarity.ivfAssign(emb, "vec_id", "embedding", idx),
+        "vec_id", nprobe)
     }
     val (idx, nprobe, assigned) = IndexStore.loadIvf(s, store)
     Similarity.ivfTopK(

@@ -116,8 +116,6 @@ object Queries23 {
       .orderBy(col("qid"), col("rank"))
   }
 
-  private val builtAppend = scala.collection.mutable.Set[String]()
-
   /** Corpus split for the incremental-append store: the q187 planted
     * corpus, with every 7th id as the ARRIVING batch and the rest as
     * the RESIDENT corpus the codebooks were trained on.
@@ -140,25 +138,18 @@ object Queries23 {
     * batch encoded with the LOADED (frozen) codebooks — never a
     * retrain, never a corpus re-encode. Returns the store path.
     */
-  private[graft] def appendStore(s: SparkSession, dir: String): String = {
-    import graft.operators.{IndexStore, Similarity}
-    val (_, resident, arriving) = appendParts(s, dir)
-    val canonical = new java.io.File(dir).getCanonicalPath
-    val store = TmpDirs.perProcess("graft_pqappend", canonical)
-    this.synchronized {
-      if (!builtAppend.contains(canonical)) BuildTimes.timed("pq_append_store") {
-        val idx = Similarity.PqIndex.trainCached(appendPqKey(dir),
-          resident, "e", m = 8, ksub = 16)
-        IndexStore.savePq(s, store, idx,
-          Similarity.pqEncode(resident, "vec_id", "e", idx), "vec_id")
-        val (loaded, _) = IndexStore.loadPq(s, store)
-        IndexStore.appendCodes(s, store,
-          Similarity.pqEncode(arriving, "vec_id", "e", loaded), "vec_id")
-        builtAppend.add(canonical): Unit
-      }
+  private[graft] def appendStore(s: SparkSession, dir: String): String =
+    TmpDirs.buildOnce("pq_append_store", dir) { store =>
+      import graft.operators.{IndexStore, Similarity}
+      val (_, resident, arriving) = appendParts(s, dir)
+      val idx = Similarity.PqIndex.trainCached(appendPqKey(dir),
+        resident, "e", m = 8, ksub = 16)
+      IndexStore.savePq(s, store, idx,
+        Similarity.pqEncode(resident, "vec_id", "e", idx), "vec_id")
+      val (loaded, _) = IndexStore.loadPq(s, store)
+      IndexStore.appendCodes(s, store,
+        Similarity.pqEncode(arriving, "vec_id", "e", loaded), "vec_id")
     }
-    store
-  }
 
   /** PQ ANN over an INCREMENTALLY-MAINTAINED store: codebooks trained
     * on the resident corpus, the arriving batch encoded with the loaded
@@ -223,31 +214,22 @@ object Queries23 {
       .orderBy(col("id"))
   }
 
-  private val builtBm25 = scala.collection.mutable.Set[String]()
-
   /** Build-once: a persisted BM25 store from the RESIDENT corpus
     * (ids ≢ 0 mod 7), then [[graft.operators.IndexStore.appendCodes]]
     * the arriving batch's postings — computed INDEPENDENTLY (postings
     * are per-doc pure; nothing is frozen, unlike the ANN codebooks).
     */
-  private[graft] def bm25Store(s: SparkSession, dir: String): String = {
-    import graft.operators.{IndexStore, Retrieval}
-    val corpus = tokenized(s, dir)
-    val canonical = new java.io.File(dir).getCanonicalPath
-    val store = TmpDirs.perProcess("graft_bm25store", canonical)
-    this.synchronized {
-      if (!builtBm25.contains(canonical)) BuildTimes.timed("bm25_store") {
-        IndexStore.saveBm25(s, store,
-          Retrieval.bm25Postings(corpus.filter(col("id") % 7 =!= 0),
-            "id", "toks"), "id")
-        IndexStore.appendCodes(s, store,
-          Retrieval.bm25Postings(corpus.filter(col("id") % 7 === 0),
-            "id", "toks"), "id")
-        builtBm25.add(canonical): Unit
-      }
+  private[graft] def bm25Store(s: SparkSession, dir: String): String =
+    TmpDirs.buildOnce("bm25_store", dir) { store =>
+      import graft.operators.{IndexStore, Retrieval}
+      val corpus = tokenized(s, dir)
+      IndexStore.saveBm25(s, store,
+        Retrieval.bm25Postings(corpus.filter(col("id") % 7 =!= 0),
+          "id", "toks"), "id")
+      IndexStore.appendCodes(s, store,
+        Retrieval.bm25Postings(corpus.filter(col("id") % 7 === 0),
+          "id", "toks"), "id")
     }
-    store
-  }
 
   /** q197's exact contract SERVED from a persisted + incrementally
     * APPENDED BM25 store ([[bm25Store]]): N/totdl/df are re-derived

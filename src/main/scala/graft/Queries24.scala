@@ -98,29 +98,20 @@ object Queries24 {
         .distinct(), Seq("__h"), "left_anti")
       .select(col("id"), col("text"))
 
-  private val builtIngest = scala.collection.mutable.Set[String]()
-
   /** Build-once (per process/sfDir): save a BM25 store from the
     * RESIDENT corpus, run the arriving batch through [[admit]], and
     * append ONLY the admitted docs' postings ([[IndexStore.appendCodes]]
     * `bm25` kind). Returns the store path.
     */
-  private[graft] def ingestStore(s: SparkSession, dir: String): String = {
-    val canonical = new java.io.File(dir).getCanonicalPath
-    val store = TmpDirs.perProcess("graft_ingest", canonical)
-    this.synchronized {
-      if (!builtIngest.contains(canonical)) BuildTimes.timed("ingest_loop_store") {
-        val (resident, arrivals) = ingestParts(s, dir)
-        IndexStore.saveBm25(s, store,
-          Retrieval.bm25Postings(tok(resident), "id", "toks"), "id")
-        IndexStore.appendCodes(s, store,
-          Retrieval.bm25Postings(tok(admit(resident, arrivals)),
-            "id", "toks"), "id")
-        builtIngest.add(canonical): Unit
-      }
+  private[graft] def ingestStore(s: SparkSession, dir: String): String =
+    TmpDirs.buildOnce("ingest_loop_store", dir) { store =>
+      val (resident, arrivals) = ingestParts(s, dir)
+      IndexStore.saveBm25(s, store,
+        Retrieval.bm25Postings(tok(resident), "id", "toks"), "id")
+      IndexStore.appendCodes(s, store,
+        Retrieval.bm25Postings(tok(admit(resident, arrivals)),
+          "id", "toks"), "id")
     }
-    store
-  }
 
   /** The merged post-ingestion corpus (resident ∪ admitted), tokenized —
     * what a full rebuild would index; the panel and the hard gate both

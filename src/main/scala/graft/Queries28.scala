@@ -25,44 +25,36 @@ import graft.operators.{IndexStore, Similarity}
   */
 object Queries28 {
 
-  private val builtStream = scala.collection.mutable.Set[String]()
-
   /** Build-once (per process/sfDir): a fresh store seeded with the
     * resident assignment under q209's LOADED hierarchy, then the
     * arriving rows streamed in as three parquet-staged micro-batches
     * through [[graft.streaming.Streams.ivf2AppendStream]].
     */
   private[graft] def ivf2StreamStore(s: SparkSession, dir: String): String = {
-    val canonical = new java.io.File(dir).getCanonicalPath
-    val root = TmpDirs.perProcess("graft_ivf2stream", canonical)
-    this.synchronized {
-      if (!builtStream.contains(canonical))
-        BuildTimes.timed("ivf2_stream_store") {
-          val batchStore = Queries27.ivf2AppendStore(s, dir)
-          val (idx, kSup, kChild, _) = IndexStore.loadIvf2(s, batchStore)
-          val (_, resident, arriving) = Queries23.appendParts(s, dir)
-          val store = s"$root/store"
-          IndexStore.saveIvf2(s, store, idx,
-            Similarity.ivf2Assign(resident, "vec_id", "e", idx),
-            "vec_id", kSup, kChild)
-          val watched = s"$root/in"
-          new java.io.File(watched).mkdirs(): Unit
-          val src = s.readStream.schema("vec_id LONG, e ARRAY<DOUBLE>")
-            .parquet(watched)
-          val q = graft.streaming.Streams.ivf2AppendStream(
-            src, store, "vec_id", "e")
-          // three staged chunks = three triggers; processAllAvailable
-          // between stages so each chunk is its own micro-batch and
-          // every append commits before the next arrives (the q211
-          // staging discipline)
-          try (0 until 3).foreach { k =>
-            arriving.filter(pmod(col("vec_id"), lit(3)) === k)
-              .select(col("vec_id"), col("e"))
-              .coalesce(1).write.mode("append").parquet(watched)
-            q.processAllAvailable()
-          } finally q.stop()
-          builtStream.add(canonical): Unit
-        }
+    val root = TmpDirs.buildOnce("ivf2_stream_store", dir) { root =>
+      val batchStore = Queries27.ivf2AppendStore(s, dir)
+      val (idx, kSup, kChild, _) = IndexStore.loadIvf2(s, batchStore)
+      val (_, resident, arriving) = Queries23.appendParts(s, dir)
+      val store = s"$root/store"
+      IndexStore.saveIvf2(s, store, idx,
+        Similarity.ivf2Assign(resident, "vec_id", "e", idx),
+        "vec_id", kSup, kChild)
+      val watched = s"$root/in"
+      new java.io.File(watched).mkdirs(): Unit
+      val src = s.readStream.schema("vec_id LONG, e ARRAY<DOUBLE>")
+        .parquet(watched)
+      val q = graft.streaming.Streams.ivf2AppendStream(
+        src, store, "vec_id", "e")
+      // three staged chunks = three triggers; processAllAvailable
+      // between stages so each chunk is its own micro-batch and
+      // every append commits before the next arrives (the q211
+      // staging discipline)
+      try (0 until 3).foreach { k =>
+        arriving.filter(pmod(col("vec_id"), lit(3)) === k)
+          .select(col("vec_id"), col("e"))
+          .coalesce(1).write.mode("append").parquet(watched)
+        q.processAllAvailable()
+      } finally q.stop()
     }
     s"$root/store"
   }

@@ -72,11 +72,8 @@ object StableStores {
     */
   def buildOnce(name: String, key: String, fp: String)(
       build: String => Unit): String = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .take(8).map(b => f"$b%02x").mkString
     val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_stable_${name}_$digest").getPath
+      s"graft_stable_${name}_${TmpDirs.keyDigest(key)}").getPath
     if (ready.contains(s"$dir|$fp")) return dir
     this.synchronized {
       if (ready.contains(s"$dir|$fp")) return dir
@@ -103,7 +100,7 @@ object StableStores {
                 ProcessHandle.of(p).map[java.lang.Boolean](_.isAlive)
                   .orElse(java.lang.Boolean.FALSE).booleanValue())
             }
-          }.foreach(deleteRec)
+          }.foreach(TmpDirs.deleteRec)
         val tmp = new java.io.File(s"$dir.build.${
           ProcessHandle.current().pid()}")
         tmp.mkdirs(): Unit
@@ -111,7 +108,7 @@ object StableStores {
           build(tmp.getPath)
           java.nio.file.Files.writeString(
             tmp.toPath.resolve("_FINGERPRINT"), fp): Unit
-          deleteRec(new java.io.File(dir))
+          TmpDirs.deleteRec(new java.io.File(dir))
           try
             java.nio.file.Files.move(tmp.toPath,
               java.nio.file.Paths.get(dir)): Unit
@@ -124,7 +121,7 @@ object StableStores {
                 s"concurrent publication of $dir has a different " +
                   "fingerprint — inputs changed mid-build; rerun")
           }
-        } finally deleteRec(tmp) // no-op after a successful rename
+        } finally TmpDirs.deleteRec(tmp) // no-op after a successful rename
         BuildTimes.record(name, (System.nanoTime() - t0) / 1e9)
       }
       ready.add(s"$dir|$fp"): Unit
@@ -136,12 +133,6 @@ object StableStores {
     try java.nio.file.Files.readString(
       java.nio.file.Paths.get(dir, "_FINGERPRINT")) == fp
     catch { case scala.util.control.NonFatal(_) => false }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    val children = f.listFiles()
-    if (children != null) children.foreach(deleteRec)
-    f.delete(): Unit
-  }
 }
 
 /** Registry of one-time artifact-build seconds, drained by
@@ -157,15 +148,6 @@ object BuildTimes {
 
   def record(name: String, seconds: Double): Unit =
     rows.add((name, seconds)): Unit
-
-  /** Time `body` and record it under `name` iff it ran a real build —
-    * callers with their own built-set guards wrap only the miss path.
-    */
-  def timed[T](name: String)(body: => T): T = {
-    val t0 = System.nanoTime()
-    try body
-    finally record(name, (System.nanoTime() - t0) / 1e9)
-  }
 
   /** Remove and return everything recorded since the last drain. */
   def drain(): Seq[(String, Double)] = {

@@ -9,15 +9,8 @@ import org.apache.spark.sql.functions._
   * purchase graph: before this, both queries independently re-derived
   * the same orders⋈lineitem → distinct → aggregate relation (measured
   * 1.1 s steady / 4.5 s cold at sf0.1 — the single largest stage of
-  * either query; corpus-proportional at every scale).
-  *
-  * Materialized to per-process parquet scratch (TmpDirs), not a cached
-  * relation, for the same reasons as CoPurchase: the bench's
-  * between-query hygiene unpersists RDD blocks, and build-once →
-  * scan-many with pushdown is what a 100 TB pipeline would do with a
-  * shared derived relation. Build time is drained into
-  * `queries_build` via [[BuildTimes]] so the first consumer's cold
-  * number stays honest.
+  * either query; corpus-proportional at every scale). Built through
+  * [[TmpDirs.buildOnce]].
   *
   * Contents: one row per (c, s) — customer/supplier node ids already
   * long-packed even/odd (the q148 encoding) — with `w` = number of
@@ -27,38 +20,29 @@ import org.apache.spark.sql.functions._
   */
 object TradeGraph {
 
-  private val built = scala.collection.mutable.Set[String]()
-
   /** The weighted bipartite pair relation (c, s, w), built at most once
     * per process per sfDir and served from parquet thereafter.
     */
-  def pairOrders(s: SparkSession, dir: String): DataFrame = {
-    val canonical = new java.io.File(dir).getCanonicalPath
-    val out = TmpDirs.perProcess("graft_tradegraph", canonical)
-    this.synchronized {
-      if (!built.contains(canonical)) BuildTimes.timed("tradegraph_rel") {
-        // r19 build diet (r18 verdict item 3, guide §2.4/§3.1): the r18
-        // form (broadcast join → distinct(c,s,o) → groupBy(c,s)) paid
-        // TWO full-width post-join exchanges — the broadcast join left
-        // the output file-partitioned, so the distinct shuffled the
-        // whole (c,s,o) relation and the count shuffled it again
-        // (46.95 s at sf10 in the driver's detail). SHUFFLE_HASH on the
-        // orders side makes the join output hash-partitioned by
-        // orderkey (no SMJ sorts either), which the countDistinct's
-        // first aggregate REUSES — plan: 2 post-join Exchanges → 1
-        // (plans/r19/tradegraph_rel_{before,after}.txt); probe at sf10:
-        // 48.3 s cold / 10.7 steady → 6.8 steady (ProbeTradeGraph).
-        Tables(s, dir, "orders").hint("shuffle_hash")
-          .join(Tables(s, dir, "lineitem"),
-            col("o_orderkey") === col("l_orderkey"))
-          .select((col("o_custkey") * 2).as("c"),
-            (col("l_suppkey") * 2 + 1).as("s"), col("o_orderkey"))
-          .groupBy(col("c"), col("s"))
-          .agg(count_distinct(col("o_orderkey")).as("w"))
-          .write.mode("overwrite").parquet(out)
-        built.add(canonical): Unit
-      }
-    }
-    s.read.parquet(out)
-  }
+  def pairOrders(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(TmpDirs.buildOnce("tradegraph_rel", dir) { out =>
+      // r19 build diet (r18 verdict item 3, guide §2.4/§3.1): the r18
+      // form (broadcast join → distinct(c,s,o) → groupBy(c,s)) paid
+      // TWO full-width post-join exchanges — the broadcast join left
+      // the output file-partitioned, so the distinct shuffled the
+      // whole (c,s,o) relation and the count shuffled it again
+      // (46.95 s at sf10 in the driver's detail). SHUFFLE_HASH on the
+      // orders side makes the join output hash-partitioned by
+      // orderkey (no SMJ sorts either), which the countDistinct's
+      // first aggregate REUSES — plan: 2 post-join Exchanges → 1
+      // (plans/r19/tradegraph_rel_{before,after}.txt); probe at sf10:
+      // 48.3 s cold / 10.7 steady → 6.8 steady (ProbeTradeGraph).
+      Tables(s, dir, "orders").hint("shuffle_hash")
+        .join(Tables(s, dir, "lineitem"),
+          col("o_orderkey") === col("l_orderkey"))
+        .select((col("o_custkey") * 2).as("c"),
+          (col("l_suppkey") * 2 + 1).as("s"), col("o_orderkey"))
+        .groupBy(col("c"), col("s"))
+        .agg(count_distinct(col("o_orderkey")).as("w"))
+        .write.mode("overwrite").parquet(out)
+    })
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.TypeUtils
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{DataType, IntegerType}
 
 /** `range_bucket(nKeys, ascMask, k1..kn, b1k1..b1kn, b2k1.., ...)` — the
@@ -160,20 +160,8 @@ object RangeBucket {
 
 object RangeBucketExpr {
 
-  private val registeredSessions = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  /** Idempotently (once per session) register `range_bucket` — the public
-    * Column-from-Expression bridge in Spark 4.
-    */
-  def ensureRegistered(): Unit = {
-    val spark = SparkSession.active
-    if (registeredSessions.putIfAbsent(spark,
-        java.lang.Boolean.TRUE) == null) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "range_bucket", exprs => RangeBucket(exprs), "built-in")
-    }
-  }
+  private[graft] val kernels: Seq[(String, Kernels.Builder)] =
+    Seq("range_bucket" -> (e => RangeBucket(e)))
 
   /** Bucket id (count of boundary tuples ≤ the row's key tuple) for
     * `keys` under per-key `ascending` directions. `bounds` are EXTERNAL
@@ -184,10 +172,9 @@ object RangeBucketExpr {
       bounds: Seq[Seq[Any]]): Column = {
     require(keys.nonEmpty && keys.size == ascending.size)
     require(bounds.forall(_.size == keys.size))
-    ensureRegistered()
     val mask = ascending.map(a => if (a) '1' else '0').mkString
     val args = (lit(keys.size) +: lit(mask) +: keys) ++
       bounds.flatten.map(v => lit(v))
-    call_function("range_bucket", args: _*)
+    Kernels.call("range_bucket", args: _*)
   }
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -152,10 +152,9 @@ object SketchExprs {
   }
 
   /** minhash_array(shingles, n) → array<long>: component-wise minima of
-    * the Kirsch–Mitzenmacher family h1 + i·h2 over all elements —
-    * identical values to MinHashAgg over exploded rows. Accepts either
-    * string elements (hashed here) or long elements (pre-hashed, e.g.
-    * ShingleHashes output).
+    * the Kirsch–Mitzenmacher family h1 + i·h2 over all elements. Accepts
+    * either string elements (hashed here) or long elements (pre-hashed,
+    * e.g. ShingleHashes output).
     */
   case class MinHashArray(child: Expression, numHashes: Int)
       extends UnaryExpression with CodegenFallback {
@@ -268,62 +267,28 @@ object SketchExprs {
       copy(child = newChild)
   }
 
-  // once per session — see VectorExprs.registeredSessions for rationale
-  private val registeredSessions = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  def ensureRegistered(): Unit = {
-    val spark = SparkSession.active
-    if (registeredSessions.putIfAbsent(spark, java.lang.Boolean.TRUE) == null) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "minhash_array",
-        exprs => MinHashArray(exprs(0), exprs(1).eval().asInstanceOf[Int]),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "simhash_array", exprs => SimHashArray(exprs.head), "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "band_hashes",
-        exprs => BandHashes(exprs(0), exprs(1).eval().asInstanceOf[Int],
-          exprs(2).eval().asInstanceOf[Int]),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "shingle_hashes",
-        exprs => ShingleHashes(exprs(0), exprs(1).eval().asInstanceOf[Int]),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "ngram_hashes",
-        exprs => NgramHashes(exprs(0), exprs(1).eval().asInstanceOf[Int]),
-        "built-in")
-    }
+  private[graft] val kernels: Seq[(String, Kernels.Builder)] = {
+    import Kernels.intArg
+    Seq(
+      "minhash_array" -> (e => MinHashArray(e(0), intArg(e(1)))),
+      "simhash_array" -> (e => SimHashArray(e.head)),
+      "band_hashes" -> (e => BandHashes(e(0), intArg(e(1)), intArg(e(2)))),
+      "shingle_hashes" -> (e => ShingleHashes(e(0), intArg(e(1)))),
+      "ngram_hashes" -> (e => NgramHashes(e(0), intArg(e(1)))))
   }
 
-  def ngram_hashes(tokens: Column, k: Int): Column = {
-    ensureRegistered()
-    call_function("ngram_hashes", tokens,
-      org.apache.spark.sql.functions.lit(k))
-  }
+  def ngram_hashes(tokens: Column, k: Int): Column =
+    Kernels.call("ngram_hashes", tokens, lit(k))
 
-  def shingle_hashes(tokens: Column, k: Int): Column = {
-    ensureRegistered()
-    call_function("shingle_hashes", tokens,
-      org.apache.spark.sql.functions.lit(k))
-  }
+  def shingle_hashes(tokens: Column, k: Int): Column =
+    Kernels.call("shingle_hashes", tokens, lit(k))
 
-  def minhash_array(shingles: Column, numHashes: Int): Column = {
-    ensureRegistered()
-    call_function("minhash_array", shingles,
-      org.apache.spark.sql.functions.lit(numHashes))
-  }
+  def minhash_array(shingles: Column, numHashes: Int): Column =
+    Kernels.call("minhash_array", shingles, lit(numHashes))
 
-  def simhash_array(tokens: Column): Column = {
-    ensureRegistered()
-    call_function("simhash_array", tokens)
-  }
+  def simhash_array(tokens: Column): Column =
+    Kernels.call("simhash_array", tokens)
 
-  def band_hashes(sig: Column, bands: Int, rpb: Int): Column = {
-    ensureRegistered()
-    call_function("band_hashes", sig,
-      org.apache.spark.sql.functions.lit(bands),
-      org.apache.spark.sql.functions.lit(rpb))
-  }
+  def band_hashes(sig: Column, bands: Int, rpb: Int): Column =
+    Kernels.call("band_hashes", sig, lit(bands), lit(rpb))
 }

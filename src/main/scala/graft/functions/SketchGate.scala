@@ -2,12 +2,12 @@ package graft.functions
 
 import java.io.ByteArrayOutputStream
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.{BloomFilter, CountMinSketch}
@@ -307,49 +307,32 @@ object SketchGate {
     java.lang.ref.WeakReference[
       org.apache.spark.broadcast.Broadcast[Array[Byte]]]]()
 
-  // once per session — see VectorExprs.registeredSessions for rationale
-  private val registeredSessions = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  def ensureRegistered(): Unit = {
-    val spark = SparkSession.active
-    if (registeredSessions.putIfAbsent(spark,
-        java.lang.Boolean.TRUE) == null) {
-      val reg = spark.sessionState.functionRegistry
-      reg.createOrReplaceTempFunction("cms_estimate",
-        exprs => CmsEstimate(exprs(0), exprs(1)), "built-in")
-      reg.createOrReplaceTempFunction("bloom_contains",
-        exprs => BloomContains(exprs(0), exprs(1)), "built-in")
-      reg.createOrReplaceTempFunction("bloom_contains_bc",
-        exprs => {
-          val id = exprs(0).eval().asInstanceOf[Number].longValue()
-          val ref = bcHandles.get(id)
-          val bc = if (ref == null) null else ref.get()
-          require(bc != null,
-            s"bloom_contains_bc: unknown or collected broadcast id $id — " +
-              "construct through SketchGate.bloom_contains_bc and apply " +
-              "the Column while the Broadcast is strongly referenced")
-          BloomContainsBc(bc, exprs(0), exprs(1))
-        }, "built-in")
-    }
-  }
+  private[graft] val kernels: Seq[(String, Kernels.Builder)] = Seq(
+    "cms_estimate" -> (e => CmsEstimate(e(0), e(1))),
+    "bloom_contains" -> (e => BloomContains(e(0), e(1))),
+    "bloom_contains_bc" -> { e =>
+      val id = e(0).eval().asInstanceOf[Number].longValue()
+      val ref = bcHandles.get(id)
+      val bc = if (ref == null) null else ref.get()
+      require(bc != null,
+        s"bloom_contains_bc: unknown or collected broadcast id $id — " +
+          "construct through SketchGate.bloom_contains_bc and apply " +
+          "the Column while the Broadcast is strongly referenced")
+      BloomContainsBc(bc, e(0), e(1))
+    })
 
   /** Count–Min frequency estimate of `item` under the serialized sketch
     * (built by Spark's `count_min_sketch` aggregate).
     */
-  def cms_estimate(sketchBytes: Array[Byte], item: Column): Column = {
-    ensureRegistered()
-    call_function("cms_estimate", lit(sketchBytes), item)
-  }
+  def cms_estimate(sketchBytes: Array[Byte], item: Column): Column =
+    Kernels.call("cms_estimate", lit(sketchBytes), item)
 
   /** Bloom membership probe of `item` under the serialized filter (built
     * by `DataFrameStatFunctions.bloomFilter` — serialize with
     * [[serializeBloom]]).
     */
-  def bloom_contains(bloomBytes: Array[Byte], item: Column): Column = {
-    ensureRegistered()
-    call_function("bloom_contains", lit(bloomBytes), item)
-  }
+  def bloom_contains(bloomBytes: Array[Byte], item: Column): Column =
+    Kernels.call("bloom_contains", lit(bloomBytes), item)
 
   /** Broadcast-handle membership probe — use this form whenever the
     * serialized filter is more than a few MiB (see [[BloomContainsBc]];
@@ -358,13 +341,12 @@ object SketchGate {
   def bloom_contains_bc(
       bc: org.apache.spark.broadcast.Broadcast[Array[Byte]],
       item: Column): Column = {
-    ensureRegistered()
     // prune entries whose broadcast was collected — keeps the map from
     // accumulating dead ids across a long catalog sweep
     bcHandles.entrySet().removeIf(e => e.getValue.get() == null): Unit
     bcHandles.put(bc.id,
       new java.lang.ref.WeakReference(bc)): Unit
-    call_function("bloom_contains_bc", lit(bc.id), item)
+    Kernels.call("bloom_contains_bc", lit(bc.id), item)
   }
 
   def serializeBloom(bf: BloomFilter): Array[Byte] = {

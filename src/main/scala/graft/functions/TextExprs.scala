@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -518,75 +518,37 @@ object TextExprs {
       copy(child = newChild)
   }
 
-  // once per session — see VectorExprs.registeredSessions for rationale
-  private val registeredSessions = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  def ensureRegistered(): Unit = {
-    val spark = SparkSession.active
-    if (registeredSessions.putIfAbsent(spark, java.lang.Boolean.TRUE) == null) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "lang_marker_scores", exprs => LangMarkerScores(exprs.head), "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "quality_score", exprs => QualityScore(exprs.head), "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "normalize_text", exprs => NormalizeText(exprs.head), "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "first_diff_pos",
-        exprs => FirstDiffPos(exprs.head, exprs(1)), "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "winnow_fps",
-        { exprs =>
-          def intLit(e: Expression): Int = e match {
-            case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-            case other => throw new IllegalArgumentException(
-              s"winnow_fps k/w must be int literals, got $other")
-          }
-          WinnowFingerprints(exprs.head, intLit(exprs(1)), intLit(exprs(2)))
-        }, "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "del_var_hashes",
-        { exprs =>
-          val k = exprs(1) match {
-            case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-            case other => throw new IllegalArgumentException(
-              s"del_var_hashes maxDist must be an int literal, got $other")
-          }
-          DeletionVariantHashes(exprs.head, k)
-        }, "built-in")
-    }
+  private def intLiteral(what: String, e: Expression): Int = e match {
+    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
+    case other => throw new IllegalArgumentException(
+      s"$what must be an int literal, got $other")
   }
 
-  def del_var_hashes(s: Column, maxDist: Int): Column = {
-    ensureRegistered()
-    call_function("del_var_hashes", s,
-      org.apache.spark.sql.functions.lit(maxDist))
-  }
+  private[graft] val kernels: Seq[(String, Kernels.Builder)] = Seq(
+    "lang_marker_scores" -> (e => LangMarkerScores(e.head)),
+    "quality_score" -> (e => QualityScore(e.head)),
+    "normalize_text" -> (e => NormalizeText(e.head)),
+    "first_diff_pos" -> (e => FirstDiffPos(e.head, e(1))),
+    "winnow_fps" -> (e => WinnowFingerprints(e.head,
+      intLiteral("winnow_fps k", e(1)), intLiteral("winnow_fps w", e(2)))),
+    "del_var_hashes" -> (e => DeletionVariantHashes(e.head,
+      intLiteral("del_var_hashes maxDist", e(1)))))
 
-  def winnow_fps(normalizedText: Column, k: Int, w: Int): Column = {
-    ensureRegistered()
-    call_function("winnow_fps", normalizedText,
-      org.apache.spark.sql.functions.lit(k),
-      org.apache.spark.sql.functions.lit(w))
-  }
+  def del_var_hashes(s: Column, maxDist: Int): Column =
+    Kernels.call("del_var_hashes", s, lit(maxDist))
 
-  def first_diff_pos(a: Column, b: Column): Column = {
-    ensureRegistered()
-    call_function("first_diff_pos", a, b)
-  }
+  def winnow_fps(normalizedText: Column, k: Int, w: Int): Column =
+    Kernels.call("winnow_fps", normalizedText, lit(k), lit(w))
 
-  def lang_marker_scores(loweredText: Column): Column = {
-    ensureRegistered()
-    call_function("lang_marker_scores", loweredText)
-  }
+  def first_diff_pos(a: Column, b: Column): Column =
+    Kernels.call("first_diff_pos", a, b)
 
-  def quality_score(text: Column): Column = {
-    ensureRegistered()
-    call_function("quality_score", text.cast("string"))
-  }
+  def lang_marker_scores(loweredText: Column): Column =
+    Kernels.call("lang_marker_scores", loweredText)
 
-  def normalize_text(text: Column): Column = {
-    ensureRegistered()
-    call_function("normalize_text", text.cast("string"))
-  }
+  def quality_score(text: Column): Column =
+    Kernels.call("quality_score", text.cast("string"))
+
+  def normalize_text(text: Column): Column =
+    Kernels.call("normalize_text", text.cast("string"))
 }

@@ -1,11 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
 
 /** Native Catalyst expressions for embedding math.
@@ -648,129 +647,67 @@ object VectorExprs {
       copy(child = newChild)
   }
 
-  // registered once per session (WeakHashMap so dropped sessions release);
-  // the per-call createOrReplaceTempFunction churn spammed "replaced a
-  // previously registered function" warnings and re-built FunctionBuilders
-  // on every Column-helper invocation.
-  private val registeredSessions = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  /** Idempotently (once per session) register the expressions in the active
-    * session's function registry (the public Column-from-Expression bridge
-    * in Spark 4 — Column constructors are no longer public API).
-    */
-  def ensureRegistered(): Unit = {
-    val spark = SparkSession.active
-    if (registeredSessions.putIfAbsent(spark, java.lang.Boolean.TRUE) == null) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "vec_dot", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "vec_l2norm", exprs => L2Norm(exprs.head), "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "bitset_inter", exprs => BitsetIntersectCount(exprs(0), exprs(1)), "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "bitset_pack", exprs => BitsetPack(exprs.head), "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "sorted_inter_count",
-        exprs => SortedInterCount(exprs(0), exprs(1)), "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "vec_q8", exprs => VecQuantize(exprs(0), exprs(1)), "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "vec_dot_q8", exprs => DotQ8(exprs(0), exprs(1)), "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "affine_map", exprs => AffineMap(exprs(0), exprs(1), exprs(2)),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "lsh_bands", exprs => {
-          def intLit(e: Expression): Int =
-            e.eval().asInstanceOf[Number].intValue()
-          LshBands(exprs(0), intLit(exprs(1)), intLit(exprs(2)),
-            intLit(exprs(3)), exprs(4).eval().asInstanceOf[Number].longValue())
-        }, "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "pq_adc", exprs => PqAdc(exprs(0), exprs(1),
-          exprs(2).eval().asInstanceOf[ArrayData].toDoubleArray(),
-          exprs(3).eval().asInstanceOf[Number].intValue()), "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "ivf2_lists", exprs => {
-          def intLit(e: Expression): Int =
-            e.eval().asInstanceOf[Number].intValue()
-          Ivf2Lists(exprs(0),
-            exprs(1).eval().asInstanceOf[ArrayData].toDoubleArray(),
-            exprs(2).eval().asInstanceOf[ArrayData].toDoubleArray(),
-            intLit(exprs(3)), intLit(exprs(4)), intLit(exprs(5)))
-        }, "built-in")
-    }
+  private[graft] val kernels: Seq[(String, Kernels.Builder)] = {
+    import Kernels.intArg
+    Seq(
+      "vec_dot" -> (e => DotProduct(e(0), e(1))),
+      "vec_l2norm" -> (e => L2Norm(e.head)),
+      "bitset_inter" -> (e => BitsetIntersectCount(e(0), e(1))),
+      "bitset_pack" -> (e => BitsetPack(e.head)),
+      "sorted_inter_count" -> (e => SortedInterCount(e(0), e(1))),
+      "vec_q8" -> (e => VecQuantize(e(0), e(1))),
+      "vec_dot_q8" -> (e => DotQ8(e(0), e(1))),
+      "affine_map" -> (e => AffineMap(e(0), e(1), e(2))),
+      "lsh_bands" -> (e => LshBands(e(0), intArg(e(1)), intArg(e(2)),
+        intArg(e(3)), e(4).eval().asInstanceOf[Number].longValue())),
+      "pq_adc" -> (e => PqAdc(e(0), e(1),
+        e(2).eval().asInstanceOf[ArrayData].toDoubleArray(), intArg(e(3)))),
+      "ivf2_lists" -> (e => Ivf2Lists(e(0),
+        e(1).eval().asInstanceOf[ArrayData].toDoubleArray(),
+        e(2).eval().asInstanceOf[ArrayData].toDoubleArray(),
+        intArg(e(3)), intArg(e(4)), intArg(e(5)))))
   }
 
   def ivf2_lists(vec: Column, supFlat: Array[Double],
       childFlat: Array[Double], nsup: Int, kSup: Int,
-      kChild: Int): Column = {
-    ensureRegistered()
-    import org.apache.spark.sql.functions.lit
-    call_function("ivf2_lists", vec, lit(supFlat), lit(childFlat),
+      kChild: Int): Column =
+    Kernels.call("ivf2_lists", vec, lit(supFlat), lit(childFlat),
       lit(nsup), lit(kSup), lit(kChild))
-  }
 
-  def bitset_pack(indices: Column): Column = {
-    ensureRegistered()
-    call_function("bitset_pack", indices)
-  }
+  def bitset_pack(indices: Column): Column =
+    Kernels.call("bitset_pack", indices)
 
-  def bitset_inter(a: Column, b: Column): Column = {
-    ensureRegistered()
-    call_function("bitset_inter", a, b)
-  }
+  def bitset_inter(a: Column, b: Column): Column =
+    Kernels.call("bitset_inter", a, b)
 
-  def vec_dot(a: Column, b: Column): Column = {
-    ensureRegistered()
-    call_function("vec_dot", a, b)
-  }
+  def vec_dot(a: Column, b: Column): Column = Kernels.call("vec_dot", a, b)
 
-  def vec_l2norm(a: Column): Column = {
-    ensureRegistered()
-    call_function("vec_l2norm", a)
-  }
+  def vec_l2norm(a: Column): Column = Kernels.call("vec_l2norm", a)
 
-  def sorted_inter_count(a: Column, b: Column): Column = {
-    ensureRegistered()
-    call_function("sorted_inter_count", a, b)
-  }
+  def sorted_inter_count(a: Column, b: Column): Column =
+    Kernels.call("sorted_inter_count", a, b)
 
-  def vec_q8(vec: Column, scale: Double): Column = {
-    ensureRegistered()
-    call_function("vec_q8", vec, org.apache.spark.sql.functions.lit(scale))
-  }
+  def vec_q8(vec: Column, scale: Double): Column =
+    Kernels.call("vec_q8", vec, lit(scale))
 
-  def vec_dot_q8(a: Column, b: Column): Column = {
-    ensureRegistered()
-    call_function("vec_dot_q8", a, b)
-  }
+  def vec_dot_q8(a: Column, b: Column): Column =
+    Kernels.call("vec_dot_q8", a, b)
 
   /** y = M·x + b with a row-major flat k×d matrix literal. */
   def affine_map(vec: Column, mat: Array[Double],
-      bias: Array[Double]): Column = {
-    ensureRegistered()
-    import org.apache.spark.sql.functions.lit
-    call_function("affine_map", vec, lit(mat), lit(bias))
-  }
+      bias: Array[Double]): Column =
+    Kernels.call("affine_map", vec, lit(mat), lit(bias))
 
   /** PQ asymmetric-distance inner product of a full query vector
     * against an m-code array, with a flat `[m][ksub][dsub]` codebook
     * literal (see [[PqAdc]]).
     */
   def pq_adc(vec: Column, codes: Column, flatCodebooks: Array[Double],
-      dsub: Int): Column = {
-    ensureRegistered()
-    import org.apache.spark.sql.functions.lit
-    call_function("pq_adc", vec, codes, lit(flatCodebooks), lit(dsub))
-  }
+      dsub: Int): Column =
+    Kernels.call("pq_adc", vec, codes, lit(flatCodebooks), lit(dsub))
 
   def lsh_bands(vec: Column, planesPerBand: Int, bands: Int, dim: Int,
-      seed: Long = 42L): Column = {
-    ensureRegistered()
-    import org.apache.spark.sql.functions.lit
-    call_function("lsh_bands", vec, lit(planesPerBand), lit(bands), lit(dim),
+      seed: Long = 42L): Column =
+    Kernels.call("lsh_bands", vec, lit(planesPerBand), lit(bands), lit(dim),
       lit(seed))
-  }
 }

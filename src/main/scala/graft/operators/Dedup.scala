@@ -149,9 +149,8 @@ object Dedup {
 
   /** MinHash signatures: one row per doc with an array<long> `sig` column.
     * Computed per ROW by [[graft.functions.SketchExprs.MinHashArray]] — a
-    * pure map over the corpus, NO explode and NO shuffle (the
-    * explode+groupBy formulation, kept as [[graft.plans.MinHashAgg]] for
-    * pre-tokenized inputs, shuffles |docs|×|shingles| rows).
+    * pure map over the corpus, NO explode and NO shuffle (an
+    * explode+groupBy formulation shuffles |docs|×|shingles| rows).
     */
   def minhashSignatures(
       df: DataFrame, idCol: String, textCol: String,

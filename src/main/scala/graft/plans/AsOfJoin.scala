@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, Expression, GenericInternalRow, JoinedRow, SortOrder, Unevaluable, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Join, LogicalPlan}
@@ -9,16 +9,16 @@ import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Dist
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{BooleanType, DataType}
+
+import graft.functions.Kernels
 
 /** Native as-of join — the full custom-operator stack (SURVEY §7.5 tier c):
   * marker expression → logical node → optimizer rewrite → planner strategy
   * → physical operator, wired through PUBLIC hooks
   * (`functionRegistry` + `spark.experimental.extraOptimizations` /
-  * `extraStrategies`; the SparkSessionExtensions form of the same
-  * registration is in [[GraftAsOfExtensions]]).
+  * `extraStrategies`, installed by [[graft.functions.Kernels]]).
   *
   * Semantics: for each left row, the single right row with the greatest
   * `rightTime <= leftTime` among rows sharing the equality key — ties on
@@ -433,27 +433,11 @@ object AsOfJoin {
     }
   }
 
-  // once per session (WeakHashMap releases dropped sessions) — per-call
-  // createOrReplaceTempFunction churn warns "replaced a previously
-  // registered function" on every asofJoin after the first
-  private val registeredSessions = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  /** Idempotent registration on an EXISTING session via the public
-    * experimental hooks (the builder-time equivalent is
-    * [[GraftAsOfExtensions]]).
+  /** The `asof_marker` kernel; [[Kernels.register]] installs
+    * [[RewriteAsOfJoin]] and [[AsOfJoinStrategy]] alongside it.
     */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    if (registeredSessions.putIfAbsent(spark, java.lang.Boolean.TRUE) == null)
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "asof_marker", exprs => AsOfMarker(exprs), "built-in")
-    if (!spark.experimental.extraOptimizations.contains(RewriteAsOfJoin))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteAsOfJoin
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-  }
+  private[graft] val kernels: Seq[(String, Kernels.Builder)] =
+    Seq("asof_marker" -> (e => AsOfMarker(e)))
 
   /** left-outer as-of join: the `right` row per key nearest the left
     * row's time in the requested `direction` —
@@ -477,24 +461,14 @@ object AsOfJoin {
       s"unknown strategy: $strategy")
     require(Set("backward", "forward", "nearest")(direction),
       s"unknown direction: $direction")
-    val spark = left.sparkSession
-    ensureRegistered(spark)
+    // the join resolves in the left side's session, which need not be
+    // the active one
+    Kernels.register(left.sparkSession)
     left.join(right,
-      call_function("asof_marker",
+      Kernels.call("asof_marker",
         Seq(left(leftKey), right(rightKey), left(leftTime), right(rightTime),
           org.apache.spark.sql.functions.lit(s"$strategy:$direction"))
           ++ rightTieBreak: _*),
       "left")
-  }
-}
-
-/** Builder-time registration: `SparkSession.builder.withExtensions(new
-  * GraftAsOfExtensions)` — same rule + strategy via the official
-  * SparkSessionExtensions seam.
-  */
-class GraftAsOfExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(_ => AsOfJoin.RewriteAsOfJoin)
-    e.injectPlannerStrategy(_ => AsOfJoin.AsOfJoinStrategy)
   }
 }

@@ -1,12 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+
+import graft.functions.Kernels
 
 /** Second-moment sufficient statistics of a vector column in ONE
   * mergeable pass: buffer = [count, Σx (d), upper-triangle ΣxxT
@@ -115,25 +116,11 @@ case class GramianAgg(
 }
 
 object GramianAgg {
-  // once per session — see VectorExprs.registeredSessions for rationale
-  private val registeredSessions = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  def ensureRegistered(): Unit = {
-    val spark = SparkSession.active
-    if (registeredSessions.putIfAbsent(spark, java.lang.Boolean.TRUE) == null) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "gramian_agg",
-        exprs => GramianAgg(exprs(0),
-          exprs(1).eval().asInstanceOf[Number].intValue()).toAggregateExpression(),
-        "built-in")
-    }
-  }
+  private[graft] val kernels: Seq[(String, Kernels.Builder)] = Seq(
+    "gramian_agg" ->
+      (e => GramianAgg(e(0), Kernels.intArg(e(1))).toAggregateExpression()))
 
   /** gramian_agg(vec, dim) → array<double> [n, Σx, upper-tri ΣxxT]. */
-  def gramian_agg(vec: Column, dim: Int): Column = {
-    ensureRegistered()
-    call_function("gramian_agg", vec,
-      org.apache.spark.sql.functions.lit(dim))
-  }
+  def gramian_agg(vec: Column, dim: Int): Column =
+    Kernels.call("gramian_agg", vec, org.apache.spark.sql.functions.lit(dim))
 }

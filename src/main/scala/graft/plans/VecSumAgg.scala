@@ -1,12 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+
+import graft.functions.Kernels
 
 /** First-moment sufficient statistics of a vector column in ONE mergeable
   * pass: buffer = [count, Σx (d)] — d+1 doubles, combined map-side like
@@ -102,25 +103,11 @@ case class VecSumAgg(
 }
 
 object VecSumAgg {
-  // once per session — see VectorExprs.registeredSessions for rationale
-  private val registeredSessions = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  def ensureRegistered(): Unit = {
-    val spark = SparkSession.active
-    if (registeredSessions.putIfAbsent(spark, java.lang.Boolean.TRUE) == null) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "vec_sum_agg",
-        exprs => VecSumAgg(exprs(0),
-          exprs(1).eval().asInstanceOf[Number].intValue()).toAggregateExpression(),
-        "built-in")
-    }
-  }
+  private[graft] val kernels: Seq[(String, Kernels.Builder)] = Seq(
+    "vec_sum_agg" ->
+      (e => VecSumAgg(e(0), Kernels.intArg(e(1))).toAggregateExpression()))
 
   /** vec_sum_agg(vec, dim) → array<double> [n, Σx]. */
-  def vec_sum_agg(vec: Column, dim: Int): Column = {
-    ensureRegistered()
-    call_function("vec_sum_agg", vec,
-      org.apache.spark.sql.functions.lit(dim))
-  }
+  def vec_sum_agg(vec: Column, dim: Int): Column =
+    Kernels.call("vec_sum_agg", vec, org.apache.spark.sql.functions.lit(dim))
 }

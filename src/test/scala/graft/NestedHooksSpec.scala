@@ -89,11 +89,37 @@ class NestedHooksSpec extends SparkSpec {
   }
 
   test("GraftSession.init exposes custom functions to SQL") {
-    GraftSession.init(spark)
-    val r = spark.sql(
+    // a fresh session: nothing registered by earlier Column-helper calls
+    val ns = spark.newSession()
+    GraftSession.init(ns)
+    val r = ns.sql(
       "SELECT vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d, " +
       "vec_l2norm(array(3.0D, 4.0D)) AS n").collect()(0)
     assert(r.getDouble(0) == 11.0 && r.getDouble(1) == 5.0)
+    // one call per kernel family
+    def hex(b: Array[Byte]): String = b.map(x => f"$x%02X").mkString
+    val cms = org.apache.spark.util.sketch.CountMinSketch.create(0.01, 0.99, 1)
+    cms.add("a")
+    val bloom = org.apache.spark.util.sketch.BloomFilter.create(100)
+    bloom.putString("a")
+    val k = ns.sql(
+      "SELECT size(minhash_array(array('a', 'b'), 4)) AS mh, " +
+      "first_diff_pos('abc', 'abc') AS fd, " +
+      s"cms_estimate(X'${hex(cms.toByteArray)}', 'a') AS cms, " +
+      "bloom_contains(X'" +
+      hex(graft.functions.SketchGate.serializeBloom(bloom)) + "', 'a') AS bf, " +
+      "range_bucket(1, '1', 5, 3, 7) AS rb").collect()(0)
+    assert(k.getInt(0) == 4 && k.isNullAt(1) && k.getLong(2) >= 1L &&
+      k.getBoolean(3) && k.getInt(4) == 1)
+    val agg = ns.sql(
+      "SELECT vec_sum_agg(v, 2) AS s, gramian_agg(v, 2) AS g " +
+      "FROM VALUES (array(1.0D, 2.0D)), (array(3.0D, 4.0D)) AS t(v)")
+      .collect()(0)
+    assert(agg.getSeq[Double](0) == Seq(2.0, 4.0, 6.0))
+    assert(agg.getSeq[Double](1) == Seq(2.0, 4.0, 6.0, 10.0, 14.0, 20.0))
+    assert(ns.catalog.functionExists("asof_marker"))
+    assert(ns.experimental.extraStrategies
+      .contains(graft.plans.AsOfJoin.AsOfJoinStrategy))
   }
 
   test("entry() flagship returns rows (driver smoke contract)") {

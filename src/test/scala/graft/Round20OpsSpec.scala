@@ -72,8 +72,8 @@ class Round20OpsSpec extends SparkSpec {
     val first = graft.CoPurchase.pairCounts(spark, dir)
     val n1 = first.count()
     assert(n1 > 0)
-    val out = graft.TmpDirs.perProcess("graft_copurchase",
-      new java.io.File(dir).getCanonicalPath)
+    val out = graft.TmpDirs.buildOnce("copurchase_rel", dir)(_ =>
+      fail("pairCounts did not register its build"))
     val mtimes = new java.io.File(out).listFiles().map(_.lastModified).sorted
     // second call must NOT rebuild — file mtimes stay identical — and
     // must survive a full unpersist of every RDD (the bench hygiene)
