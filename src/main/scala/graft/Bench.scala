@@ -272,11 +272,8 @@ object Bench {
         val part = new java.io.File(outDir).listFiles()
           .find(_.getName.endsWith(".csv")).get
         val bytes = part.length()
-        // split the single file across cores like the reference's parallel
-        // chunk scan (parallel.zig) — the default 128 MB split would parse
-        // a ~39 MB file on ONE core
-        val prevMpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "2097152")
+        // CsvReader cuts the single file into one split per core itself
+        // (its per-read split sizing), so this measures what users get
         val times =
           try (0 to 5).map { _ =>
             val t0 = System.nanoTime()
@@ -284,7 +281,6 @@ object Bench {
             (System.nanoTime() - t0) / 1e9
           }.drop(1)
           finally {
-            spark.conf.set("spark.sql.files.maxPartitionBytes", prevMpb)
             // ~39 MB per run otherwise accumulates in /tmp
             def rm(f: java.io.File): Unit = {
               Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()

@@ -64,13 +64,20 @@ object Main {
     }
   }
 
-  private def session(): SparkSession = SparkSession.builder()
-    .master(sys.env.getOrElse("GRAFT_MASTER", "local[*]"))
-    .appName("graft-cli")
-    .config("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "32"))
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  /** The host's live session when there is one, untouched — the CLI's
+    * defaults apply only to a session the CLI creates itself (a builder
+    * `config` on an existing session would rewrite the host's conf).
+    */
+  private def session(): SparkSession =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .filterNot(_.sparkContext.isStopped)
+      .getOrElse(SparkSession.builder()
+        .master(sys.env.getOrElse("GRAFT_MASTER", "local[*]"))
+        .appName("graft-cli")
+        .config("spark.sql.shuffle.partitions",
+          sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "32"))
+        .config("spark.ui.enabled", "false")
+        .getOrCreate())
 
   private def scan(spark: SparkSession, a: Args): DataFrame = {
     val opts = CsvOptions(

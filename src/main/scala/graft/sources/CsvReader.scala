@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** CSV scan with the reference's semantics (SURVEY.md §2.1-§2.2), lowered
@@ -12,7 +14,15 @@ import org.apache.spark.sql.types._
   *  - FILE path (default): `spark.read.csv` — parallel file splits,
   *    predicate/column pushdown, native comment/limit handling. Used
   *    whenever no line-number-dependent option is set. This is the 100 TB
-  *    path: the scan parallelizes like any Spark file source.
+  *    path: the scan parallelizes like any Spark file source. Every file
+  *    scan planned here (this parse, the line path's text scan and the
+  *    `errors` scan) is cut into splits sized per read — see
+  *    [[splitBytes]] — so an input smaller than cores × the session's
+  *    `maxPartitionBytes` still spreads over every core (the reference's
+  *    size-based thread autotune, parser.zig:1504-1514). The caller's
+  *    session is left exactly as found: the derived split settings live
+  *    on a private session the scan's relation is bound to, and the
+  *    returned frames still belong to the caller's session.
   *  - LINE path: `spark.read.text` + zipWithIndex + `from_csv`, for
   *    order-dependent options (skipFirstNLines / fromLine / toLine /
   *    maxRecordSize / no-header col counting). Line order is made explicit
@@ -150,8 +160,16 @@ object CsvReader {
         s"${CsvErrorCodes.InvalidOption}: multiLine=true cannot be combined " +
           s"with line-oriented option(s) ${linePathOpts.mkString(", ")}")
     if (opts.multiLine || linePathOpts.isEmpty) filePath(spark, path, opts)
-    else linePath(spark, readLines(spark, path, opts), opts,
-      detectFileLinebreak(stripScheme(path)))
+    else {
+      // the header sample comes from the driver-side window when its line
+      // split matches readLines' (UTF-8; the other charsets split on \n)
+      val window =
+        if (opts.encoding.forall(_.equalsIgnoreCase("UTF-8")))
+          localWindow(path, opts.encoding)
+        else None
+      linePath(spark, readLines(spark, path, opts), opts,
+        detectFileLinebreak(stripScheme(path)), window)
+    }
   }
 
   /** beforeFirstChunk file lowering (reference parser.ts:350-360): read the
@@ -213,14 +231,83 @@ object CsvReader {
   private def stripScheme(path: String): String =
     if (path.startsWith("file:")) path.stripPrefix("file:") else path
 
-  /** First ≤n raw lines for detection/header resolution. LOCAL files are
-    * read directly (≤256 KB, no Spark job — a scan's fixed latency was
-    * dominated by this sample job); non-local schemes and directories
-    * fall back to a distributed text scan. A truncated trailing line is
-    * dropped unless the whole file fit in the sample window.
+  /** Smallest split [[splitBytes]] cuts a scan into. A split costs one
+    * task launch: ~0.7 ms in local mode on a 4-vCPU box (400 empty tasks
+    * against 4). One core of that box parses the default scan shape,
+    * fully materialized, at 12–20 MB/s, so a 1 MiB split is 50–90 ms of
+    * parse work and its launch adds about 1%. A larger floor leaves
+    * cores idle on the few-MB files the reference's autotune still
+    * spreads over threads; a smaller one adds launches to shorten a
+    * scan by less than one floor-sized split's parse. Inputs up to this
+    * size (every test fixture) scan in one task.
     */
-  private def sampleLines(spark: SparkSession, path: String, n: Int,
-      encoding: Option[String]): Seq[String] = {
+  private[graft] val SplitFloorBytes: Long = 1L << 20
+
+  /** Bytes per split for a scan over `totalBytes` of input: one split per
+    * core, at least [[SplitFloorBytes]], at most the caller's
+    * `maxPartitionBytes` — so inputs above cores × `maxPartitionBytes`
+    * plan exactly as Spark plans them.
+    */
+  private[graft] def splitBytes(totalBytes: Long, cores: Int,
+      maxPartitionBytes: Long): Long =
+    math.min(maxPartitionBytes,
+      math.max(SplitFloorBytes, (totalBytes + cores - 1) / cores))
+
+  /** `df` — a plain file-source read — with its files cut into
+    * [[splitBytes]] splits. Spark reads split settings from the
+    * RELATION's session when the scan executes, so the relation is
+    * rebound to a fresh session carrying the caller's SQL conf plus the
+    * derived settings, and handed back through the caller's session: the
+    * caller's conf is never written, and the frame, its plan (FileScan,
+    * pruning, pushdown) and its results are what `df` would give.
+    *
+    * On the private session, `maxPartitionBytes` is the split size;
+    * `minPartitionNum` 1 makes Spark cut exactly that size (its own
+    * formula divides by cores again and would shrink sub-floor inputs
+    * below the floor); the open cost keeps the caller's ratio to
+    * `maxPartitionBytes`, so a directory of small files still packs
+    * several files per task. Frames whose plan is not a bare file
+    * relation, and inputs the caller's settings already spread over
+    * every core, come back unchanged.
+    */
+  private def sized(spark: SparkSession, df: DataFrame): DataFrame =
+    df.queryExecution.analyzed match {
+      case lr: LogicalRelation => lr.relation match {
+        case rel: HadoopFsRelation =>
+          val conf = spark.sessionState.conf
+          val maxBytes = conf.filesMaxPartitionBytes
+          val split = splitBytes(rel.location.sizeInBytes,
+            spark.sparkContext.defaultParallelism, maxBytes)
+          if (split >= maxBytes) df
+          else {
+            val scanSession = spark.newSession()
+            spark.conf.getAll.foreach { case (k, v) =>
+              if (spark.conf.isModifiable(k)) scanSession.conf.set(k, v)
+            }
+            scanSession.conf.set(SQLConf.FILES_MAX_PARTITION_BYTES.key, split)
+            scanSession.conf.set(SQLConf.FILES_MIN_PARTITION_NUM.key, 1L)
+            scanSession.conf.set(SQLConf.FILES_OPEN_COST_IN_BYTES.key,
+              math.max(1L, conf.filesOpenCostInBytes * split / maxBytes))
+            spark.baseRelationToDataFrame(rel.copy()(scanSession))
+          }
+        case _ => df
+      }
+      case _ => df
+    }
+
+  /** One string column `line` per physical line of `path` (UTF-8), as a
+    * split-sized scan.
+    */
+  private def textLines(spark: SparkSession, path: String): DataFrame =
+    sized(spark, spark.read.text(path)).select(col("value").as("line"))
+
+  /** The local file's first ≤256 KB split into raw lines, and whether
+    * that window holds the whole file; None for non-local schemes and
+    * directories. A truncated trailing line is dropped unless the whole
+    * file fit in the window. Driver-side, no Spark job.
+    */
+  private def localWindow(path: String,
+      encoding: Option[String]): Option[(Seq[String], Boolean)] = {
     val p = stripScheme(path)
     try {
       val f = new java.io.File(p)
@@ -233,12 +320,21 @@ object CsvReader {
       val usable =
         if (full) { if (lines.nonEmpty && lines.last.isEmpty) lines.init else lines }
         else lines.init // last line may be cut mid-record
-      usable.take(n).toSeq
-    } catch {
-      case _: java.io.IOException =>
-        spark.read.textFile(path).limit(n).collect().toSeq
-    }
+      Some((usable.toSeq, full))
+    } catch { case _: java.io.IOException => None }
   }
+
+  /** First ≤n raw lines for detection/header resolution. LOCAL files are
+    * read directly ([[localWindow]] — a scan's fixed latency was
+    * dominated by a sample job); non-local schemes and directories fall
+    * back to a distributed text scan.
+    */
+  private def sampleLines(spark: SparkSession, path: String, n: Int,
+      encoding: Option[String]): Seq[String] =
+    localWindow(path, encoding) match {
+      case Some((lines, _)) => lines.take(n)
+      case None => spark.read.textFile(path).limit(n).collect().toSeq
+    }
 
   /** text lines honoring a non-UTF-8 charset (spark.read.text is UTF-8
     * only; other charsets go through the csv reader in text mode).
@@ -246,14 +342,14 @@ object CsvReader {
   private def readLines(spark: SparkSession, path: String, opts: CsvOptions): DataFrame =
     opts.encoding match {
       case Some(enc) if !enc.equalsIgnoreCase("UTF-8") =>
-        spark.read
+        sized(spark, spark.read
           .option("encoding", enc)
           .option("lineSep", "\n")
           .schema(StructType(Seq(StructField("line", StringType))))
           .option("sep", "\u0001").option("quote", "\u0000")
-          .csv(path)
+          .csv(path))
           .select(regexp_replace(col("line"), "\r$", "").as("line"))
-      case _ => spark.read.textFile(path).toDF("line")
+      case _ => textLines(spark, path)
     }
 
   /** Credential policy for [[readUrl]] — the JVM mapping of the
@@ -370,7 +466,7 @@ object CsvReader {
       case all        => all
     }
     linePath(spark, lines.toDF("line"), opts,
-      CsvLineParser.detectLinebreak(content.take(8192)))
+      CsvLineParser.detectLinebreak(content.take(8192)), Some((lines, true)))
   }
 
   // ------------------------------------------------------------- helpers
@@ -512,7 +608,9 @@ object CsvReader {
       .schema(schema)
     opts.comments.foreach(c => reader = reader.option("comment", c))
     opts.encoding.foreach(e => reader = reader.option("encoding", e))
-    val parsed0 = reader.csv(path)
+    // a multiLine file is one unsplittable split anyway
+    val parsed0 =
+      if (opts.multiLine) reader.csv(path) else sized(spark, reader.csv(path))
     val n = headers.length
     // Errors from a raw text scan (Spark disallows projecting ONLY the
     // corrupt column off a CSV read). Field-count mismatch needs no parse —
@@ -524,7 +622,7 @@ object CsvReader {
     val errorsDf =
       if (opts.multiLine) delimiterErrors(spark, undetectable)
       else {
-        var errLines = spark.read.textFile(path).toDF("line")
+        var errLines = textLines(spark, path)
         opts.comments.foreach(c =>
           errLines = errLines.filter(!col("line").startsWith(c)))
         errLines = errLines.filter(col("line") =!= "")
@@ -555,8 +653,12 @@ object CsvReader {
 
   // ----------------------------------------------------------- LINE path
 
+  /** `window` is the input's first raw lines and whether they are all of
+    * it (see [[localWindow]]); the header sample is taken from it when it
+    * settles the sample, else from a distributed scan.
+    */
   private def linePath(spark: SparkSession, linesDf: DataFrame, opts: CsvOptions,
-      linebreak: String = "\n"): CsvScan = {
+      linebreak: String, window: Option[(Seq[String], Boolean)]): CsvScan = {
     import spark.implicits._
     // contiguous global line index (narrow; no shuffle)
     val schema0 = linesDf.schema.add(LineNo, LongType, nullable = false)
@@ -577,12 +679,29 @@ object CsvReader {
       case "false"  => visible
       case _        => visible.filter(col("line") =!= "")
     }
+    // the same filters on a driver-side line (Spark's trim strips spaces)
+    def isVisible(l: String): Boolean =
+      !opts.comments.exists(l.startsWith) && (opts.skipEmptyLines match {
+        case "greedy" => !l.forall(_ == ' ')
+        case "false"  => true
+        case _        => l.nonEmpty
+      })
 
-    val sampleHead = visible.orderBy(col(LineNo)).limit(11).collect()
-    val sampleRows = sampleHead.map(_.getString(0)).toSeq
+    // first 11 visible (line, lineNo): from the window when it holds 11 or
+    // is the whole input, else a distributed sample — a TakeOrdered job
+    // over the whole input
+    val sampleHead = window
+      .map { case (lines, whole) =>
+        (lines.zipWithIndex.drop(opts.skipFirstNLines)
+          .filter { case (l, _) => isVisible(l) }.take(11), whole) }
+      .collect { case (head, whole) if whole || head.length == 11 =>
+        head.map { case (l, i) => (l, i.toLong) } }
+      .getOrElse(visible.orderBy(col(LineNo)).limit(11).collect().toSeq
+        .map(r => (r.getString(0), r.getLong(1))))
+    val sampleRows = sampleHead.map(_._1)
     val (sep, undetectable) = resolveDelimiter(sampleRows, opts)
     val headers = resolveHeaders(sampleRows.headOption, sep, opts)
-    val headerLineNo = sampleHead.headOption.map(_.getLong(1))
+    val headerLineNo = sampleHead.headOption.map(_._2)
       .getOrElse(opts.skipFirstNLines.toLong)
 
     var data =

@@ -74,6 +74,18 @@ class CliSpec extends SparkSpec {
     assert(out.contains("TooManyFields") && out.contains("TooFewFields"))
   }
 
+  test("a host session keeps its own shuffle partitions") {
+    // the CLI's defaults are for a session it creates, not the host's
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try {
+      val (code, out) = runCli("count", fixture)
+      assert(code == 0 && out.trim == "3")
+      assert(spark.conf.get(key) == "7")
+    } finally spark.conf.set(key, prev)
+  }
+
   test("validate OK file") {
     val (code, out) = runCli("validate", fixture)
     assert(code == 0 && out.trim == "OK")
