@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): run every catalog query on
   * SPARK_GRAFT_SF_DIR, print ONE JSON line with total + per-query seconds.
@@ -85,13 +84,7 @@ object Bench {
         }
       } catch { case scala.util.control.NonFatal(_) =>
         (Map.empty[String, Double], Map.empty[String, Double]) }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // ---- box-contamination telemetry (r16 verdict item 1) -------------

@@ -4,7 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** One-stop session factory: recommended configs (AQE, UTC, sane shuffle
   * partitioning for the master) + all graft custom functions registered so
-  * they are callable from `spark.sql` as well as the Column API.
+  * they are callable from `spark.sql` as well as the Column API. Every
+  * main builds its session through [[builder]]; only `cli.Main` keeps its
+  * own (`GRAFT_MASTER`/`GRAFT_SHUFFLE_PARTITIONS`, and a live host
+  * session is reused untouched).
   */
 object GraftSession {
 

@@ -57,7 +57,8 @@ private[graft] object MinhashCheck {
     /** Misses at full-set j ≥ 0.8 — real sketch recall failures,
       * bounded by a quantitative floor instead of missed=0, which is
       * unattainable for a probabilistic sketch at corpus scale.
-      * Root cause measured at sf10 (r19, ProbeMinhashMiss): all 16
+      * Root cause measured at sf10 (r19; OPTIMIZATION_r19.md, "Item 2
+      * — q31 sf10 minhash gate"): all 16
       * misses were ONE base pair (full-set j = 0.889, B ⊂ A one token
       * apart) × its 16 rotation-identical replica combinations, with
       * signature estimate 0.1797 — NOT binomial estimate noise (17σ)

@@ -43,36 +43,10 @@ object Queries24 {
     * a re-crawl of resident content id ≡ 1 mod 10 under new ids (+2e7
     * — rejected against the resident corpus).
     */
-  /** Planted-family id offsets assume the real id space stays below
-    * them; checked once per (process, dir) — a corpus past the bound
-    * would silently corrupt the planted within-batch/re-crawl semantics
-    * (oracle parity would still hold — both sides replay the same
-    * construction — but the families would stop testing admission).
-    */
-  private val idBoundChecked = scala.collection.mutable.Set[String]()
-
-  private def requireIdBound(d: DataFrame, dir: String): Unit =
-    this.synchronized {
-      if (!idBoundChecked.contains(dir)) {
-        // RESIDUE bound, not absolute (r15 lesson — the absolute form
-        // failed the sf10 sweep): ScaleUp corpora carry ids k·1e8+base,
-        // and the +1e7/+2e7 plants stay collision-free as long as no
-        // real id's low part reaches 1e7 — plant residues land in
-        // [1e7, 2e7) and [2e7, 3e7), disjoint from real residues
-        // [0, 1e7) and from each other, without crossing into the
-        // k+1·1e8 block.
-        val mx = d.agg(max(pmod(col("id"), lit(100000000L)))).head.getLong(0)
-        require(mx < 10000000L,
-          s"q202 planted-duplicate offsets (+1e7/+2e7) collide with real " +
-            s"doc ids: max(doc_id % 1e8)=$mx >= 1e7 in $dir")
-        idBoundChecked.add(dir): Unit
-      }
-    }
-
   private[graft] def ingestParts(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
     val d = rawDocs(s, dir)
-    requireIdBound(d, dir)
+    QueryFixtures.requirePlantResidue("q202", "+1e7/+2e7", d, dir)
     val resident = d.filter(col("id") % 5 =!= 0)
     val arrivals = d.filter(col("id") % 5 === 0)
       .unionByName(d.filter(col("id") % 15 === 0)
@@ -267,17 +241,18 @@ object Queries24 {
     * two verify joins, the member expansion AND the within-group
     * family.
     */
-  private[graft] def dhashGroups(sigs: DataFrame): DataFrame =
+  private def dhashGroups(sigs: DataFrame): DataFrame =
     sigs.groupBy(col("b0"), col("b1"), col("b2"), col("b3"))
       .agg(min(col("id")).as("rep"), count(lit(1)).as("k"))
       .localCheckpoint(eager = true,
         org.apache.spark.storage.StorageLevel.DISK_ONLY)
 
   /** The distinct candidate rep-pairs out of the band join under either
-    * geometry — exposed separately so ProbeDhash can measure candidate
-    * mass vs verified output (r15 ADVICE).
+    * geometry. Candidate mass under each geometry at 500k and 5M
+    * distinct signatures is recorded in PLANS.md ("q203 banding
+    * geometry, measured a decade past sf10").
     */
-  private[graft] def dhashCandidates(groups: DataFrame,
+  private def dhashCandidates(groups: DataFrame,
       useCombos: Boolean): DataFrame = {
     val keys =
       if (useCombos)

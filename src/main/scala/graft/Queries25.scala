@@ -52,34 +52,13 @@ object Queries25 {
       filter(split(lower(trim(col("text"))), "\\s+"),
         x => length(x) > 0).as("toks"))
 
-  /** Planted-family offsets (+3e7/+4e7/+5e7) assume the real id space
-    * stays below 1e7 — checked once per (process, dir), the q202
-    * discipline. */
-  private val idBoundChecked = scala.collection.mutable.Set[String]()
-
-  private def requireIdBound(d: DataFrame, dir: String): Unit =
-    this.synchronized {
-      if (!idBoundChecked.contains(dir)) {
-        // residue bound, not absolute (the q202 r15 sweep lesson):
-        // ScaleUp ids are k·1e8+base; plants stay collision-free while
-        // real residues stay below 1e7 — the +3e7/+4e7/+5e7 bands
-        // [3e7,6e7) are then disjoint from reals and from each other
-        // without crossing into the next 1e8 block
-        val mx = d.agg(max(pmod(col("id"), lit(100000000L)))).head.getLong(0)
-        require(mx < 10000000L,
-          s"q204 planted-duplicate offsets (+3e7/+4e7/+5e7) collide " +
-            s"with real doc ids: max(doc_id % 1e8)=$mx >= 1e7 in $dir")
-        idBoundChecked.add(dir): Unit
-      }
-    }
-
   /** Resident corpus (ids ≢ 0 mod 5) and the three sequential arriving
     * batches (genuine arrivals id%15 ∈ {0,5,10} + the planted families
     * above). */
   private[graft] def ingest2Parts(s: SparkSession, dir: String)
       : (DataFrame, Seq[DataFrame]) = {
     val d = rawDocs(s, dir)
-    requireIdBound(d, dir)
+    QueryFixtures.requirePlantResidue("q204", "+3e7/+4e7/+5e7", d, dir)
     def pert(f: DataFrame, off: Long): DataFrame =
       f.select((col("id") + lit(off)).as("id"),
         concat(col("text"), lit(" graftrev")).as("text"))

@@ -70,7 +70,7 @@ object Queries26 {
     * dense because their vocabulary fits the cap after df-pruning, so
     * the pruned sparse engine path — the one a 100 TB sparse-vocab
     * corpus would serve through — sat only under bit-equality specs
-    * and the ProbeBm25Sparse measurement, never under a DuckDB
+    * and the PLANS.md "BM25 sparse-vocab" measurements, never under a DuckDB
     * oracle). Oracle: q197's SQL verbatim; a green row proves the
     * FP-interval pruning + exact refold reproduces the exhaustive
     * recomputation from the raw table, hash-for-hash.
@@ -106,7 +106,8 @@ object Queries26 {
     * serving half): the [[graft.operators.Similarity.IvfIndex2]]
     * hierarchy makes the store BUILD tractable past the flat-nlist
     * compute ceiling (assignment is O((nsup+childrenPerSup)·dim) per
-    * row — ProbeIvf2 measured the 20M×(64×64) build; PLANS.md), and
+    * row — the 20M×(64×64) build is measured in PLANS.md, "Round-16:
+    * two-level IVF build past the inline cap"), and
     * this query runs its q195-shape serving path in-catalog: store
     * built once over the planted corpus ([[StableStores]],
     * fingerprinted on embeddings.parquet), panel multiprobes

@@ -82,10 +82,6 @@ object Queries27 {
 
   // ------------------------------------------------------ span dedup (q210)
 
-  /** Planted-duplication offset (+6e7) assumes real residues < 1e7 —
-    * the q204 residue discipline (ScaleUp ids are k·1e8+base). */
-  private val spanIdBoundChecked = scala.collection.mutable.Set[String]()
-
   /** The span-dedup corpus: every non-empty document, plus — for ids
     * ≡ 0 mod 17 — a PLANTED doc under id+6e7 whose text is tokens 4..23
     * of the source (a 20-token exact span copy). The copy makes the
@@ -98,15 +94,7 @@ object Queries27 {
     val d = Tables(s, dir, "documents")
       .filter(length(trim(col("text"))) > 0)
       .select(col("doc_id").as("id"), col("text"))
-    this.synchronized {
-      if (!spanIdBoundChecked.contains(dir)) {
-        val mx = d.agg(max(pmod(col("id"), lit(100000000L)))).head.getLong(0)
-        require(mx < 10000000L,
-          s"q210 planted-duplicate offset (+6e7) collides with real doc " +
-            s"ids: max(doc_id % 1e8)=$mx >= 1e7 in $dir")
-        spanIdBoundChecked.add(dir): Unit
-      }
-    }
+    QueryFixtures.requirePlantResidue("q210", "+6e7", d, dir)
     val w = graft.functions.TextFunctions.tokensWs(col("text"))
     val planted = d.filter(col("id") % 17 === 0)
       .select((col("id") + lit(60000000L)).as("id"),

@@ -103,4 +103,31 @@ private[graft] object QueryFixtures {
     base.select(col("doc_id"), col("text"))
       .unionAll(dup).unionAll(rot).unionAll(app)
   }
+
+  private val residueChecked = scala.collection.mutable.Set[(String, String)]()
+
+  /** Planted-duplicate families shift real ids by multiples of 1e7, so
+    * they stay collision-free only while every real id's residue mod
+    * 1e8 is below 1e7. A RESIDUE bound, not an absolute one (the r15
+    * sf10 lesson): ScaleUp corpora carry ids k·1e8 + base, and plant
+    * residues then land in their own [j·1e7, (j+1)·1e7) bands, disjoint
+    * from real residues [0, 1e7) and from each other, without crossing
+    * into the next 1e8 block. A corpus past the bound would silently
+    * corrupt the planted semantics (oracle parity would still hold —
+    * both sides replay the same construction — but the families would
+    * stop testing what they plant). `d` carries the corpus ids as
+    * `id`; checked once per (process, label, dir), and the message
+    * names the query `label` and its `offsets`.
+    */
+  def requirePlantResidue(label: String, offsets: String, d: DataFrame,
+      dir: String): Unit =
+    synchronized {
+      if (!residueChecked.contains((label, dir))) {
+        val mx = d.agg(max(pmod(col("id"), lit(100000000L)))).head.getLong(0)
+        require(mx < 10000000L,
+          s"$label planted-duplicate offsets ($offsets) collide with real " +
+            s"doc ids: max(doc_id % 1e8)=$mx >= 1e7 in $dir")
+        residueChecked.add((label, dir)): Unit
+      }
+    }
 }

@@ -35,7 +35,8 @@ object TradeGraph {
       // orderkey (no SMJ sorts either), which the countDistinct's
       // first aggregate REUSES — plan: 2 post-join Exchanges → 1
       // (plans/r19/tradegraph_rel_{before,after}.txt); probe at sf10:
-      // 48.3 s cold / 10.7 steady → 6.8 steady (ProbeTradeGraph).
+      // 48.3 s cold / 10.7 steady → 6.8 steady (OPTIMIZATION_r19.md,
+      // "Items 3+4").
       Tables(s, dir, "orders").hint("shuffle_hash")
         .join(Tables(s, dir, "lineitem"),
           col("o_orderkey") === col("l_orderkey"))

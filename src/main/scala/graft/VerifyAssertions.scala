@@ -135,7 +135,8 @@ object VerifyAssertions {
       val badScores = scoreMismatches(spark, out, emb)
       val n = emb.count()
       // measured-minus-margin per tier under the scaledIvfGeometry √n
-      // rule (round-12 ProbeIvf sweep — table in the scaladoc there);
+      // rule (round-12 sweep, PLANS.md "IVF geometry calibration" —
+      // table in the scaladoc there);
       // every tier is MEASURED now, no placeholder branch remains
       val floor =
         if (n <= 1000) 0.40 // 22×3 measured 0.50 / 0.52 (two 500-vec corpora)
@@ -143,7 +144,8 @@ object VerifyAssertions {
         else if (n <= 30000) 0.85 // 141×18 measured 0.975 at 20k
         else if (n <= 262144) 0.90 // 245×31 → 1.000 at 60k; 447×56 → 0.995 at 200k
         else 0.95 // DISTRIBUTED-trained tier (r13): 707×88 → 1.000 at
-                  // 500k, 1000×125 → 1.000 at 1M (ProbeIvf, PLANS.md)
+                  // 500k, 1000×125 → 1.000 at 1M (PLANS.md "IVF
+                  // distributed coarse training")
       Check("ivf_recall_and_exact_rescore", "q46_ivf_topk",
         recall >= floor && badScores == 0,
         f"recall@5=$recall%.3f (floor $floor%.2f at n=$n) " +

@@ -50,7 +50,12 @@ object Main {
       delimiter = conf.get("delimiter"),
       format = conf.get("format"),
       noHeader = conf.get("header").contains("false"))
-    val a = parseArgs(argv.toList, a0)
+    val a =
+      try parseArgs(argv.toList, a0)
+      catch {
+        case e: IllegalArgumentException =>
+          System.err.println(s"error: ${e.getMessage}"); return 1
+      }
 
     a.command match {
       case "completions" => out.println(completions(a.shell)); 0
@@ -246,10 +251,18 @@ object Main {
 
   // ---------------------------------------------------------------- args
 
+  /** `v` parsed as `flag`'s value, or an IllegalArgumentException
+    * saying what the flag expects. */
+  private def num[T](flag: String, v: String, expects: String)(
+      parse: String => Option[T]): T =
+    parse(v).getOrElse(
+      throw new IllegalArgumentException(s"$flag expects $expects, got '$v'"))
+
   @annotation.tailrec
   private def parseArgs(rest: List[String], acc: Args): Args = rest match {
     case Nil => acc
-    case ("-n" | "--lines") :: v :: t => parseArgs(t, acc.copy(n = v.toInt))
+    case (f @ ("-n" | "--lines")) :: v :: t =>
+      parseArgs(t, acc.copy(n = num(f, v, "an integer")(_.toIntOption)))
     case ("-c" | "--column") :: v :: t => parseArgs(t, acc.copy(column = Some(v)))
     case "--columns" :: v :: t => parseArgs(t, acc.copy(columns = Some(v)))
     case "--desc" :: t => parseArgs(t, acc.copy(desc = true))
@@ -259,8 +272,11 @@ object Main {
     case "--no-header" :: t => parseArgs(t, acc.copy(noHeader = true))
     case ("-o" | "--output") :: v :: t => parseArgs(t, acc.copy(output = Some(v)))
     case "--format" :: v :: t => parseArgs(t, acc.copy(format = Some(v)))
-    case "--iterations" :: v :: t => parseArgs(t, acc.copy(iterations = v.toInt))
-    case "--min-share" :: v :: t => parseArgs(t, acc.copy(minShare = v.toDouble))
+    case (f @ "--iterations") :: v :: t =>
+      parseArgs(t, acc.copy(iterations =
+        num(f, v, "an integer >= 1")(_.toIntOption.filter(_ >= 1))))
+    case (f @ "--min-share") :: v :: t =>
+      parseArgs(t, acc.copy(minShare = num(f, v, "a number")(_.toDoubleOption)))
     case v :: t if acc.command.isEmpty => parseArgs(t, acc.copy(command = v))
     case v :: t if acc.command == "completions" => parseArgs(t, acc.copy(shell = v))
     case v :: t if acc.file.isEmpty => parseArgs(t, acc.copy(file = v))

@@ -256,7 +256,7 @@ object Dedup {
     * the RESIDENT corpus side of [[nearDupAdmitLoop]] rides this at
     * full corpus size.
     */
-  private[graft] def sigPrep(df: DataFrame, id: String, text: String,
+  private def sigPrep(df: DataFrame, id: String, text: String,
       outId: String, shingleWords: Int, numHashes: Int): DataFrame =
     PlanUtil.widenIfNarrow(df.select(col(id).as(outId), col(text).as("__t")))
       .select(col(outId),
@@ -271,7 +271,7 @@ object Dedup {
   /** Explode a [[sigPrep]] relation to its (id, band, bandHash) keys
     * (one-kernel derivation — see [[lshCandidates]]).
     */
-  private[graft] def sigBands(df: DataFrame, id: String, bands: Int,
+  private def sigBands(df: DataFrame, id: String, bands: Int,
       rowsPerBand: Int): DataFrame =
     df.select(col(id),
       posexplode(graft.functions.SketchExprs.band_hashes(
@@ -281,7 +281,7 @@ object Dedup {
     * against two [[sigPrep]] relations; keeps pairs with
     * round(jaccard, 4) ≥ threshold.
     */
-  private[graft] def verifyJaccard(cand: DataFrame, a: DataFrame, b: DataFrame,
+  private def verifyJaccard(cand: DataFrame, a: DataFrame, b: DataFrame,
       threshold: Double): DataFrame =
     cand
       .join(a.select(col("id_a"), col("__sh").as("__sha")), "id_a")

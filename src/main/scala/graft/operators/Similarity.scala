@@ -747,8 +747,8 @@ object Similarity {
     */
   val IvfInlineCorpusCap: Long = 4096L * 4096L
 
-  /** √n IVF geometry, MEASURED (round 12, ProbeIvf over the q46 fixed
-    * panel vs brute-force truth): `nlist = clamp(8, 512, round(√n))`,
+  /** √n IVF geometry, MEASURED (round 12, the q46 fixed panel vs
+    * brute-force truth; PLANS.md "IVF geometry calibration"): `nlist = clamp(8, 512, round(√n))`,
     * `nprobe = clamp(2, nlist, round(nlist/8))` — a pinned ~1/8 probe
     * fraction with per-query probe cost ~n/8·dim regardless of scale,
     * while the static 8×2 form probed n/4 AND lost recall as its 8
@@ -773,7 +773,7 @@ object Similarity {
     * routes nlist > [[DriverSampleNlistCap]] to the DISTRIBUTED
     * trainer ([[IvfIndex.trainDistributed]] — broadcast-model Lloyd,
     * full-corpus training per centroid), measured at 500k (707×88)
-    * and 1M vectors (1000×125) on the ProbeIvf harness — recall rows
+    * and 1M vectors (1000×125) on the q46 panel — recall rows
     * in PLANS.md ("IVF distributed coarse training"). The cap is now
     * 4096, and round 14 MEASURED the boundary on non-saturating
     * mixed-class fixtures (`ScaleUpEmbeddingsHard`; PLANS.md "IVF
@@ -906,7 +906,8 @@ object Similarity {
     * The partition differs from flat k-means-4096 (a vector whose
     * nearest flat centroid sits across a supercluster boundary lands
     * elsewhere), so recall at a matched probed-corpus fraction is the
-    * thing to MEASURE, not assume — ProbeIvf2 rows in PLANS.md.
+    * thing to MEASURE, not assume — PLANS.md "Round-16: two-level IVF
+    * build past the inline cap".
     */
   final case class IvfIndex2(sup: Array[Array[Double]],
       children: Array[Array[Double]]) {

@@ -497,25 +497,43 @@ object CsvReader {
   private def invalidQuoteErrors(lines: DataFrame, sep: String,
       opts: CsvOptions, lineNo: Option[String]): DataFrame = {
     val quote = opts.quote
-    val spark = lines.sparkSession
-    if (opts.escape.exists(_ != quote)) {
-      import spark.implicits._
-      return spark.emptyDataset[(String, String, String, Long)]
-        .toDF("errType", "code", "message", "row")
-        .select(col("errType"), col("code"), col("message"),
-          lineNo.map(_ => col("row")).getOrElse(col("row")))
+    if (opts.escape.exists(_ != quote)) noErrors(lines.sparkSession)
+    else {
+      val q = java.util.regex.Pattern.quote(quote)
+      val s = java.util.regex.Pattern.quote(sep)
+      val cnt = length(col("line")) -
+        length(regexp_replace(col("line"), q, ""))
+      lines.filter(cnt % 2 === 1 && col("line").rlike(s"(^|$s)$q"))
+        .select(lit("Quotes").as("errType"),
+          lit(CsvErrorCodes.InvalidQuotes).as("code"),
+          lit("unclosed or invalid quotes").as("message"),
+          lineNo.map(col(_).as("row"))
+            .getOrElse(lit(null).cast(LongType).as("row")))
     }
-    val q = java.util.regex.Pattern.quote(quote)
-    val s = java.util.regex.Pattern.quote(sep)
-    val cnt = length(col("line")) -
-      length(regexp_replace(col("line"), q, ""))
-    lines.filter(cnt % 2 === 1 && col("line").rlike(s"(^|$s)$q"))
-      .select(lit("Quotes").as("errType"),
-        lit(CsvErrorCodes.InvalidQuotes).as("code"),
-        lit("unclosed or invalid quotes").as("message"),
-        lineNo.map(col(_).as("row"))
-          .getOrElse(lit(null).cast(LongType).as("row")))
   }
+
+  /** The empty (errType, code, message, row) error frame. */
+  private def noErrors(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    spark.emptyDataset[(String, String, String, Long)]
+      .toDF("errType", "code", "message", "row")
+  }
+
+  /** FieldMismatch errors (parser.ts:1270-1302) for records whose field
+    * count `__fc` is not the header's `n`, minus the relaxColumnCount
+    * exemptions; `row` fills the error's row column.
+    */
+  private def fieldMismatchErrors(fc: DataFrame, n: Int, opts: CsvOptions,
+      row: Column): DataFrame =
+    fc.filter(col("__fc") =!= n)
+      .filter(if (opts.relaxColumnCountLess) col("__fc") > n else lit(true))
+      .filter(if (opts.relaxColumnCountMore) col("__fc") < n else lit(true))
+      .select(lit("FieldMismatch").as("errType"),
+        when(col("__fc") < n, CsvErrorCodes.TooFewFields)
+          .otherwise(CsvErrorCodes.TooManyFields).as("code"),
+        concat(lit("expected "), lit(n), lit(" fields, got "), col("__fc"))
+          .as("message"),
+        row.as("row"))
 
   /** Single driver-side UndetectableDelimiter error row (or empty). */
   private def delimiterErrors(
@@ -526,8 +544,7 @@ object CsvReader {
         "unable to auto-detect delimiting character; defaulted to ','",
         Option.empty[Long]))
         .toDF("errType", "code", "message", "row")
-    else spark.emptyDataset[(String, String, String, Long)]
-      .toDF("errType", "code", "message", "row")
+    else noErrors(spark)
   }
 
   private def resolveHeaders(
@@ -626,17 +643,9 @@ object CsvReader {
         opts.comments.foreach(c =>
           errLines = errLines.filter(!col("line").startsWith(c)))
         errLines = errLines.filter(col("line") =!= "")
-        val mismatch = errLines
-          .select(fieldCountExpr(col("line"), sep, opts.quote).as("__fc"))
-          .filter(col("__fc") =!= n)
-          .filter(if (opts.relaxColumnCountLess) col("__fc") > n else lit(true))
-          .filter(if (opts.relaxColumnCountMore) col("__fc") < n else lit(true))
-          .select(lit("FieldMismatch").as("errType"),
-            when(col("__fc") < n, CsvErrorCodes.TooFewFields)
-              .otherwise(CsvErrorCodes.TooManyFields).as("code"),
-            concat(lit("expected "), lit(n), lit(" fields, got "), col("__fc"))
-              .as("message"),
-            lit(null).cast(LongType).as("row"))
+        val mismatch = fieldMismatchErrors(
+          errLines.select(fieldCountExpr(col("line"), sep, opts.quote).as("__fc")),
+          n, opts, lit(null).cast(LongType))
         delimiterErrors(spark, undetectable)
           .union(invalidQuoteErrors(errLines, sep, opts, lineNo = None))
           .union(mismatch)
@@ -647,8 +656,7 @@ object CsvReader {
     val meta = CsvMeta(delimiter = sep,
       linebreak = detectFileLinebreak(stripScheme(path)),
       truncated = opts.preview > 0, fields = headers)
-    finish(parsed, headers, sep, opts, lineNo = None, meta)
-      .copy(errors = errorsDf)
+    finish(parsed, headers, opts, lineNo = None, errorsDf, meta)
   }
 
   // ----------------------------------------------------------- LINE path
@@ -716,8 +724,7 @@ object CsvReader {
             concat(lit("record exceeds "), lit(opts.maxRecordSize), lit(" bytes"))
               .as("message"),
             col(LineNo).as("row"))
-      else spark.emptyDataset[(String, String, String, Long)]
-        .toDF("errType", "code", "message", "row")
+      else noErrors(spark)
     if (opts.maxRecordSize > 0)
       data = data.filter(length(col("line")) <= opts.maxRecordSize)
 
@@ -759,17 +766,7 @@ object CsvReader {
       when(col(Corrupt).isNull, lit(n))
         .otherwise(fieldCountExpr(col(Corrupt), sep, opts.quote)))
 
-    // field-mismatch errors (FieldMismatch, parser.ts:1270-1302)
-    val mismatchErrors = withFc
-      .filter(col("__fc") =!= n)
-      .filter(if (opts.relaxColumnCountLess) col("__fc") > n else lit(true))
-      .filter(if (opts.relaxColumnCountMore) col("__fc") < n else lit(true))
-      .select(lit("FieldMismatch").as("errType"),
-        when(col("__fc") < n, CsvErrorCodes.TooFewFields)
-          .otherwise(CsvErrorCodes.TooManyFields).as("code"),
-        concat(lit("expected "), lit(n), lit(" fields, got "), col("__fc"))
-          .as("message"),
-        col(LineNo).as("row"))
+    val mismatchErrors = fieldMismatchErrors(withFc, n, opts, col(LineNo))
 
     // __parsed_extra for long rows (row.ts:516-523)
     val withExtra =
@@ -809,17 +806,15 @@ object CsvReader {
       .union(mismatchErrors)
     val meta = CsvMeta(delimiter = sep, linebreak = linebreak,
       truncated = opts.preview > 0 || opts.toLine > 0, fields = headers)
-    finish(result, headers, sep, opts, lineNo = Some(LineNo), meta)
-      .copy(errors = errors)
+    finish(result, headers, opts, lineNo = Some(LineNo), errors, meta)
   }
 
   // -------------------------------------------------------- post-process
 
-  private def finish(parsed: DataFrame, headers: Seq[String], sep: String,
-      opts: CsvOptions, lineNo: Option[String],
-      meta: CsvMeta = CsvMeta()): CsvScan = {
+  private def finish(parsed: DataFrame, headers: Seq[String],
+      opts: CsvOptions, lineNo: Option[String], errors: DataFrame,
+      meta: CsvMeta): CsvScan = {
     val spark = parsed.sparkSession
-    import spark.implicits._
     var df = parsed
     if (df.columns.contains(Corrupt)) df = df.drop(Corrupt)
     lineNo.foreach(c => df = df.drop(c))
@@ -864,8 +859,6 @@ object CsvReader {
     opts.castFns.foreach { case (h, f) =>
       if (df.columns.contains(h)) df = df.withColumn(h, f(col(s"`$h`")))
     }
-    val errors = spark.emptyDataset[(String, String, String, Long)]
-      .toDF("errType", "code", "message", "row")
     CsvScan(df, errors, headers, meta)
   }
 

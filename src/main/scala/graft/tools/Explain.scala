@@ -1,10 +1,7 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 /** Dev tool: dump formatted plans for plan-audit (not part of the API). */
 object Explain extends App {
-  val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
+  val spark = graft.GraftSession.builder("local[4]", 4).getOrCreate()
   spark.sparkContext.setLogLevel("ERROR")
   val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
   val names = if (args.length > 1) args(1).split(",").toSeq

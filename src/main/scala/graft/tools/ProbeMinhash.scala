@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Calibration probe for the q31 MinHash gate: runs the SAME check as
   * the Verify assertion ([[graft.MinhashCheck]] — one shared
   * implementation, so probe and gate cannot drift) and prints its
@@ -15,10 +13,7 @@ object ProbeMinhash {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val everyK = if (args.length > 1) args(1).toLong else 1L
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val r = graft.MinhashCheck.runSampled(spark, dir, everyK)
     println(f"PROBE minhash dir=$dir everyK=$everyK " +

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Rehearsal-scale VALUE probe for the compressed-scan ANN paths:
   * runs the q176 (PQ) and q177 (IVF-PQ) planted-recovery +
   * exact-rescore checks — the SAME [[graft.VerifyAssertions
@@ -24,11 +22,7 @@ object ProbePq {
       else all
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     for ((q, name) <- which) {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-rehearsal data synthesizer: replicate an sf directory `factor`×
@@ -54,11 +54,7 @@ object ScaleUp {
     val dst = if (args.length > 1) args(1) else "/tmp/sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(dst).mkdirs()

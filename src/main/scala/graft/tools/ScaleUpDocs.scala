@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Documents-only scale-rehearsal synthesizer (the ScaleUpEmbeddings
@@ -20,10 +19,8 @@ object ScaleUpDocs {
     val dst = if (args.length > 1) args(1) else "/tmp/docs5m"
     val factor = if (args.length > 2) args(2).toInt else 1000
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(dst).mkdirs()
     val lower = "abcdefghijklmnopqrstuvwxyz"

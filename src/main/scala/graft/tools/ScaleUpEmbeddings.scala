@@ -1,13 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Embeddings-only scale synthesizer: replicate `embeddings.parquet`
   * `factor`× with [[ScaleUp.embReplica]]'s exact replication model
   * (id offsets + hash-decorrelated noise), WITHOUT paying for the
   * other nine tables — the ≥1M-vector rehearsal corpora the
-  * distributed IVF coarse trainer is measured on need only this table
-  * (ProbeIvf reads `<dir>/embeddings.parquet` alone).
+  * distributed IVF coarse trainer is measured on need only this table.
   *
   * Usage: runMain graft.tools.ScaleUpEmbeddings <src> <dst> <factor>
   */
@@ -18,11 +15,7 @@ object ScaleUpEmbeddings {
     val (src, dst, factor) = (args(0), args(1), args(2).toInt)
     require(factor >= 1, "factor must be >= 1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(dst).mkdirs()

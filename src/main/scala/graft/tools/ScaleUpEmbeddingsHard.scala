@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** NON-SATURATING embeddings scale synthesizer for the IVF recall
@@ -35,11 +34,7 @@ object ScaleUpEmbeddingsHard {
     val (src, dst, factor) = (args(0), args(1), args(2).toInt)
     require(factor >= 1, "factor must be >= 1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(dst).mkdirs()

@@ -1,12 +1,8 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 object TimeQ {
   def main(args: Array[String]): Unit = {
     val dir = args(0); val name = args(1); val n = if (args.length > 2) args(2).toInt else 2
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     for (i <- 0 until n) {
       val t0 = System.nanoTime()

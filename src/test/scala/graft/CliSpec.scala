@@ -147,6 +147,33 @@ class CliSpec extends SparkSpec {
     assert(code == 0 && out.contains("MB/s"))
   }
 
+  /** Exit code and stderr of one CLI run. */
+  private def runCliErr(args: String*): (Int, String) = {
+    val errBuf = new java.io.ByteArrayOutputStream()
+    val oldErr = System.err
+    System.setErr(new java.io.PrintStream(errBuf, true, "UTF-8"))
+    val code = try runCli(args: _*)._1 finally System.setErr(oldErr)
+    (code, errBuf.toString("UTF-8"))
+  }
+
+  test("a malformed -n is a usage error, not a stack trace") {
+    val (code, err) = runCliErr("head", fixture, "-n", "abc")
+    assert(code == 1 && err.contains("error: -n expects an integer"), err)
+  }
+
+  test("benchmark --iterations must be at least 1") {
+    val (code, err) = runCliErr("benchmark", fixture, "--iterations", "0")
+    assert(code == 1 &&
+      err.contains("error: --iterations expects an integer >= 1"), err)
+  }
+
+  test("a malformed --min-share is a usage error") {
+    val (code, err) = runCliErr("stats", fixture, "-c", "name",
+      "--min-share", "lots")
+    assert(code == 1 && err.contains("error: --min-share expects a number"),
+      err)
+  }
+
   test("unknown command exits nonzero") {
     val (code, _) = runCli("frobnicate", fixture)
     assert(code == 1)
