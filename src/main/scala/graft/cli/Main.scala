@@ -1,6 +1,6 @@
 package graft.cli
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Ops._
@@ -125,11 +125,8 @@ object Main {
           throw new IllegalArgumentException("sort requires -c <column>"))
         note(render(scan(spark, a).sorted(c, descending = a.desc), a, out)); 0
       case "convert" =>
-        // cache: the write and the summary count would otherwise each
-        // re-parse the whole input
-        val df = scan(spark, a).cache()
-        try {
-          val dest = a.output.getOrElse(a.file + "." + a.to)
+        val dest = a.output.getOrElse(a.file + "." + a.to)
+        note(counted(scan(spark, a)) { df =>
           a.to match {
             case "json"  => java.nio.file.Files.writeString(
               java.nio.file.Paths.get(dest), CsvWriter.toJsonString(df))
@@ -138,9 +135,8 @@ object Main {
             case "csv"   => CsvWriter.write(df, dest)
             case other => throw new IllegalArgumentException(s"unknown format $other")
           }
-          note(df.count())
-          System.err.println(s"wrote $dest"); 0
-        } finally { df.unpersist(); () }
+        })
+        System.err.println(s"wrote $dest"); 0
       case "validate" =>
         val s = CsvReader.read(spark, a.file, CsvOptions(
           delimiter = a.delimiter.filter(_ != "auto").orElse(Some(",")),
@@ -214,15 +210,20 @@ object Main {
 
   // -------------------------------------------------------------- render
 
+  /** The number of rows `write` wrote, taken from an Observation on the
+    * frame it writes — the write is the only pass over `df`.
+    */
+  private def counted(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val rows = Observation()
+    write(df.observe(rows, count(lit(1)).as("rows")))
+    rows.get("rows").asInstanceOf[Long]
+  }
+
   /** Returns the number of rows rendered/written (for the run summary). */
   private def render(df: DataFrame, a: Args, out: java.io.PrintStream): Long = {
     a.output match {
       case Some(path) =>
-        // count for the summary; CLI-scale results, the re-execution is
-        // the reference's own materialize-then-report shape
-        val n = df.count()
-        CsvWriter.write(df, path)
-        n
+        counted(df)(CsvWriter.write(_, path))
       case None =>
         val fmt = a.format.getOrElse(
           if (System.console() != null) "table" else "csv")

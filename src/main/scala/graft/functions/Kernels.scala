@@ -22,7 +22,7 @@ object Kernels {
   private lazy val table: Seq[(String, Builder)] =
     VectorExprs.kernels ++ SketchExprs.kernels ++ TextExprs.kernels ++
       SketchGate.kernels ++ RangeBucketExpr.kernels ++ VecSumAgg.kernels ++
-      GramianAgg.kernels ++ AsOfJoin.kernels
+      GramianAgg.kernels ++ AsOfJoin.kernels ++ CsvExprs.kernels
 
   // once per session (WeakHashMap so dropped sessions release): per-call
   // createOrReplaceTempFunction churn warns "replaced a previously
@@ -53,8 +53,15 @@ object Kernels {
   /** The kernel `name` applied to `args`, registered in the active
     * session first.
     */
-  def call(name: String, args: Column*): Column = {
-    register(SparkSession.active)
+  def call(name: String, args: Column*): Column =
+    call(SparkSession.active, name, args: _*)
+
+  /** The kernel `name` applied to `args`, registered in `spark` first —
+    * for a Column that goes into a frame of `spark` when that session
+    * need not be the active one.
+    */
+  def call(spark: SparkSession, name: String, args: Column*): Column = {
+    register(spark)
     call_function(name, args: _*)
   }
 

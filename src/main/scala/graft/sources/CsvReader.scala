@@ -6,6 +6,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
+import graft.functions.CsvExprs
+
 /** CSV scan with the reference's semantics (SURVEY.md §2.1-§2.2), lowered
   * Spark-first.
   *
@@ -23,11 +25,22 @@ import org.apache.spark.sql.types._
   *    session is left exactly as found: the derived split settings live
   *    on a private session the scan's relation is bound to, and the
   *    returned frames still belong to the caller's session.
+  *    The strict shape (`skipRecordsWithError` alone) reads here too: a
+  *    row is kept when the parser found it well-formed, or when the
+  *    quote-aware field count of its raw record passes the header-width
+  *    rule; its `errors` frame is the line path's, built on first access.
   *  - LINE path: `spark.read.text` + zipWithIndex + `from_csv`, for
   *    order-dependent options (skipFirstNLines / fromLine / toLine /
-  *    maxRecordSize / no-header col counting). Line order is made explicit
-  *    with a contiguous index; parsing still distributes, only the tiny
-  *    header/detection reads touch the driver.
+  *    maxRecordSize / fastMode / relaxColumnCountMore, and strict reads
+  *    combined with any of them, a non-default skipEmptyLines or a
+  *    multi-character comment prefix).
+  *    Line order is made explicit with a contiguous index; parsing still
+  *    distributes, only the tiny header/detection reads touch the driver.
+  *
+  * Per-line and per-cell checks (field counts, quote validity, type
+  * inference) are byte-loop kernels ([[graft.functions.CsvExprs]]), and
+  * each `errors` frame is planned only when first asked for, so `read`
+  * itself starts no job beyond dynamicTyping's inference.
   *
   * Reference semantic parity handled here:
   *  - unquoted empty → null, quoted "" → empty string (row.ts:318-322)
@@ -87,13 +100,15 @@ object CsvReader {
     }
   }
 
-  /** A scan result: the data frame, a lazily-computed error frame
-    * (errType, code, message, row), the resolved header names, and the
-    * parse metadata.
+  /** A scan result: the data frame, the error frame (errType, code,
+    * message, row) — built by `mkErrors` on first access of `errors` —
+    * the resolved header names, and the parse metadata.
     */
-  final case class CsvScan(df: DataFrame, errors: DataFrame,
+  final case class CsvScan(df: DataFrame, mkErrors: () => DataFrame,
       headers: Seq[String], meta: CsvMeta = CsvMeta(),
       source: Option[FileSnapshot] = None) {
+    lazy val errors: DataFrame = mkErrors()
+
     /** Count rows + errors (two actions — call after the scan is set up,
       * like the reference reads `parser.stats` after iterating). NOTE:
       * `errorCount` covers the WHOLE input — under preview/toLine
@@ -159,17 +174,27 @@ object CsvReader {
       throw new IllegalArgumentException(
         s"${CsvErrorCodes.InvalidOption}: multiLine=true cannot be combined " +
           s"with line-oriented option(s) ${linePathOpts.mkString(", ")}")
-    if (opts.multiLine || linePathOpts.isEmpty) filePath(spark, path, opts)
-    else {
-      // the header sample comes from the driver-side window when its line
-      // split matches readLines' (UTF-8; the other charsets split on \n)
-      val window =
-        if (opts.encoding.forall(_.equalsIgnoreCase("UTF-8")))
-          localWindow(path, opts.encoding)
-        else None
-      linePath(spark, readLines(spark, path, opts), opts,
-        detectFileLinebreak(stripScheme(path)), window)
-    }
+    // the strict shape alone takes its field counts from the file parse,
+    // whose `comment` option takes one character only
+    val strictOnly = linePathOpts == Seq("skipRecordsWithError") &&
+      opts.skipEmptyLines == CsvOptions().skipEmptyLines &&
+      opts.comments.forall(_.length == 1)
+    if (opts.multiLine || linePathOpts.isEmpty || strictOnly)
+      filePath(spark, path, opts)
+    else linePathFile(spark, path, opts)
+  }
+
+  /** The line path over the file at `path`. */
+  private def linePathFile(spark: SparkSession, path: String,
+      opts: CsvOptions): CsvScan = {
+    // the header sample comes from the driver-side window when its line
+    // split matches readLines' (UTF-8; the other charsets split on \n)
+    val window =
+      if (opts.encoding.forall(_.equalsIgnoreCase("UTF-8")))
+        localWindow(path, opts.encoding)
+      else None
+    linePath(spark, readLines(spark, path, opts), opts,
+      detectFileLinebreak(stripScheme(path)), window)
   }
 
   /** beforeFirstChunk file lowering (reference parser.ts:350-360): read the
@@ -266,11 +291,14 @@ object CsvReader {
     * formula divides by cores again and would shrink sub-floor inputs
     * below the floor); the open cost keeps the caller's ratio to
     * `maxPartitionBytes`, so a directory of small files still packs
-    * several files per task. Frames whose plan is not a bare file
-    * relation, and inputs the caller's settings already spread over
-    * every core, come back unchanged.
+    * several files per task. `scanConf` is set on the private session
+    * too, for settings the relation reads at execution. Frames whose plan
+    * is not a bare file relation come back unchanged, and so do inputs
+    * the caller's settings already spread over every core when there is
+    * no `scanConf`.
     */
-  private def sized(spark: SparkSession, df: DataFrame): DataFrame =
+  private def sized(spark: SparkSession, df: DataFrame,
+      scanConf: Map[String, String] = Map.empty): DataFrame =
     df.queryExecution.analyzed match {
       case lr: LogicalRelation => lr.relation match {
         case rel: HadoopFsRelation =>
@@ -278,16 +306,22 @@ object CsvReader {
           val maxBytes = conf.filesMaxPartitionBytes
           val split = splitBytes(rel.location.sizeInBytes,
             spark.sparkContext.defaultParallelism, maxBytes)
-          if (split >= maxBytes) df
+          val splitConf =
+            if (split >= maxBytes) Map.empty[String, String]
+            else Map(
+              SQLConf.FILES_MAX_PARTITION_BYTES.key -> split.toString,
+              SQLConf.FILES_MIN_PARTITION_NUM.key -> "1",
+              SQLConf.FILES_OPEN_COST_IN_BYTES.key -> math.max(1L,
+                conf.filesOpenCostInBytes * split / maxBytes).toString)
+          if (splitConf.isEmpty && scanConf.isEmpty) df
           else {
             val scanSession = spark.newSession()
             spark.conf.getAll.foreach { case (k, v) =>
               if (spark.conf.isModifiable(k)) scanSession.conf.set(k, v)
             }
-            scanSession.conf.set(SQLConf.FILES_MAX_PARTITION_BYTES.key, split)
-            scanSession.conf.set(SQLConf.FILES_MIN_PARTITION_NUM.key, 1L)
-            scanSession.conf.set(SQLConf.FILES_OPEN_COST_IN_BYTES.key,
-              math.max(1L, conf.filesOpenCostInBytes * split / maxBytes))
+            (splitConf ++ scanConf).foreach { case (k, v) =>
+              scanSession.conf.set(k, v)
+            }
             spark.baseRelationToDataFrame(rel.copy()(scanSession))
           }
         case _ => df
@@ -485,32 +519,30 @@ object CsvReader {
           .getOrElse((",", true)) // reference falls back to comma
     }
 
-  /** Rows whose quoting is malformed: an ODD number of quote chars on a
-    * line where some FIELD starts with a quote (line start or right after
-    * a delimiter) means an unclosed/invalid quote. Sound for single-line
-    * records with doubled-quote escaping — quotes inside unquoted fields
-    * (`it's 5"`) are literal per the reference's parser and never flagged,
-    * and the check is suppressed entirely when a custom escape char is in
-    * play (escaped quotes then break the parity premise). errType Quotes /
-    * code InvalidQuotes per reference errors.ts:6-22.
+  /** Whether a [[CsvExprs.CsvLineCheck]] value marks malformed quoting: an ODD
+    * number of quote chars on a line where some FIELD starts with a quote
+    * (line start or right after a delimiter) means an unclosed/invalid
+    * quote. Sound for single-line records with doubled-quote escaping —
+    * quotes inside unquoted fields (`it's 5"`) are literal per the
+    * reference's parser and never flagged, and the check is suppressed
+    * entirely when a custom escape char is in play (escaped quotes then
+    * break the parity premise). errType Quotes / code InvalidQuotes per
+    * reference errors.ts:6-22.
     */
-  private def invalidQuoteErrors(lines: DataFrame, sep: String,
-      opts: CsvOptions, lineNo: Option[String]): DataFrame = {
-    val quote = opts.quote
-    if (opts.escape.exists(_ != quote)) noErrors(lines.sparkSession)
-    else {
-      val q = java.util.regex.Pattern.quote(quote)
-      val s = java.util.regex.Pattern.quote(sep)
-      val cnt = length(col("line")) -
-        length(regexp_replace(col("line"), q, ""))
-      lines.filter(cnt % 2 === 1 && col("line").rlike(s"(^|$s)$q"))
-        .select(lit("Quotes").as("errType"),
-          lit(CsvErrorCodes.InvalidQuotes).as("code"),
-          lit("unclosed or invalid quotes").as("message"),
-          lineNo.map(col(_).as("row"))
-            .getOrElse(lit(null).cast(LongType).as("row")))
-    }
-  }
+  private def invalidQuote(check: Column, opts: CsvOptions): Column =
+    if (opts.escape.exists(_ != opts.quote)) lit(false)
+    else CsvExprs.badQuote(check)
+
+  /** One (errType, code, message, row) error. */
+  private def errorRow(errType: String, code: Column, message: Column,
+      row: Column): Column =
+    struct(lit(errType).as("errType"), code.as("code"),
+      message.as("message"), row.cast(LongType).as("row"))
+
+  /** The InvalidQuotes error of a line whose quoting is malformed. */
+  private def quoteError(row: Column): Column =
+    errorRow("Quotes", lit(CsvErrorCodes.InvalidQuotes),
+      lit("unclosed or invalid quotes"), row)
 
   /** The empty (errType, code, message, row) error frame. */
   private def noErrors(spark: SparkSession): DataFrame = {
@@ -519,21 +551,20 @@ object CsvReader {
       .toDF("errType", "code", "message", "row")
   }
 
-  /** FieldMismatch errors (parser.ts:1270-1302) for records whose field
-    * count `__fc` is not the header's `n`, minus the relaxColumnCount
-    * exemptions; `row` fills the error's row column.
+  /** Whether field count `fc` is a FieldMismatch (parser.ts:1270-1302):
+    * not the header's `n`, minus the relaxColumnCount exemptions.
     */
-  private def fieldMismatchErrors(fc: DataFrame, n: Int, opts: CsvOptions,
-      row: Column): DataFrame =
-    fc.filter(col("__fc") =!= n)
-      .filter(if (opts.relaxColumnCountLess) col("__fc") > n else lit(true))
-      .filter(if (opts.relaxColumnCountMore) col("__fc") < n else lit(true))
-      .select(lit("FieldMismatch").as("errType"),
-        when(col("__fc") < n, CsvErrorCodes.TooFewFields)
-          .otherwise(CsvErrorCodes.TooManyFields).as("code"),
-        concat(lit("expected "), lit(n), lit(" fields, got "), col("__fc"))
-          .as("message"),
-        row.as("row"))
+  private def fieldMismatch(fc: Column, n: Int, opts: CsvOptions): Column =
+    fc =!= n &&
+      (if (opts.relaxColumnCountLess) fc > n else lit(true)) &&
+      (if (opts.relaxColumnCountMore) fc < n else lit(true))
+
+  /** The FieldMismatch error of a record with field count `fc`. */
+  private def mismatchError(fc: Column, n: Int, row: Column): Column =
+    errorRow("FieldMismatch",
+      when(fc < n, CsvErrorCodes.TooFewFields)
+        .otherwise(CsvErrorCodes.TooManyFields),
+      concat(lit("expected "), lit(n), lit(" fields, got "), fc), row)
 
   /** Single driver-side UndetectableDelimiter error row (or empty). */
   private def delimiterErrors(
@@ -586,16 +617,6 @@ object CsvReader {
     "ignoreLeadingWhiteSpace" -> (opts.trimWhitespace || opts.ltrim).toString,
     "ignoreTrailingWhiteSpace" -> (opts.trimWhitespace || opts.rtrim).toString)
 
-  /** quote-aware field count of a raw line, as a pure Column expression:
-    * blank out quoted segments, then count separators.
-    */
-  private def fieldCountExpr(line: Column, sep: String, quote: String): Column = {
-    val q = java.util.regex.Pattern.quote(quote)
-    val s = java.util.regex.Pattern.quote(sep)
-    val noQuoted = regexp_replace(line, s"$q(?:[^$q]|$q$q)*$q", "")
-    size(split(noQuoted, s, -1))
-  }
-
   // ----------------------------------------------------------- FILE path
 
   private def filePath(spark: SparkSession, path: String, opts: CsvOptions): CsvScan = {
@@ -625,38 +646,69 @@ object CsvReader {
       .schema(schema)
     opts.comments.foreach(c => reader = reader.option("comment", c))
     opts.encoding.foreach(e => reader = reader.option("encoding", e))
+    val strict = opts.skipRecordsWithError
+    // Spark's CSV column pruning parses only the columns a query needs and
+    // then never flags a malformed row: the strict filter below would keep
+    // ragged rows under count(). Off for this scan, on its private session.
+    val scanConf =
+      if (strict) Map(SQLConf.CSV_PARSER_COLUMN_PRUNING.key -> "false")
+      else Map.empty[String, String]
     // a multiLine file is one unsplittable split anyway
     val parsed0 =
-      if (opts.multiLine) reader.csv(path) else sized(spark, reader.csv(path))
+      if (opts.multiLine) reader.csv(path)
+      else sized(spark, reader.csv(path), scanConf)
     val n = headers.length
-    // Errors from a raw text scan (Spark disallows projecting ONLY the
-    // corrupt column off a CSV read). Field-count mismatch needs no parse —
-    // just the quote-aware count on each raw line. Lazy: costs a second
-    // file scan only if the caller materializes `errors`.
-    // SUPPRESSED under multiLine: a quoted-newline record spans several
-    // raw lines, so per-line field counts would emit spurious
-    // FieldMismatch errors (the old behavior this replaces).
-    val errorsDf =
-      if (opts.multiLine) delimiterErrors(spark, undetectable)
+    val limited = if (opts.preview > 0) parsed0.limit(opts.preview) else parsed0
+    val parsed =
+      if (!strict || n == 0) limited
+      else {
+        // a malformed row stays when its raw record's field count passes
+        // the header-width rule (the line path's keep rule)
+        val fc = CsvExprs.fieldCount(
+          CsvExprs.csv_line_check(spark, col(Corrupt), sep, opts.quote))
+        val wellFormed = col(Corrupt).isNull || fc === n ||
+          (if (opts.relaxColumnCountLess) fc < n else lit(false))
+        // A scan that needs ONLY _corrupt_record fails
+        // (QUERY_ONLY_CORRUPT_RECORD_COLUMN) — count() through this filter
+        // would be one. This always-true test keeps a header column
+        // required, in a form the optimizer does not fold away.
+        val h0 = col(s"`${headers.head}`")
+        limited.filter(wellFormed && (h0.isNull || octet_length(h0) >= 0))
+      }
+    // Errors of the strict shape are the line path's (rows carry physical
+    // line numbers). Otherwise one raw text scan (Spark disallows
+    // projecting ONLY the corrupt column off a CSV read): per line, one
+    // kernel pass gives the quote check and the quote-aware field count,
+    // and each line yields 0-2 error rows. SUPPRESSED under multiLine: a
+    // quoted-newline record spans several raw lines, so per-line field
+    // counts would emit spurious FieldMismatch errors.
+    def errors: DataFrame =
+      if (strict) linePathFile(spark, path, opts).errors
+      else if (opts.multiLine) delimiterErrors(spark, undetectable)
       else {
         var errLines = textLines(spark, path)
         opts.comments.foreach(c =>
           errLines = errLines.filter(!col("line").startsWith(c)))
         errLines = errLines.filter(col("line") =!= "")
-        val mismatch = fieldMismatchErrors(
-          errLines.select(fieldCountExpr(col("line"), sep, opts.quote).as("__fc")),
-          n, opts, lit(null).cast(LongType))
-        delimiterErrors(spark, undetectable)
-          .union(invalidQuoteErrors(errLines, sep, opts, lineNo = None))
-          .union(mismatch)
+        val checked = errLines.select(
+          CsvExprs.csv_line_check(spark, col("line"), sep, opts.quote).as("__k"))
+        val fc = CsvExprs.fieldCount(col("__k"))
+        val noRow = lit(null)
+        // the null filter sits after the generator, so the kernel stays
+        // in one projection below it
+        val perLine = checked
+          .select(explode(array(
+            when(invalidQuote(col("__k"), opts), quoteError(noRow)),
+            when(fieldMismatch(fc, n, opts), mismatchError(fc, n, noRow))))
+            .as("__e"))
+          .filter(col("__e").isNotNull)
+          .select("__e.*")
+        delimiterErrors(spark, undetectable).union(perLine)
       }
-    // (skipRecordsWithError routes to the line path — a corrupt-only filter
-    // here would hit QUERY_ONLY_CORRUPT_RECORD_COLUMN after pruning.)
-    val parsed = if (opts.preview > 0) parsed0.limit(opts.preview) else parsed0
     val meta = CsvMeta(delimiter = sep,
       linebreak = detectFileLinebreak(stripScheme(path)),
       truncated = opts.preview > 0, fields = headers)
-    finish(parsed, headers, opts, lineNo = None, errorsDf, meta)
+    finish(parsed, headers, opts, lineNo = None, errors, meta)
   }
 
   // ----------------------------------------------------------- LINE path
@@ -764,9 +816,13 @@ object CsvReader {
 
     val withFc = parsed.withColumn("__fc",
       when(col(Corrupt).isNull, lit(n))
-        .otherwise(fieldCountExpr(col(Corrupt), sep, opts.quote)))
+        .otherwise(CsvExprs.fieldCount(
+          CsvExprs.csv_line_check(spark, col(Corrupt), sep, opts.quote))))
 
-    val mismatchErrors = fieldMismatchErrors(withFc, n, opts, col(LineNo))
+    def mismatchErrors = withFc
+      .filter(fieldMismatch(col("__fc"), n, opts))
+      .select(mismatchError(col("__fc"), n, col(LineNo)).as("__e"))
+      .select("__e.*")
 
     // __parsed_extra for long rows (row.ts:516-523)
     val withExtra =
@@ -799,9 +855,11 @@ object CsvReader {
       (if (opts.relaxColumnCountMore) Seq(col("__parsed_extra")) else Nil) ++
       Seq(col(LineNo))
     val result = withExtra.filter(keepPred).select(outCols: _*)
-    val errors = delimiterErrors(spark, undetectable)
-      .union(invalidQuoteErrors(data.select(col("line"), col(LineNo)),
-        sep, opts, lineNo = Some(LineNo)))
+    def errors = delimiterErrors(spark, undetectable)
+      .union(data
+        .filter(invalidQuote(
+          CsvExprs.csv_line_check(spark, col("line"), sep, opts.quote), opts))
+        .select(quoteError(col(LineNo)).as("__e")).select("__e.*"))
       .union(sizeErrors)
       .union(mismatchErrors)
     val meta = CsvMeta(delimiter = sep, linebreak = linebreak,
@@ -812,7 +870,7 @@ object CsvReader {
   // -------------------------------------------------------- post-process
 
   private def finish(parsed: DataFrame, headers: Seq[String],
-      opts: CsvOptions, lineNo: Option[String], errors: DataFrame,
+      opts: CsvOptions, lineNo: Option[String], errors: => DataFrame,
       meta: CsvMeta): CsvScan = {
     val spark = parsed.sparkSession
     var df = parsed
@@ -859,38 +917,32 @@ object CsvReader {
     opts.castFns.foreach { case (h, f) =>
       if (df.columns.contains(h)) df = df.withColumn(h, f(col(s"`$h`")))
     }
-    CsvScan(df, errors, headers, meta)
+    CsvScan(df, () => errors, headers, meta)
   }
 
   /** dynamicTyping: per-column inference with the reference's value rules
     * (row.ts:442-458) — all-boolean → boolean, all-numeric → double,
-    * else string. One aggregation pass over the scan. Empty strings
-    * (quoted "") coerce to NULL exactly like the reference's
-    * `value === "" → null` rule, so they never block a column's numeric/
-    * boolean inference.
+    * else string. One aggregation job over the scan, one `bit_or` of the
+    * byte-loop cell classifier ([[CsvExprs.CsvCellClass]]) per column.
+    * Empty strings (quoted "") coerce to NULL exactly like the
+    * reference's `value === "" → null` rule, so they never block a
+    * column's numeric/boolean inference.
     */
   private def inferTypes(df: DataFrame, headers: Seq[String]): DataFrame = {
-    val numRe = "^-?(\\d+\\.?\\d*|\\.\\d+)([eE][+-]?\\d+)?$"
-    val aggs = headers.flatMap { h =>
-      val v = col(h)
-      val present = v.isNotNull && v =!= ""
-      Seq(
-        max(when(present && !lower(v).isin("true", "false"), 1)
-          .otherwise(0)).as(s"${h}__notbool"),
-        max(when(present && !v.rlike(numRe), 1).otherwise(0))
-          .as(s"${h}__notnum"),
-        max(when(present, 1).otherwise(0)).as(s"${h}__any"))
-    }
+    val aggs = headers.map(h =>
+      bit_or(CsvExprs.csv_cell_class(df.sparkSession, col(h))))
     val flags = df.agg(aggs.head, aggs.tail: _*).head()
-    val casts = headers.map { h =>
-      val notBool = flags.getAs[Int](s"${h}__notbool")
-      val notNum = flags.getAs[Int](s"${h}__notnum")
-      val any = flags.getAs[Int](s"${h}__any")
+    val casts = headers.zipWithIndex.map { case (h, i) =>
+      // null: no rows at all
+      val bits = if (flags.isNullAt(i)) 0 else flags.getInt(i)
+      def has(bit: Int) = (bits & bit) != 0
       // "" → null BEFORE the cast: reference rule, and an ANSI cast of ""
       // would throw
       def nz = when(col(h) === "", lit(null)).otherwise(col(h))
-      if (any == 1 && notBool == 0) nz.cast(BooleanType).as(h)
-      else if (any == 1 && notNum == 0) nz.cast(DoubleType).as(h)
+      if (has(CsvExprs.Present) && !has(CsvExprs.NotBoolean))
+        nz.cast(BooleanType).as(h)
+      else if (has(CsvExprs.Present) && !has(CsvExprs.NotNumeric))
+        nz.cast(DoubleType).as(h)
       else col(h)
     }
     val others = df.columns.filterNot(headers.contains).map(col)

@@ -192,4 +192,39 @@ class CliSpec extends SparkSpec {
     val re = """✓ Processed 3 rows in \d+\.\d{2}s \(\d+(\.\d+)? MB/s\)""".r
     assert(re.findFirstIn(err).isDefined, s"stderr was: $err")
   }
+
+  /** Data rows in a CLI output: JSON objects in a `json` file, else the
+    * lines of a directory's part files minus their header lines. */
+  private def rowsIn(dest: String, kind: String): Int = {
+    def text(f: java.io.File) =
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    val f = new java.io.File(dest)
+    if (kind == "json") text(f).count(_ == '{')
+    else {
+      val header = if (kind == "tsv") "name\tqty\tprice" else "name,qty,price"
+      f.listFiles().filter(_.getName.startsWith("part-"))
+        .flatMap(p => text(p).linesIterator).count(_ != header)
+    }
+  }
+
+  test("writes report the rows they wrote: sort/filter -o, convert --to " +
+      "jsonl|json|csv|tsv, and 0 for an empty result") {
+    val dir = java.nio.file.Files.createTempDirectory("cliout")
+    SparkSpec.cleanupAtExit(dir.toFile)
+    def at(name: String) = dir.resolve(name).toString
+    val cases = Seq(
+      (Seq("sort", fixture, "-c", "qty", "-o", at("sort")), "csv", 3),
+      (Seq("filter", fixture, "-f", "qty > 20", "-o", at("filter")), "csv", 2),
+      (Seq("filter", fixture, "-f", "qty > 1000", "-o", at("empty")), "csv", 0),
+      // a limit 0, optimized to an empty relation
+      (Seq("head", fixture, "-n", "0", "-o", at("head0")), "csv", 0)) ++
+      Seq("jsonl", "json", "csv", "tsv").map(to =>
+        (Seq("convert", fixture, "--to", to, "-o", at(s"convert.$to")), to, 3))
+    for ((args, kind, rows) <- cases) {
+      val (code, err) = runCliErr(args: _*)
+      assert(code == 0, s"$args: $err")
+      assert(rowsIn(args.last, kind) == rows, args)
+      assert(err.contains(s"✓ Processed $rows rows in"), s"$args: $err")
+    }
+  }
 }
