@@ -5,9 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{CollationFactory, CollationSupport}
 import org.apache.spark.sql.functions.{lit, shiftright}
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, IntegerType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -65,17 +63,14 @@ object CsvExprs {
     * NotBoolean is `!lower(v).isin("true", "false")`; NotNumeric is
     * `!v.rlike("^-?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?$")` — Java `\d` is
     * ASCII only, and `$` also matches before one final line terminator.
-    * `useICU` is the session's `lower` case-mapping mode, used on the
-    * exact path for short non-ASCII cells.
     */
-  case class CsvCellClass(child: Expression, useICU: Boolean)
-      extends UnaryExpression {
+  case class CsvCellClass(child: Expression) extends UnaryExpression {
     override def prettyName: String = "csv_cell_class"
     override def dataType: DataType = IntegerType
     override def nullable: Boolean = false
 
     override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-      cellClass(child.eval(input).asInstanceOf[UTF8String], useICU)
+      cellClass(child.eval(input).asInstanceOf[UTF8String])
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       import org.apache.spark.sql.catalyst.expressions.codegen.Block._
@@ -84,7 +79,7 @@ object CsvExprs {
       ev.copy(code = code"""
         ${c.code}
         int ${ev.value} = graft.functions.CsvExprs.cellClass(
-          ${c.isNull} ? null : ${c.value}, $useICU);""", isNull = FalseLiteral)
+          ${c.isNull} ? null : ${c.value});""", isNull = FalseLiteral)
     }
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -173,31 +168,25 @@ object CsvExprs {
     (fields << 1) | (if (bad) 1 else 0)
   }
 
-  private val True = UTF8String.fromString("true")
-  private val False = UTF8String.fromString("false")
-
-  def cellClass(s: UTF8String, useICU: Boolean): Int =
+  def cellClass(s: UTF8String): Int =
     if (s == null || s.numBytes() == 0) 0
     else Present |
-      (if (isBoolean(s, useICU)) 0 else NotBoolean) |
+      (if (isBoolean(s)) 0 else NotBoolean) |
       (if (isNumeric(s)) 0 else NotNumeric)
 
-  private def isBoolean(s: UTF8String, useICU: Boolean): Boolean = {
+  /** `lower(s)` is "true" or "false". A non-ASCII cell never is: every
+    * code point above U+007F lowercases, in both of `lower`'s case-mapping
+    * modes, to text holding a non-ASCII character or to `k` (U+212A KELVIN
+    * SIGN), and the context-dependent final sigma gives σ or ς
+    * (`CellLowerSpec` checks every code point).
+    */
+  private def isBoolean(s: UTF8String): Boolean = {
     val n = s.numBytes()
-    // "true"/"false" are 4-5 ASCII bytes. Lowercasing never lowers the
-    // code point count, so a non-ASCII cell lowers to them only with at
-    // most 5 code points (at most 20 bytes); those take `lower`'s own
-    // function.
-    if (n < 4 || n > 20) false
-    else if (s.isFullAscii) n <= 5 && {
+    (n == 4 || n == 5) && s.isFullAscii && {
       val w = if (n == 4) "true" else "false"
       var m = 0
       while (m < n && (s.getByte(m) | 0x20) == w.charAt(m)) m += 1
       m == n
-    } else s.numChars() <= 5 && {
-      val l = CollationSupport.Lower.exec(s,
-        CollationFactory.UTF8_BINARY_COLLATION_ID, useICU)
-      l == True || l == False
     }
   }
 
@@ -247,8 +236,7 @@ object CsvExprs {
     "csv_line_check" -> (e => CsvLineCheck(e.head,
       stringArg("csv_line_check sep", e(1)),
       stringArg("csv_line_check quote", e(2)))),
-    "csv_cell_class" -> (e => CsvCellClass(e.head,
-      SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED))))
+    "csv_cell_class" -> (e => CsvCellClass(e.head)))
 
   /** [[CsvLineCheck]] of `line`, resolved in `spark`. */
   def csv_line_check(spark: SparkSession, line: Column, sep: String,

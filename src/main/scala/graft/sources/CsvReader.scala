@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
@@ -14,9 +15,16 @@ import graft.functions.CsvExprs
   * Two physical paths, chosen per options:
   *
   *  - FILE path (default): `spark.read.csv` — parallel file splits,
-  *    predicate/column pushdown, native comment/limit handling. Used
-  *    whenever no line-number-dependent option is set. This is the 100 TB
-  *    path: the scan parallelizes like any Spark file source. Every file
+  *    predicate/column pushdown, limit handling. Used whenever no
+  *    line-number-dependent option is set. This is the 100 TB path: the
+  *    scan parallelizes like any Spark file source. Its relation is bound
+  *    to [[CsvScanFormat]], Spark's CSV format with a byte-level line
+  *    tokenizer (the reference's scan kernel, parser.zig): each line's
+  *    UTF-8 bytes are walked once into the row, and a line the tokenizer
+  *    cannot settle (a malformed quote, a ragged row, invalid UTF-8) falls
+  *    back, on its own, to Spark's `FailureSafeParser(UnivocityParser)`.
+  *    Comment lines (any prefix length) and empty lines are dropped there
+  *    on bytes; a whitespace-only line stays a record. Every file
   *    scan planned here (this parse, the line path's text scan and the
   *    `errors` scan) is cut into splits sized per read — see
   *    [[splitBytes]] — so an input smaller than cores × the session's
@@ -32,8 +40,9 @@ import graft.functions.CsvExprs
   *  - LINE path: `spark.read.text` + zipWithIndex + `from_csv`, for
   *    order-dependent options (skipFirstNLines / fromLine / toLine /
   *    maxRecordSize / fastMode / relaxColumnCountMore, and strict reads
-  *    combined with any of them, a non-default skipEmptyLines or a
-  *    multi-character comment prefix).
+  *    combined with any of them or a non-default skipEmptyLines), and for
+  *    a multi-character comment prefix in an option shape the tokenizer
+  *    does not serve.
   *    Line order is made explicit with a contiguous index; parsing still
   *    distributes, only the tiny header/detection reads touch the driver.
   *
@@ -174,11 +183,9 @@ object CsvReader {
       throw new IllegalArgumentException(
         s"${CsvErrorCodes.InvalidOption}: multiLine=true cannot be combined " +
           s"with line-oriented option(s) ${linePathOpts.mkString(", ")}")
-    // the strict shape alone takes its field counts from the file parse,
-    // whose `comment` option takes one character only
+    // the strict shape alone takes its field counts from the file parse
     val strictOnly = linePathOpts == Seq("skipRecordsWithError") &&
-      opts.skipEmptyLines == CsvOptions().skipEmptyLines &&
-      opts.comments.forall(_.length == 1)
+      opts.skipEmptyLines == CsvOptions().skipEmptyLines
     if (opts.multiLine || linePathOpts.isEmpty || strictOnly)
       filePath(spark, path, opts)
     else linePathFile(spark, path, opts)
@@ -279,12 +286,14 @@ object CsvReader {
       math.max(SplitFloorBytes, (totalBytes + cores - 1) / cores))
 
   /** `df` — a plain file-source read — with its files cut into
-    * [[splitBytes]] splits. Spark reads split settings from the
-    * RELATION's session when the scan executes, so the relation is
-    * rebound to a fresh session carrying the caller's SQL conf plus the
-    * derived settings, and handed back through the caller's session: the
-    * caller's conf is never written, and the frame, its plan (FileScan,
-    * pruning, pushdown) and its results are what `df` would give.
+    * [[splitBytes]] splits (unless `split` is false) and a CSV relation
+    * bound to [[CsvScanFormat]], the byte tokenizer. Spark reads split
+    * settings from the RELATION's session when the scan executes, so the
+    * relation is rebound to a fresh session carrying the caller's SQL conf
+    * plus the derived settings, and handed back through the caller's
+    * session: the caller's conf is never written, and the frame, its plan
+    * (FileScan, pruning, pushdown) and its results are what `df` would
+    * give.
     *
     * On the private session, `maxPartitionBytes` is the split size;
     * `minPartitionNum` 1 makes Spark cut exactly that size (its own
@@ -293,37 +302,45 @@ object CsvReader {
     * `maxPartitionBytes`, so a directory of small files still packs
     * several files per task. `scanConf` is set on the private session
     * too, for settings the relation reads at execution. Frames whose plan
-    * is not a bare file relation come back unchanged, and so do inputs
-    * the caller's settings already spread over every core when there is
-    * no `scanConf`.
+    * is not a bare file relation come back unchanged; inputs the caller's
+    * settings already spread over every core keep the caller's session
+    * when there is no `scanConf`.
     */
   private def sized(spark: SparkSession, df: DataFrame,
-      scanConf: Map[String, String] = Map.empty): DataFrame =
+      scanConf: Map[String, String] = Map.empty,
+      split: Boolean = true): DataFrame =
     df.queryExecution.analyzed match {
       case lr: LogicalRelation => lr.relation match {
         case rel: HadoopFsRelation =>
           val conf = spark.sessionState.conf
           val maxBytes = conf.filesMaxPartitionBytes
-          val split = splitBytes(rel.location.sizeInBytes,
+          val bytes = splitBytes(rel.location.sizeInBytes,
             spark.sparkContext.defaultParallelism, maxBytes)
           val splitConf =
-            if (split >= maxBytes) Map.empty[String, String]
+            if (!split || bytes >= maxBytes) Map.empty[String, String]
             else Map(
-              SQLConf.FILES_MAX_PARTITION_BYTES.key -> split.toString,
+              SQLConf.FILES_MAX_PARTITION_BYTES.key -> bytes.toString,
               SQLConf.FILES_MIN_PARTITION_NUM.key -> "1",
               SQLConf.FILES_OPEN_COST_IN_BYTES.key -> math.max(1L,
-                conf.filesOpenCostInBytes * split / maxBytes).toString)
-          if (splitConf.isEmpty && scanConf.isEmpty) df
-          else {
-            val scanSession = spark.newSession()
-            spark.conf.getAll.foreach { case (k, v) =>
-              if (spark.conf.isModifiable(k)) scanSession.conf.set(k, v)
-            }
-            (splitConf ++ scanConf).foreach { case (k, v) =>
-              scanSession.conf.set(k, v)
-            }
-            spark.baseRelationToDataFrame(rel.copy()(scanSession))
+                conf.filesOpenCostInBytes * bytes / maxBytes).toString)
+          val format = rel.fileFormat match {
+            case _: CSVFileFormat => new CsvScanFormat
+            case f => f
           }
+          val session =
+            if (splitConf.isEmpty && scanConf.isEmpty) spark
+            else {
+              val scanSession = spark.newSession()
+              spark.conf.getAll.foreach { case (k, v) =>
+                if (spark.conf.isModifiable(k)) scanSession.conf.set(k, v)
+              }
+              (splitConf ++ scanConf).foreach { case (k, v) =>
+                scanSession.conf.set(k, v)
+              }
+              scanSession
+            }
+          if ((session eq spark) && (format eq rel.fileFormat)) df
+          else spark.baseRelationToDataFrame(rel.copy(fileFormat = format)(session))
         case _ => df
       }
       case _ => df
@@ -625,7 +642,8 @@ object CsvReader {
     // and empty lines are invisible to the parser (parser.zig:324-338), so
     // they can't become the header
     def visible(lines: Seq[String]) = lines
-      .filterNot(l => l.isEmpty || opts.comments.exists(l.startsWith))
+      .filterNot(l => l.isEmpty || opts.comments.exists(l.startsWith) ||
+        (opts.skipEmptyLines == "greedy" && l.forall(_ == ' ')))
       .take(11)
     val fast = visible(sampleLines(spark, path, 100, opts.encoding))
     val sample =
@@ -639,13 +657,24 @@ object CsvReader {
     val schema = StructType(
       headers.map(h => StructField(h, StringType, nullable = true)) :+
         StructField(Corrupt, StringType, nullable = true))
-    var reader = spark.read
-      .options(csvParseOptions(sep, opts))
-      .option("header", opts.header.toString)
-      .option("multiLine", opts.multiLine.toString)
-      .schema(schema)
-    opts.comments.foreach(c => reader = reader.option("comment", c))
-    opts.encoding.foreach(e => reader = reader.option("encoding", e))
+    // comment lines and greedy blank lines are the format's to drop: Spark's
+    // own `comment` takes one character and its blank-line filter drops
+    // whitespace-only records
+    val readerOpts = csvParseOptions(sep, opts) ++
+      Map("header" -> opts.header.toString,
+        "multiLine" -> opts.multiLine.toString,
+        CsvScanFormat.SkipEmptyLines -> opts.skipEmptyLines) ++
+      opts.comments.map(CsvScanFormat.CommentPrefix -> _) ++
+      opts.encoding.map("encoding" -> _)
+    if (opts.comments.exists(_.length > 1) && !CsvScanFormat.serves(
+        CsvScanFormat.csvOptions(readerOpts, spark.sessionState.conf)))
+      // outside the tokenizer's shapes a comment is Spark's, one character
+      if (opts.multiLine)
+        throw new IllegalArgumentException(
+          s"${CsvErrorCodes.InvalidOption}: multiLine=true takes a " +
+            s"one-character comment prefix, got '${opts.comments.get}'")
+      else return linePathFile(spark, path, opts)
+    val reader = spark.read.options(readerOpts).schema(schema)
     val strict = opts.skipRecordsWithError
     // Spark's CSV column pruning parses only the columns a query needs and
     // then never flags a malformed row: the strict filter below would keep
@@ -654,9 +683,7 @@ object CsvReader {
       if (strict) Map(SQLConf.CSV_PARSER_COLUMN_PRUNING.key -> "false")
       else Map.empty[String, String]
     // a multiLine file is one unsplittable split anyway
-    val parsed0 =
-      if (opts.multiLine) reader.csv(path)
-      else sized(spark, reader.csv(path), scanConf)
+    val parsed0 = sized(spark, reader.csv(path), scanConf, split = !opts.multiLine)
     val n = headers.length
     val limited = if (opts.preview > 0) parsed0.limit(opts.preview) else parsed0
     val parsed =
@@ -689,7 +716,9 @@ object CsvReader {
         var errLines = textLines(spark, path)
         opts.comments.foreach(c =>
           errLines = errLines.filter(!col("line").startsWith(c)))
-        errLines = errLines.filter(col("line") =!= "")
+        errLines = errLines.filter(
+          if (opts.skipEmptyLines == "greedy") trim(col("line")) =!= ""
+          else col("line") =!= "")
         val checked = errLines.select(
           CsvExprs.csv_line_check(spark, col("line"), sep, opts.quote).as("__k"))
         val fc = CsvExprs.fieldCount(col("__k"))
@@ -922,19 +951,30 @@ object CsvReader {
 
   /** dynamicTyping: per-column inference with the reference's value rules
     * (row.ts:442-458) — all-boolean → boolean, all-numeric → double,
-    * else string. One aggregation job over the scan, one `bit_or` of the
-    * byte-loop cell classifier ([[CsvExprs.CsvCellClass]]) per column.
+    * else string. One single-stage job over the scan: each partition folds
+    * the byte-loop cell classifier ([[CsvExprs.CsvCellClass]]) of every
+    * column with a bitwise or, and the driver merges the partitions' bits
+    * (an aggregate would plan a second stage and a shuffle).
     * Empty strings (quoted "") coerce to NULL exactly like the
     * reference's `value === "" → null` rule, so they never block a
     * column's numeric/boolean inference.
     */
   private def inferTypes(df: DataFrame, headers: Seq[String]): DataFrame = {
-    val aggs = headers.map(h =>
-      bit_or(CsvExprs.csv_cell_class(df.sparkSession, col(h))))
-    val flags = df.agg(aggs.head, aggs.tail: _*).head()
+    val k = headers.length
+    val classes = df.select(headers.map(h =>
+      CsvExprs.csv_cell_class(df.sparkSession, col(h))): _*)
+    val flags = classes.queryExecution.toRdd.mapPartitions { rows =>
+      val acc = new Array[Int](k)
+      rows.foreach { r =>
+        var i = 0
+        while (i < k) { acc(i) |= r.getInt(i); i += 1 }
+      }
+      Iterator.single(acc)
+    }.collect().foldLeft(new Array[Int](k)) { (a, b) =>
+      a.indices.foreach(i => a(i) |= b(i)); a
+    }
     val casts = headers.zipWithIndex.map { case (h, i) =>
-      // null: no rows at all
-      val bits = if (flags.isNullAt(i)) 0 else flags.getInt(i)
+      val bits = flags(i)
       def has(bit: Int) = (bits & bit) != 0
       // "" → null BEFORE the cast: reference rule, and an ANSI cast of ""
       // would throw
