@@ -241,8 +241,8 @@ object Bench {
     // warmup: flagship agg + a join prime codegen, parquet footers and the
     // whole-stage compiler
     try {
-      Queries.q01_agg_basic(spark, sfDir).count()
-      Queries.q07_join_inner(spark, sfDir).count()
+      RelationalQueries.q01_agg_basic(spark, sfDir).count()
+      RelationalQueries.q07_join_inner(spark, sfDir).count()
     } catch { case scala.util.control.NonFatal(_) => () }
 
     // single-file CSV parse throughput: the FULL lineitem at this SF as

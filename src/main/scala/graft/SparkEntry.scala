@@ -1,37 +1,20 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  * Queries live in [[Queries]] (core relational surface) and the extension
-  * catalogs; this object is the stable aggregation point the driver calls.
+/** Driver contract — see SURVEY.md §7. The queries live in [[Catalog]];
+  * this object is the stable view the driver calls.
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    Queries.q01_agg_basic(spark, "/root/testdata/sf0.001")
+    RelationalQueries.q01_agg_basic(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Queries.all ++ ExtQueries.all ++ Queries2.all ++ Queries3.all ++
-      Queries4.all ++ Queries5.all ++ Queries6.all ++ Queries7.all ++
-      Queries8.all ++ Queries9.all ++ Queries10.all ++ Queries11.all ++
-      Queries12.all ++ Queries13.all ++ Queries14.all ++ Queries15.all ++
-      Queries16.all ++ Queries17.all ++ Queries18.all ++ Queries19.all ++
-      Queries20.all ++ Queries21.all ++ Queries22.all ++ Queries23.all ++
-      Queries24.all ++ Queries25.all ++ Queries26.all ++ Queries27.all ++
-      Queries28.all
+    Catalog.entries.map(e => e.name -> e.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    Queries.oracles ++ ExtQueries.oracles ++ Queries2.oracles ++
-      Queries3.oracles ++ Queries4.oracles ++ Queries5.oracles ++
-      Queries6.oracles ++ Queries7.oracles ++ Queries8.oracles ++
-      Queries9.oracles ++ Queries10.oracles ++ Queries11.oracles ++
-      Queries12.oracles ++ Queries13.oracles ++ Queries14.oracles ++
-      Queries15.oracles ++ Queries16.oracles ++ Queries17.oracles ++
-      Queries18.oracles ++ Queries19.oracles ++ Queries20.oracles ++
-      Queries21.oracles ++ Queries22.oracles ++ Queries23.oracles ++
-      Queries24.oracles ++ Queries25.oracles ++ Queries26.oracles ++
-      Queries27.oracles ++ Queries28.oracles
+    Catalog.entries.flatMap(e => e.oracle.map(e.name -> _)).toMap
 }

@@ -315,12 +315,12 @@ object VerifyAssertions {
       import graft.operators.Classify
       val out = SparkEntry.queries("q178_quality_classifier")(spark, sfDir)
         .collect().map(r => (r.getString(0), r.getDouble(1))).toMap
-      val rows = Queries18.docFeatures(spark, sfDir)
+      val rows = CurationQueries.docFeatures(spark, sfDir)
         .select(col("features"), col("label")).collect()
       val xs = rows.map(_.getSeq[Double](0).toArray)
       val ys = rows.map(_.getInt(1).toDouble)
       val local = Classify.logisticFitLocal(xs, ys)
-      val distCoef = Queries18.classifierTerms.map(out)
+      val distCoef = CurationQueries.classifierTerms.map(out)
       val scale = math.max(1.0, local.coef.map(math.abs).max)
       val coefErr = distCoef.zip(local.coef)
         .map { case (a, b) => math.abs(a - b) }.max / scale
@@ -370,10 +370,10 @@ object VerifyAssertions {
       val out = SparkEntry.queries("q189_curation_gate")(spark, sfDir)
         .collect().map(r => (r.getString(0), (r.getLong(1), r.getDouble(2))))
         .toMap
-      val feats = Queries18.docFeatures(spark, sfDir)
+      val feats = CurationQueries.docFeatures(spark, sfDir)
       // the CACHED fit — the same model object the query used, so the
-      // exact-count comparison below is sound (see Queries18.fitCached)
-      val model = Queries18.fitCached(spark, sfDir)
+      // exact-count comparison below is sound (see CurationQueries.fitCached)
+      val model = CurationQueries.fitCached(spark, sfDir)
       val rows = feats
         .select(model.predictProba(col("features")).as("s"), col("label"))
         .filter(col("s").isNotNull)
@@ -428,9 +428,9 @@ object VerifyAssertions {
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
         .toSet
-      val (corpus, resident, arriving) = Queries23.appendParts(spark, sfDir)
+      val (corpus, resident, arriving) = StoreQueries.appendParts(spark, sfDir)
       val idx = Similarity.PqIndex.trainCached(
-        Queries23.appendPqKey(sfDir), resident, "e", m = 8, ksub = 16)
+        StoreQueries.appendPqKey(sfDir), resident, "e", m = 8, ksub = 16)
       val full = Similarity.pqTopK(
           corpus.filter(col("vec_id") % 10 === 0 && col("vec_id") < 500),
           corpus, "vec_id", "e", k = 5, index = idx,
@@ -440,7 +440,7 @@ object VerifyAssertions {
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
         .toSet
-      val store = Queries23.appendStore(spark, sfDir)
+      val store = StoreQueries.appendStore(spark, sfDir)
       def codeMap(df: DataFrame): Map[Long, Seq[Int]] =
         df.collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
       val loadedBatch = codeMap(spark.read.parquet(s"$store/codes.parquet")
@@ -468,8 +468,8 @@ object VerifyAssertions {
       def rows(df: DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
         .toSeq
-      val served = rows(Queries24.q202_ingest_loop(spark, sfDir))
-      val rebuilt = rows(Queries24.q202_rebuild(spark, sfDir))
+      val served = rows(StoreQueries.q202_ingest_loop(spark, sfDir))
+      val rebuilt = rows(StoreQueries.q202_rebuild(spark, sfDir))
       Check("ingest_loop_serve_equals_full_rebuild", "q202_ingest_loop",
         served.nonEmpty && served == rebuilt,
         s"served_rows=${served.size} rebuilt_rows=${rebuilt.size} " +
@@ -489,8 +489,8 @@ object VerifyAssertions {
       def rows(df: DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
         .toSeq
-      val served = rows(Queries25.q205_neardup_ingest_serve(spark, sfDir))
-      val rebuilt = rows(Queries25.q205_rebuild(spark, sfDir))
+      val served = rows(StoreQueries.q205_neardup_ingest_serve(spark, sfDir))
+      val rebuilt = rows(StoreQueries.q205_rebuild(spark, sfDir))
       Check("neardup_ingest_3appends_equal_full_rebuild",
         "q205_neardup_ingest_serve",
         served.nonEmpty && served == rebuilt,
@@ -516,7 +516,7 @@ object VerifyAssertions {
           Option(r.get(3)).map(_.asInstanceOf[Long])))
         .toSeq
       val mem = {
-        val (resident, batches) = Queries25.ingest2Parts(spark, sfDir)
+        val (resident, batches) = StoreQueries.ingest2Parts(spark, sfDir)
         val statuses = graft.operators.Dedup.nearDupAdmitLoop(
           resident, "id", "text", batches, "id", "text", threshold = 0.5)
         rows(statuses.zipWithIndex
@@ -525,7 +525,7 @@ object VerifyAssertions {
           .select(col("batch"), col("id"), col("status"), col("match_id"))
           .orderBy(col("batch"), col("id")))
       }
-      val store = rows(Queries26.q206_neardup_sig_store(spark, sfDir))
+      val store = rows(StoreQueries.q206_neardup_sig_store(spark, sfDir))
       Check("neardup_store_seeded_loop_equals_in_memory_loop",
         "q206_neardup_sig_store",
         mem.nonEmpty && store == mem,
@@ -550,8 +550,8 @@ object VerifyAssertions {
       def rows(df: DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
         .toSeq
-      val served = rows(Queries27.q209_ivf2_append_topk(spark, sfDir))
-      val rebuilt = rows(Queries27.q209_rebuild(spark, sfDir))
+      val served = rows(StoreQueries.q209_ivf2_append_topk(spark, sfDir))
+      val rebuilt = rows(StoreQueries.q209_rebuild(spark, sfDir))
       Check("ivf2_append_equals_full_rebuild", "q209_ivf2_append_topk",
         served.nonEmpty && served == rebuilt,
         s"served_rows=${served.size} rebuilt_rows=${rebuilt.size} " +
@@ -570,8 +570,8 @@ object VerifyAssertions {
       def rows(df: DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
         .toSeq
-      val streamed = rows(Queries28.q212_ivf2_stream_topk(spark, sfDir))
-      val batch = rows(Queries27.q209_ivf2_append_topk(spark, sfDir))
+      val streamed = rows(StoreQueries.q212_ivf2_stream_topk(spark, sfDir))
+      val batch = rows(StoreQueries.q209_ivf2_append_topk(spark, sfDir))
       Check("ivf2_stream_append_equals_batch_append",
         "q212_ivf2_stream_topk",
         streamed.nonEmpty && streamed == batch,

@@ -136,8 +136,9 @@ object CsvLineParser {
     try detectEncoding(in.readNBytes(8192)) finally in.close()
   }
 
-  /** Parse one CSV record (no embedded newlines) into fields. */
-  def parseLine(line: String, sep: Char, quote: Char): Array[String] = {
+  /** Parse one CSV record (no embedded newlines) into fields; `sep` may be
+    * longer than one character. */
+  def parseLine(line: String, sep: String, quote: Char): Array[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     val cur = new StringBuilder
     var inQ = false
@@ -152,7 +153,9 @@ object CsvLineParser {
         } else cur.append(c)
       } else {
         if (c == quote && cur.isEmpty) inQ = true
-        else if (c == sep) { out += cur.result(); cur.clear() }
+        else if (line.startsWith(sep, i)) {
+          out += cur.result(); cur.clear(); i += sep.length - 1
+        }
         else cur.append(c)
       }
       i += 1
@@ -170,7 +173,7 @@ object CsvLineParser {
     val rows = sample.filter(_.nonEmpty).take(10)
     if (rows.isEmpty) return None
     val scored = candidates.map { c =>
-      val counts = rows.map(r => parseLine(r, c, quote).length)
+      val counts = rows.map(r => parseLine(r, c.toString, quote).length)
       val avg = counts.sum.toDouble / counts.length
       val mode = counts.groupBy(identity).maxBy(_._2.length)._1
       val consistency = counts.count(_ == mode).toDouble / counts.length

@@ -163,10 +163,6 @@ object CsvReader {
         opts0.copy(encoding =
           Some(CsvLineParser.detectFileEncoding(stripScheme(path))))
       else opts0
-    // Spark 4 whitelists CSV charsets (utf-8/16/32, iso-8859-1, us-ascii);
-    // the reference's windows-1252 heuristic needs the full Java set
-    opts.encoding.foreach(_ =>
-      spark.conf.set("spark.sql.legacy.javaCharsets", "true"))
     val linePathOpts = Seq(
       "skipFirstNLines" -> (opts.skipFirstNLines > 0),
       "fromLine" -> (opts.fromLine > 0),
@@ -190,6 +186,13 @@ object CsvReader {
       filePath(spark, path, opts)
     else linePathFile(spark, path, opts)
   }
+
+  /** Scan settings for `opts`' charset: Spark 4 whitelists CSV charsets
+    * (utf-8/16/32, iso-8859-1, us-ascii); the reference's windows-1252
+    * heuristic needs the full Java set. Set on the scan's private session
+    * ([[sized]]), never on the caller's. */
+  private def charsetConf(opts: CsvOptions): Map[String, String] =
+    opts.encoding.map(_ => "spark.sql.legacy.javaCharsets" -> "true").toMap
 
   /** The line path over the file at `path`. */
   private def linePathFile(spark: SparkSession, path: String,
@@ -398,7 +401,7 @@ object CsvReader {
           .option("lineSep", "\n")
           .schema(StructType(Seq(StructField("line", StringType))))
           .option("sep", "\u0001").option("quote", "\u0000")
-          .csv(path))
+          .csv(path), charsetConf(opts))
           .select(regexp_replace(col("line"), "\r$", "").as("line"))
       case _ => textLines(spark, path)
     }
@@ -599,7 +602,7 @@ object CsvReader {
       firstLine: Option[String], sep: String, opts: CsvOptions): Seq[String] = {
     firstLine match {
       case Some(h) if opts.header =>
-        val raw = CsvLineParser.parseLine(h, sep.head, opts.quote.head)
+        val raw = CsvLineParser.parseLine(h, sep, opts.quote.head)
         val named = raw.zipWithIndex.map { case (n, i) =>
           val base = if (n == null || n.isEmpty) s"col$i" else n
           opts.transformHeader.map(f => f(base, i)).getOrElse(base)
@@ -613,7 +616,7 @@ object CsvReader {
           named.toSeq
         }
       case Some(l) =>
-        val n = CsvLineParser.parseLine(l, sep.head, opts.quote.head).length
+        val n = CsvLineParser.parseLine(l, sep, opts.quote.head).length
         (0 until n).map(i => s"col$i")
       case None => Seq.empty
     }
@@ -666,8 +669,10 @@ object CsvReader {
         CsvScanFormat.SkipEmptyLines -> opts.skipEmptyLines) ++
       opts.comments.map(CsvScanFormat.CommentPrefix -> _) ++
       opts.encoding.map("encoding" -> _)
+    val sqlConf = spark.sessionState.conf.clone()
+    charsetConf(opts).foreach { case (k, v) => sqlConf.setConfString(k, v) }
     if (opts.comments.exists(_.length > 1) && !CsvScanFormat.serves(
-        CsvScanFormat.csvOptions(readerOpts, spark.sessionState.conf)))
+        CsvScanFormat.csvOptions(readerOpts, sqlConf)))
       // outside the tokenizer's shapes a comment is Spark's, one character
       if (opts.multiLine)
         throw new IllegalArgumentException(
@@ -679,9 +684,9 @@ object CsvReader {
     // Spark's CSV column pruning parses only the columns a query needs and
     // then never flags a malformed row: the strict filter below would keep
     // ragged rows under count(). Off for this scan, on its private session.
-    val scanConf =
-      if (strict) Map(SQLConf.CSV_PARSER_COLUMN_PRUNING.key -> "false")
-      else Map.empty[String, String]
+    val scanConf = charsetConf(opts) ++
+      (if (strict) Map(SQLConf.CSV_PARSER_COLUMN_PRUNING.key -> "false")
+      else Map.empty[String, String])
     // a multiLine file is one unsplittable split anyway
     val parsed0 = sized(spark, reader.csv(path), scanConf, split = !opts.multiLine)
     val n = headers.length
@@ -880,7 +885,7 @@ object CsvReader {
           (col("__fc") > n && opts.relaxColumnCountMore)
       else lit(true)
 
-    val outCols = headers.map(col) ++
+    val outCols = headers.map(h => col(s"`$h`")) ++
       (if (opts.relaxColumnCountMore) Seq(col("__parsed_extra")) else Nil) ++
       Seq(col(LineNo))
     val result = withExtra.filter(keepPred).select(outCols: _*)
@@ -961,8 +966,10 @@ object CsvReader {
     */
   private def inferTypes(df: DataFrame, headers: Seq[String]): DataFrame = {
     val k = headers.length
+    // quoted: a header such as `a.b` is one column, not a field access
+    def column(h: String) = col(s"`$h`")
     val classes = df.select(headers.map(h =>
-      CsvExprs.csv_cell_class(df.sparkSession, col(h))): _*)
+      CsvExprs.csv_cell_class(df.sparkSession, column(h))): _*)
     val flags = classes.queryExecution.toRdd.mapPartitions { rows =>
       val acc = new Array[Int](k)
       rows.foreach { r =>
@@ -978,12 +985,12 @@ object CsvReader {
       def has(bit: Int) = (bits & bit) != 0
       // "" → null BEFORE the cast: reference rule, and an ANSI cast of ""
       // would throw
-      def nz = when(col(h) === "", lit(null)).otherwise(col(h))
+      def nz = when(column(h) === "", lit(null)).otherwise(column(h))
       if (has(CsvExprs.Present) && !has(CsvExprs.NotBoolean))
         nz.cast(BooleanType).as(h)
       else if (has(CsvExprs.Present) && !has(CsvExprs.NotNumeric))
         nz.cast(DoubleType).as(h)
-      else col(h)
+      else column(h)
     }
     val others = df.columns.filterNot(headers.contains).map(col)
     df.select(casts ++ others: _*)

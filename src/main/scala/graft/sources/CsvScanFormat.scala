@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.charset.{Charset, StandardCharsets}
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.Text
 import org.apache.spark.{SerializableWritable, TaskContext}
 import org.apache.spark.sql.SparkSession
@@ -51,6 +52,11 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 class CsvScanFormat extends CSVFileFormat {
 
+  override def isSplitable(sparkSession: SparkSession,
+      options: Map[String, String], path: Path): Boolean =
+    SQLConf.withExistingConf(sparkSession.sessionState.conf)(
+      super.isSplitable(sparkSession, options, path))
+
   override def buildReader(
       sparkSession: SparkSession,
       dataSchema: StructType,
@@ -65,8 +71,9 @@ class CsvScanFormat extends CSVFileFormat {
     val sqlConf = sparkSession.sessionState.conf
     val parsed = CsvScanFormat.csvOptions(options, sqlConf)
     val corrupt = parsed.columnNameOfCorruptRecord
-    def spark(opts: Map[String, String]) = super.buildReader(sparkSession,
-      dataSchema, partitionSchema, requiredSchema, filters, opts, hadoopConf)
+    def spark(opts: Map[String, String]) = SQLConf.withExistingConf(sqlConf)(
+      super.buildReader(sparkSession, dataSchema, partitionSchema,
+        requiredSchema, filters, opts, hadoopConf))
     // a scan of the corrupt-record column alone is Spark's error to raise
     if (requiredSchema.length == 1 && requiredSchema.head.name == corrupt)
       return spark(options)
@@ -126,11 +133,16 @@ object CsvScanFormat {
   val SkipEmptyLines = "graft.skipEmptyLines"
 
   /** Spark's `CSVOptions` for a relation's options, as `CSVFileFormat`
-    * builds them. */
+    * builds them, but under `conf`: `CSVOptions` checks its charset
+    * through `SQLConf.get`, and the relation's own session (which carries
+    * [[CsvReader]]'s scan settings) must decide, not the session that runs
+    * the query. `buildReader` and `isSplitable` run Spark's own builds
+    * under the relation's session for the same reason. */
   private[sources] def csvOptions(options: Map[String, String],
       conf: SQLConf): CSVOptions =
-    new CSVOptions(options, conf.csvColumnPruning, conf.sessionLocalTimeZone,
-      conf.columnNameOfCorruptRecord)
+    SQLConf.withExistingConf(conf)(new CSVOptions(options,
+      conf.csvColumnPruning, conf.sessionLocalTimeZone,
+      conf.columnNameOfCorruptRecord))
 
   private def asciiByte(c: Char): Boolean = c > 0 && c < 0x80
 

@@ -61,7 +61,7 @@ class AsOfJoinSpec extends SparkSpec {
       .select(col("event_id"), col("o_orderkey"))
       .collect().map(r => (r.getLong(0),
         if (r.isNullAt(1)) -1L else r.getLong(1))).toMap
-    val composed = Queries.q23_asof_join(spark, dir)
+    val composed = RelationalQueries.q23_asof_join(spark, dir)
       .select(col("event_id"), col("last_order"))
       .collect().map(r => (r.getLong(0),
         if (r.isNullAt(1)) -1L else r.getLong(1))).toMap

@@ -13,6 +13,31 @@ class CsvReaderSpec extends SparkSpec {
     val scan = CsvReader.read(spark, p)
     assert(scan.headers == Seq("name", "age", "city"))
     assert(rows(scan).toSet == Set(Seq("Alice", "30", "NYC"), Seq("Bob", "25", "LA")))
+    // a dotted header is one column, not a field access: file path,
+    // typed file path, line path and buffer
+    val dotted = "a.b,c\n1,x\n2,y\n"
+    val dp = writeTmp("dotted.csv", dotted)
+    for (o <- Seq(CsvOptions(), CsvOptions(dynamicTyping = true),
+        CsvOptions(relaxColumnCountMore = true));
+        s <- Seq(CsvReader.read(spark, dp, o),
+          CsvReader.readString(spark, dotted, o))) {
+      assert(s.headers == Seq("a.b", "c"))
+      assert(s.df.selectExpr("cast(`a.b` AS int)", "c").collect()
+        .map(r => (r.getInt(0), r.getString(1))).toSet == Set((1, "x"), (2, "y")))
+    }
+  }
+
+  test("a multi-character delimiter splits the header and the rows on " +
+      "the whole delimiter") {
+    val content = "a||b\n1||x\n2||y\n"
+    val p = writeTmp("multi.csv", content)
+    val opts = CsvOptions(delimiter = Some("||"))
+    for (s <- Seq(CsvReader.read(spark, p, opts),
+        CsvReader.readString(spark, content, opts))) {
+      assert(s.headers == Seq("a", "b"))
+      assert(rows(s).toSet == Set(Seq("1", "x"), Seq("2", "y")))
+      assert(s.errors.count() == 0)
+    }
   }
 
   test("quoted comma, escaped quotes, CRLF") {
@@ -182,7 +207,7 @@ class CsvReaderSpec extends SparkSpec {
   }
 
   test("driver line parser handles nested quotes") {
-    val f = CsvLineParser.parseLine("\"say \"\"hello, world\"\"\",x", ',', '"')
+    val f = CsvLineParser.parseLine("\"say \"\"hello, world\"\"\",x", ",", '"')
     assert(f.toSeq == Seq("say \"hello, world\"", "x"))
   }
 

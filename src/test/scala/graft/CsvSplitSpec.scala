@@ -26,10 +26,14 @@ class CsvSplitSpec extends SparkSpec {
 
   test("read leaves the caller's session conf exactly as found") {
     val f = writeTmp("big.csv", csvOf(cores * floor + 12345))
-    // read() itself sets this one for non-UTF-8 charsets
-    def conf = spark.conf.getAll - "spark.sql.legacy.javaCharsets"
+    // a windows-1252 read needs Spark's full Java charset set, on the
+    // scan's own session; clear it so an earlier suite's read on this
+    // shared session cannot hide a write to the caller's
+    spark.conf.unset("spark.sql.legacy.javaCharsets")
+    def conf = spark.conf.getAll
     val before = conf
-    val scans = shapes.map(CsvReader.read(spark, f, _))
+    val scans = (shapes :+ CsvOptions(encoding = Some("windows-1252")))
+      .map(CsvReader.read(spark, f, _))
     scans.foreach { s => s.df.count(); s.errors.count() }
     assert(conf == before)
     assert(scans.forall(s => (s.df.sparkSession eq spark) &&

@@ -45,11 +45,11 @@ class PlantResidueSpec extends SparkSpec {
   test("the q202, q204 and q210 corpora go through the guard") {
     val paths: Seq[(String, String => Unit)] = Seq(
       "q202 planted-duplicate offsets (+1e7/+2e7)" ->
-        (d => Queries24.ingestParts(spark, d): Unit),
+        (d => StoreQueries.ingestParts(spark, d): Unit),
       "q204 planted-duplicate offsets (+3e7/+4e7/+5e7)" ->
-        (d => Queries25.ingest2Parts(spark, d): Unit),
+        (d => StoreQueries.ingest2Parts(spark, d): Unit),
       "q210 planted-duplicate offsets (+6e7)" ->
-        (d => Queries27.spanCorpus(spark, d): Unit))
+        (d => DedupQueries.spanCorpus(spark, d): Unit))
     for ((msg, path) <- paths) {
       path(docsDir(1L, 2L, 3L))
       val e = intercept[IllegalArgumentException](

@@ -49,7 +49,7 @@ class Round24OpsSpec extends SparkSpec {
 
   test("q203 banded pairs == driver O(n²) brute force over the same " +
     "signatures, and every planted near-dup pair is recovered") {
-    val sigs = Queries24.imageSigs(spark, sf).collect()
+    val sigs = CurationQueries.imageSigs(spark, sf).collect()
       .map(r => (r.getLong(0), Seq(r.getInt(1), r.getInt(2),
         r.getInt(3), r.getInt(4))))
       .sortBy(_._1)
@@ -61,7 +61,7 @@ class Round24OpsSpec extends SparkSpec {
         .map { case (a, b) => Integer.bitCount(a ^ b) }.sum
       if h <= 3
     } yield (sigs(i)._1, sigs(j)._1, h)).toSet
-    val got = Queries24.q203_image_neardup(spark, sf).collect()
+    val got = CurationQueries.q203_image_neardup(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(got === brute,
       s"sym_diff=${(got diff brute).size + (brute diff got).size}")
@@ -85,7 +85,7 @@ class Round24OpsSpec extends SparkSpec {
       (13L, "epsilon"),
       (14L, "delta")        // in-batch dup of 11 → rejected
     ).toDF("id", "text")
-    val got = Queries24.admit(resident, arrivals).collect()
+    val got = StoreQueries.admit(resident, arrivals).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(got === Set((11L, "delta"), (12L, "epsilon")))
   }
@@ -95,8 +95,8 @@ class Round24OpsSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
       .toSeq
-    val served = rows(Queries24.q202_ingest_loop(spark, sf))
-    val rebuilt = rows(Queries24.q202_rebuild(spark, sf))
+    val served = rows(StoreQueries.q202_ingest_loop(spark, sf))
+    val rebuilt = rows(StoreQueries.q202_rebuild(spark, sf))
     assert(served.nonEmpty)
     assert(served === rebuilt)
   }
@@ -104,7 +104,7 @@ class Round24OpsSpec extends SparkSpec {
   test("q203 planted pairs have hamming <= 3 by construction (inside " +
     "the exact banding radius) and appear with nonzero hamming for " +
     "at least one pair (the perturbation does perturb)") {
-    val got = Queries24.q203_image_neardup(spark, sf).collect()
+    val got = CurationQueries.q203_image_neardup(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
     val planted = got.filter(p => p._2 % 17 == 3 && p._1 == p._2 - 1)
     assert(planted.nonEmpty)

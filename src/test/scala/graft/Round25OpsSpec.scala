@@ -278,7 +278,7 @@ class Round25OpsSpec extends SparkSpec {
       if d <= 3
     } yield (math.min(x._1, y._1), math.max(x._1, y._1), d)).toSet
     def got(combos: Boolean) =
-      Queries24.dhashPairs(sigs, forceCombos = Some(combos)).collect()
+      CurationQueries.dhashPairs(sigs, forceCombos = Some(combos)).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val fixed = got(combos = false)
     val scaled = got(combos = true)
