@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** Shared containment-0.6 relations for the q93/q165 pair — ONE build
   * per (process, sfDir), the [[NearDupGraph]] discipline applied to the
   * prefix-filter containment machinery: before this, q93
-  * (containmentPairsPrefix) and q165 (containmentSummary) each re-ran
-  * the identical heavy stages — per-doc surviving shingle sets
+  * (containmentPairsPrefix) and q165 (the per-doc containment verdict)
+  * each re-ran the identical heavy stages — per-doc surviving shingle sets
   * (explode + global-df join + sort_array(collect_list)), the
   * identical-set class window, and the pigeonhole candidate +
   * merge-scan verify over class representatives at

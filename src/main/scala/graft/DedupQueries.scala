@@ -24,8 +24,8 @@ object DedupQueries {
     * LSH-gated plan — candidates from MinHash banding, exact verification
     * per candidate — the shape that survives 100 TB; results are identical
     * to the ungated plans (band recall at 0.5 is 1-1e-8, and the oracle
-    * would catch any miss). jaccardPairsDense stays available as the
-    * dense-vocab kernel; jaccardPairs as the sparse ungated one.
+    * would catch any miss). [[Dedup.jaccardPairs]] stays available as
+    * the sparse ungated plan.
     */
   def q30_jaccard_pairs(s: SparkSession, dir: String): DataFrame =
     // r19: served from the shared per-process NearDupGraph build — the
@@ -274,13 +274,13 @@ object DedupQueries {
   /** Per-doc containment summary at the q93 threshold: is the doc the
     * smaller side of any pair with round(containment,4) >= 0.6, its best
     * score, and the containing partner (ties → smallest partner id) —
-    * see [[graft.operators.Dedup.containmentSummary]]. |docs| rows.
+    * see [[graft.operators.Dedup.containmentSummaryFrom]]. |docs| rows.
     */
   def q165_containment_summary(s: SparkSession, dir: String): DataFrame =
     // r19: served from the shared per-process ContainmentRel build
     // (see q93 — guide §2.4); only the class-level best aggregation
-    // and per-doc expansion run here. Output identical to the inline
-    // containmentSummary.
+    // and per-doc expansion run here. Output identical to building the
+    // same relations inline.
     Dedup.containmentSummaryFrom(Tables(s, dir, "documents"), "doc_id",
         ContainmentRel.docMap(s, dir), ContainmentRel.repPairs(s, dir),
         threshold = ContainmentRel.Threshold)

@@ -29,7 +29,4 @@ object GraftSession {
     functions.Kernels.register(spark)
     spark
   }
-
-  def create(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession =
-    init(builder(master, shufflePartitions).getOrCreate())
 }

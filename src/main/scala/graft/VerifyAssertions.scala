@@ -366,7 +366,6 @@ object VerifyAssertions {
     // cutoff row's capture == the captured-stage pct — both are
     // round6(cumPos/p) by construction — and funnel monotonicity).
     val q189 = {
-      import graft.operators.Classify
       val out = SparkEntry.queries("q189_curation_gate")(spark, sfDir)
         .collect().map(r => (r.getString(0), (r.getLong(1), r.getDouble(2))))
         .toMap

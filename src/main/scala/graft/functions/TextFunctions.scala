@@ -39,15 +39,12 @@ object TextFunctions {
     */
   def punctRatio(c: Column): Column = ratioOf(c, "[!-/:-@\\[-`{-~]")
   def digitRatio(c: Column): Column = ratioOf(c, "[0-9]")
-  def upperRatio(c: Column): Column = ratioOf(c, "[A-Z]")
-  def whitespaceRatio(c: Column): Column = ratioOf(c, "[ \\t\\n\\r]")
 
   val StopwordsEn: Seq[String] = Seq("the", "a", "an", "and", "of", "to", "in", "is")
 
   /** fraction of whitespace tokens that are (lowercased) English stopwords. */
   def stopwordRatio(c: Column): Column = {
     val toks = tokensWs(lower(c))
-    val stops = StopwordsEn.map(s => s"'$s'").mkString(", ")
     val nStop = size(filter(toks, t => t.isin(StopwordsEn.map(x => x: Any): _*)))
     when(size(toks) === 0, 0.0d).otherwise(nStop.cast("double") / size(toks))
   }
@@ -58,7 +55,8 @@ object TextFunctions {
     */
   def qualityScore(c: Column): Column = TextExprs.quality_score(c)
 
-  /** language-ID by stopword voting (n-gram-free heuristic; deterministic
+  /** Stopword markers for language-ID by stopword voting (n-gram-free
+    * heuristic, scored by [[TextExprs.LangMarkerScores]]; deterministic
     * argmax with fixed priority en > de > fr > es on ties).
     */
   val LangMarkers: Seq[(String, Seq[String])] = Seq(
@@ -66,14 +64,6 @@ object TextFunctions {
     "de" -> Seq("der", "die", "das", "und", "ist"),
     "fr" -> Seq("le", "et", "est", "une", "dans"),
     "es" -> Seq("el", "y", "es", "una", "en"))
-
-  def langScores(c: Column): Map[String, Column] =
-    langScoresFromTokens(tokensWs(lower(c)))
-
-  def langScoresFromTokens(toks: Column): Map[String, Column] =
-    LangMarkers.toMap.map { case (lang, words) =>
-      lang -> size(filter(toks, t => t.isin(words.map(x => x: Any): _*)))
-    }
 
   /** argmax over score COLUMNS (callers should materialize the token array
     * and scores in a prior projection — inlining them here would re-split
@@ -84,14 +74,6 @@ object TextFunctions {
       .when(de >= fr && de >= es, "de")
       .when(fr >= es, "fr")
       .otherwise("es")
-
-  def langId(c: Column): Column = {
-    // single-pass byte scan (TextExprs) — identical scores to the
-    // langScores HOF pipeline, measured ~10× cheaper per document
-    val sc = TextExprs.lang_marker_scores(lower(c))
-    langIdFromScores(element_at(sc, 1), element_at(sc, 2),
-      element_at(sc, 3), element_at(sc, 4))
-  }
 
   /** canonical text normalization for fingerprinting/dedup: lowercase,
     * collapse whitespace, strip non-alphanumeric (keeps spaces).
@@ -140,16 +122,6 @@ object TextFunctions {
         i => concat_ws(" ", slice(toks, i, lit(k)))))
   }
 
-  /** distinct word k-shingles ("w1 w2 w3" strings) of the raw text. */
-  def wordShingles(c: Column, k: Int): Column = {
-    val toks = tokensWs(c)
-    val n = size(toks)
-    array_distinct(
-      when(n < k, array().cast("array<string>"))
-        .otherwise(transform(sequence(lit(1), n - (k - 1)),
-          i => concat_ws(" ", slice(toks, i, lit(k))))))
-  }
-
   /** Within-document n-gram repetition ratio:
     * 1 − distinct(ngrams)/total(ngrams) — the Gopher-style repetition
     * quality signal (0 = no repeated n-gram, → 1 as the doc degenerates
@@ -178,14 +150,5 @@ object TextFunctions {
         val p = size(filter(toks, t => t === w)).cast("double") / n
         acc + p * log(p)
       }))
-  }
-
-  /** distinct character k-shingles of the normalized text. */
-  def charShingles(c: Column, k: Int): Column = {
-    val s = normalizeText(c)
-    array_distinct(
-      when(length(s) < k, array().cast("array<string>"))
-        .otherwise(transform(sequence(lit(1), length(s) - (k - 1)),
-          i => s.substr(i, lit(k)))))
   }
 }

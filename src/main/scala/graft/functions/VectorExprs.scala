@@ -111,75 +111,6 @@ object VectorExprs {
       copy(child = newChild)
   }
 
-  /** |A ∩ B| of two bitsets stored as array<long>: Σ popcount(a_i & b_i).
-    * The dense-set-similarity kernel: one pair compare = (nbits/64) ANDs +
-    * popcounts, no hashing, no allocation (see Dedup.jaccardPairsDense).
-    */
-  case class BitsetIntersectCount(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def prettyName: String = "bitset_inter"
-    override def dataType: DataType = org.apache.spark.sql.types.LongType
-
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
-      val n = math.min(x.numElements(), y.numElements())
-      var s = 0L
-      var i = 0
-      while (i < n) { s += java.lang.Long.bitCount(x.getLong(i) & y.getLong(i)); i += 1 }
-      s
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val n = ctx.freshName("n")
-        val i = ctx.freshName("i")
-        val s = ctx.freshName("s")
-        s"""
-          int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-          long $s = 0L;
-          for (int $i = 0; $i < $n; $i++) {
-            $s += java.lang.Long.bitCount($a.getLong($i) & $b.getLong($i));
-          }
-          ${ev.value} = $s;
-        """
-      })
-
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
-  }
-
-  /** bitset_pack(indices) → array<long>: set bit i for every element of the
-    * input array<int> of bit positions. Sized to the row's own max index —
-    * valid for intersection popcounts because a bit shared by two docs has
-    * the same dictionary index in both, hence lies within min(len_a, len_b),
-    * exactly the prefix [[BitsetIntersectCount]] scans. Runs once per DOC
-    * (not per pair), so interpreted eval is fine.
-    */
-  case class BitsetPack(child: Expression)
-      extends UnaryExpression
-      with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-    override def prettyName: String = "bitset_pack"
-    override def dataType: DataType =
-      ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
-
-    override def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      val n = arr.numElements()
-      var max = -1
-      var i = 0
-      while (i < n) { val v = arr.getInt(i); if (v > max) max = v; i += 1 }
-      val out = new Array[Long]((max >> 6) + 1)
-      i = 0
-      while (i < n) { val v = arr.getInt(i); out(v >> 6) |= (1L << (v & 63)); i += 1 }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-    }
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
   /** |A ∩ B| of two SORTED-ascending distinct array<long> sets, counted by
     * a single merge scan — no hashing, no intermediate array (built-in
     * `size(array_intersect(a, b))` builds a hash set + result array per
@@ -317,7 +248,7 @@ object VectorExprs {
     * (~500M unboxings for 55k rows × 144 planes — measured 10-12 s);
     * this primitive-array loop does the same work in well under a
     * second. Runs once per ROW, so interpreted eval is fine
-    * (CodegenFallback like [[BitsetPack]]).
+    * (CodegenFallback).
     */
   case class LshBands(child: Expression, planesPerBand: Int, bands: Int,
       dim: Int, seed: Long)
@@ -652,8 +583,6 @@ object VectorExprs {
     Seq(
       "vec_dot" -> (e => DotProduct(e(0), e(1))),
       "vec_l2norm" -> (e => L2Norm(e.head)),
-      "bitset_inter" -> (e => BitsetIntersectCount(e(0), e(1))),
-      "bitset_pack" -> (e => BitsetPack(e.head)),
       "sorted_inter_count" -> (e => SortedInterCount(e(0), e(1))),
       "vec_q8" -> (e => VecQuantize(e(0), e(1))),
       "vec_dot_q8" -> (e => DotQ8(e(0), e(1))),
@@ -673,12 +602,6 @@ object VectorExprs {
       kChild: Int): Column =
     Kernels.call("ivf2_lists", vec, lit(supFlat), lit(childFlat),
       lit(nsup), lit(kSup), lit(kChild))
-
-  def bitset_pack(indices: Column): Column =
-    Kernels.call("bitset_pack", indices)
-
-  def bitset_inter(a: Column, b: Column): Column =
-    Kernels.call("bitset_inter", a, b)
 
   def vec_dot(a: Column, b: Column): Column = Kernels.call("vec_dot", a, b)
 

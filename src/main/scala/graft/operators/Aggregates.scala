@@ -67,14 +67,6 @@ object Aggregates {
     df.groupBy(col(groupCol)).agg(cols.head, cols.tail: _*)
   }
 
-  /** Multi-column grouping (extension; the reference supports exactly one
-    * grouping column — SURVEY.md §2.4).
-    */
-  def groupByAggMulti(df: DataFrame, groupCols: Seq[String], specs: Seq[AggSpec]): DataFrame = {
-    val cols = specs.map(s => aggColumn(s.inCol, s.fn).as(s.outName))
-    df.groupBy(groupCols.map(col): _*).agg(cols.head, cols.tail: _*)
-  }
-
   /** Custom aggregate closure over the group's value array — the
     * reference's `{col, fn: values => any}` spec (dataframe.ts:40-44,
     * 281-283). The group's values are collected (same materialization the

@@ -147,20 +147,6 @@ object Dedup {
 
   // ---------------------------------------------------------------- minhash
 
-  /** MinHash signatures: one row per doc with an array<long> `sig` column.
-    * Computed per ROW by [[graft.functions.SketchExprs.MinHashArray]] — a
-    * pure map over the corpus, NO explode and NO shuffle (an
-    * explode+groupBy formulation shuffles |docs|×|shingles| rows).
-    */
-  def minhashSignatures(
-      df: DataFrame, idCol: String, textCol: String,
-      shingleWords: Int = 3, numHashes: Int = 128): DataFrame =
-    df.select(col(idCol),
-      graft.functions.SketchExprs.minhash_array(
-        graft.functions.SketchExprs.shingle_hashes(
-          TextFunctions.tokensWs(col(textCol)), shingleWords), numHashes)
-        .as("sig"))
-
   /** LSH candidate pairs from signatures: band the signature
     * (bands × rowsPerBand = numHashes), hash each band, self-join per
     * (band, bandHash) bucket. Returns (id_a, id_b) with id_a < id_b.
@@ -244,12 +230,12 @@ object Dedup {
     * side of a cross-table band join, localCheckpointed: each side feeds
     * a band branch and a verify branch with DIFFERENT column sets, so
     * after pruning the subtrees aren't identical and ReusedExchange
-    * can't share them — the checkpoint materializes the scan once (same
-    * pattern as jaccardPairsDense). Docs shorter than shingleWords have
-    * NO shingles: they can never reach a positive Jaccard, but their
-    * all-sentinel minhash signatures would band-collide with EVERY other
-    * empty doc and 0/0 division yields NaN — which Spark orders ABOVE
-    * every number, so `NaN >= threshold` would pass. Drop them up front.
+    * can't share them — the checkpoint materializes the scan once. Docs
+    * shorter than shingleWords have NO shingles: they can never reach a
+    * positive Jaccard, but their all-sentinel minhash signatures would
+    * band-collide with EVERY other empty doc and 0/0 division yields
+    * NaN — which Spark orders ABOVE every number, so `NaN >= threshold`
+    * would pass. Drop them up front.
     * DISK_ONLY checkpoint: the relation carries corpus-sized `__sh`
     * shingle-hash arrays, and the default MEMORY_AND_DISK unroll
     * heap-buffers each partition first (the r13 unroll-OOM class) —
@@ -364,7 +350,7 @@ object Dedup {
   private def shinglePairStats(
       df: DataFrame, idCol: String, textCol: String,
       shingleWords: Int, candidates: Option[DataFrame],
-      maxShingleDf: Int = DefaultMaxShingleDf): DataFrame = {
+      maxShingleDf: Int): DataFrame = {
     val sh = df.select(col(idCol).as("id"),
       graft.functions.SketchExprs.shingle_hashes(
         TextFunctions.tokensWs(col(textCol)), shingleWords).as("shingles"))
@@ -513,27 +499,13 @@ object Dedup {
     * representative, so class-level comparison loses nothing.
     * Requires `idCol` unique per document (the corpus contract; a
     * duplicated id would merge two docs' verdicts).
-    */
-  def containmentSummary(
-      df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, shingleWords: Int = 3,
-      maxShingleDf: Int = DefaultMaxShingleDf): DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      "threshold must be in (0, 1] (at 0 every co-shingled pair qualifies)")
-    val docMap = perDocSetsWithClasses(df, idCol, textCol, shingleWords,
-        maxShingleDf)
-      .localCheckpoint() // consumers: reps machinery + both expansions
-    containmentSummaryFrom(df, idCol, docMap,
-      repPairsFromDocMap(docMap, alphaCoef = threshold - 1e-4), threshold)
-  }
-
-  /** The [[containmentSummary]] tail over PREBUILT relations — `docMap`
-    * needs (id, __rep, __m, __second) (the [[perDocSetsWithClasses]]
-    * columns minus __byRarity, which only the pair machinery reads) and
-    * `repPairs` is [[repPairsFromDocMap]] output at
-    * alphaCoef = threshold − 1e-4. Lets [[graft.ContainmentRel]] serve
-    * q93 and q165 from ONE per-process build; output is identical to
-    * the inline form (same relations, same operations).
+    *
+    * Runs over PREBUILT relations: `docMap` needs (id, __rep, __m,
+    * __second) (the [[perDocSetsWithClasses]] columns minus __byRarity,
+    * which only the pair machinery reads) and `repPairs` is
+    * [[repPairsFromDocMap]] output at alphaCoef = threshold − 1e-4, so
+    * [[graft.ContainmentRel]] serves q93 and q165 from ONE per-process
+    * build.
     */
   private[graft] def containmentSummaryFrom(
       df: DataFrame, idCol: String, docMap: DataFrame,
@@ -579,33 +551,8 @@ object Dedup {
         col("__p").as("container_id"))
   }
 
-  /** EXACT Jaccard pairs via the same prefix filter — identical output
-    * to [[jaccardPairs]] with candidate-proportional work. The overlap
-    * bound on the smaller set S of a qualifying pair: J = i/(a+b−i) ≥ t
-    * with b ≥ a = |S| gives i ≥ t(a+b)/(1+t) ≥ 2t/(1+t)·a, so S must
-    * share one of its (a − ceil(2t/(1+t)·a) + 1) rarest shingles with
-    * the partner — the [[containmentPairsPrefix]] pigeonhole with a
-    * tighter coefficient (recall exactly 1, NOT probabilistic;
-    * [[jaccardPairsLsh]] remains the probabilistic-gate alternative
-    * whose verify set is smaller when a ~1e-8 miss rate is acceptable).
-    */
-  def jaccardPairsPrefix(
-      df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, shingleWords: Int = 3,
-      maxShingleDf: Int = DefaultMaxShingleDf): DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      "threshold must be in (0, 1] (at 0 every co-shingled pair qualifies)")
-    val t = threshold - 1e-4
-    prefixPairStats(df, idCol, textCol, shingleWords, maxShingleDf,
-        alphaCoef = 2 * t / (1 + t))
-      .select(col("id_a"), col("id_b"), col("inter"),
-        round(col("inter").cast("double") /
-          (col("n_a") + col("n_b") - col("inter")), 4).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
-
   /** Shared prefix-filter pair machinery (the pigeonhole candidate
-    * stage under [[containmentPairsPrefix]] / [[jaccardPairsPrefix]]):
+    * stage under [[containmentPairsPrefix]]):
     * returns (id_a, id_b, inter, n_a, n_b) for every pair whose smaller
     * set shares ≥ ceil(alphaCoef · |S|) shingles with the larger —
     * superset of any score whose overlap bound is alphaCoef·min.
@@ -726,7 +673,8 @@ object Dedup {
 
   /** The pigeonhole candidate + exact-verify stage over PREPARED sets
     * ((id, __n, __byRarity) rows — [[perDocSets]] output, or the
-    * class-representative subset [[containmentSummary]] collapses to).
+    * class-representative subset [[containmentSummaryFrom]] collapses
+    * to).
     */
   private def prefixPairsFromSets(sets: DataFrame,
       alphaCoef: Double): DataFrame = {
@@ -832,102 +780,6 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** Exact Jaccard for the DENSE regime — when the shingle vocabulary is
-    * small relative to the corpus (every shingle appears in many docs), the
-    * explode-self-join plan above degenerates to |vocab|·df² intermediate
-    * pairs (measured 28 s vs DuckDB's 2.5 s at sf0.1). This plan instead,
-    * fully distributed (no driver-side materialization):
-    *   1. dictionary-encodes distinct shingle hashes to dense bit indices —
-    *      distinct + row_number (single-partition window over the VOCAB
-    *      only, broadcast-sized by the regime's premise), broadcast-joined
-    *      back onto the exploded shingles;
-    *   2. packs each doc's shingle set into an array<long> bitmap in ONE
-    *      groupBy(id) agg (bitmaps sized to the doc's own max index —
-    *      correct for intersections, which live in the common prefix);
-    *   3. compares pairs with the codegen popcount(AND) kernel INSIDE the
-    *      broadcast-nested-loop join condition, so pairs below the
-    *      threshold are filtered during the loop and never materialize a
-    *      joined row (materializing both bitmaps into every pair row was
-    *      measured at 32 s vs ~2 s at sf0.1).
-    * All-pairs compare is O(n²·vocab/64) bit-ops; gate behind LSH
-    * candidates when n² itself is the problem (see [[jaccardPairsLsh]]).
-    * For threshold > 0 (required) results are EXACTLY the sparse plan's
-    * (same hash space); at threshold ≤ 0 the plans diverge — the sparse
-    * explode-join never emits inter=0 pairs, this kernel would.
-    */
-  def jaccardPairsDense(
-      df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, shingleWords: Int = 3): DataFrame = {
-    require(threshold > 0,
-      "jaccardPairsDense emits only positive-jaccard pairs (sparse-plan parity)")
-    val spark = df.sparkSession
-    import graft.functions.VectorExprs
-
-    // 1. distributed shingle-hash (distinct per doc by ShingleHashes) and
-    //    dictionary-encode. Docs with zero shingles drop out here — they
-    //    cannot reach any positive threshold (jaccard would be 0 or 0/0).
-    // id keeps its original type: an ANSI cast would throw on string ids
-    // (and silently normalize numeric-looking ones), breaking the
-    // documented sparse-plan parity
-    val ex = df.select(col(idCol).as("id"),
-        explode(graft.functions.SketchExprs.shingle_hashes(
-          TextFunctions.tokensWs(col(textCol)), shingleWords)).as("h"))
-    // dictionary-encode via zipWithIndex: ANY bijection hash→[0,vocab)
-    // packs correctly, so no ordered window is needed — the former
-    // row_number() OVER (ORDER BY h) pulled the whole distinct-hash
-    // dictionary (corpus-scale vocab) through ONE partition. The two
-    // zipWithIndex jobs reuse the distinct's shuffle files (same RDD
-    // lineage), and the broadcast below collects the result exactly
-    // once, so all docs see one consistent dictionary.
-    val dict = {
-      val distinctH = ex.select(col("h")).distinct()
-      val indexed = distinctH.rdd.zipWithIndex().map { case (r, i) =>
-        org.apache.spark.sql.Row(r.getLong(0), i.toInt)
-      }
-      spark.createDataFrame(indexed, org.apache.spark.sql.types.StructType(
-        Seq(org.apache.spark.sql.types.StructField("h",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("idx",
-            org.apache.spark.sql.types.IntegerType, nullable = false))))
-    }
-
-    // 2. bitmap pack: one broadcast hash join + one hash aggregation.
-    //    localCheckpoint materializes it ONCE — it feeds both the streamed
-    //    and the broadcast side of the BNL join below, and the broadcast
-    //    exchange cannot reuse the streamed side's shuffle, so without the
-    //    checkpoint the whole shingle pipeline executes twice per run.
-    val packed = ex.join(broadcast(dict), "h")
-      .groupBy(col("id"))
-      .agg(count(lit(1)).as("n"),
-        VectorExprs.bitset_pack(collect_list(col("idx"))).as("bs"))
-      .localCheckpoint()
-
-    // 3. O(n²) popcount loop as a BNL join with the kernel in the join
-    //    condition. Explicit repartition (a fixed number, which AQE
-    //    honors) spreads the streamed side across cores — the groupBy
-    //    output would otherwise be AQE-coalesced to one partition.
-    val par = spark.sparkContext.defaultParallelism * 2
-    val a = packed.select(col("id").as("id_a"), col("n").as("n_a"),
-      col("bs").as("bs_a")).repartition(par)
-    val b = packed.select(col("id").as("id_b"), col("n").as("n_b"),
-      col("bs").as("bs_b"))
-    val inter = VectorExprs.bitset_inter(col("bs_a"), col("bs_b"))
-    // HALF_UP round to 4, matching the sparse plan and the DuckDB oracle
-    val jac = round(inter.cast("double") / (col("n_a") + col("n_b") - inter), 4)
-    // The hot-loop condition references the popcount kernel ONCE: the
-    // threshold test j >= t' is algebraically I·(1+t') >= t'·(n_a+n_b),
-    // with t' backed off by the HALF_UP margin (round(j,4) >= t ⟹
-    // j >= t - 0.00005) so the exact rounded filter below sees every
-    // boundary pair. Survivors (tiny) re-evaluate the kernel in the
-    // projection + final filter — negligible vs 3 evals per PAIR.
-    val tPre = threshold - 0.00005
-    a.join(broadcast(b), col("id_a") < col("id_b") &&
-        inter.cast("double") * lit(1.0 + tPre) >=
-          lit(tPre) * (col("n_a") + col("n_b")))
-      .select(col("id_a"), col("id_b"), inter.as("inter"), jac.as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
-
   // ---------------------------------------------------------------- simhash
 
   /** 64-bit SimHash over whitespace tokens: per-token hash, each bit votes
@@ -996,14 +848,14 @@ object Dedup {
     * finish with one driver union-find — the standard local endgame of
     * distributed CC once the graph fits (near-dup graphs: a few edges per
     * million docs). At 100 TB the same loop runs with cluster checkpoints;
-    * for adversarially long chains use [[connectedComponentsStar]], which
-    * converges in O(log n) rounds.
+    * it needs O(diameter) rounds, so a chain longer than `maxIter` above
+    * the local limit fails loudly rather than labelling partially.
     */
   def connectedComponents(
       vertices: DataFrame, idCol: String,
       pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 50, localEdgeLimit: Long = 1000000L): DataFrame = {
-    // Vertex-set contract (same as the star variant): ids appearing only in
+    // Vertex-set contract: ids appearing only in
     // `pairs` neither relay connectivity nor become labels. Restricting
     // edges to V×V up front preserves that AND shrinks the loop: the
     // iteration runs over edge-INCIDENT vertices only (near-dup graphs:
@@ -1116,99 +968,6 @@ object Dedup {
     require(converged, s"connectedComponents did not converge in $maxIter rounds")
     vertices.select(col(idCol).as("id"))
       .join(labels.withColumnRenamed("comp", "__c"), Seq("id"), "left")
-      .select(col("id"), coalesce(col("__c"), col("id")).as("comp"))
-  }
-
-  /** Connected components by ALTERNATING large-star / small-star rounds
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    * converges in O(log n) rounds regardless of graph diameter, where
-    * plain min-label propagation ([[connectedComponents]]) needs
-    * O(diameter). Use this when components can be deep chains; the
-    * propagation variant wins on the shallow clusters near-dup graphs
-    * produce.
-    *
-    * Each round is two groupBy+join passes over the edge list:
-    *  - large-star: every neighbor v > u of node u re-attaches to
-    *    m = min(N(u) ∪ u);
-    *  - small-star: every smaller neighbor (and u itself) re-attaches to
-    *    the minimum of u's smaller neighborhood.
-    * The edge list contracts toward star graphs rooted at component
-    * minima; the fixpoint is detected by an order-insensitive hash+count
-    * signature of the edge set.
-    */
-  def connectedComponentsStar(
-      vertices: DataFrame, idCol: String,
-      pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 30): DataFrame = {
-    // restrict edges to the vertex set FIRST: like the propagation
-    // variant, ids appearing only in `pairs` neither relay connectivity
-    // nor become labels (otherwise a non-vertex id could label a cluster
-    // and no row would satisfy the id == comp keep-selection)
-    val vset = vertices.select(col(idCol).as("__vid")).distinct()
-    // canonical undirected edges, self-loops dropped
-    var e = pairs
-      .select(least(col(aCol), col(bCol)).as("u"),
-        greatest(col(aCol), col(bCol)).as("v"))
-      .filter(col("u") =!= col("v"))
-      .join(vset, col("u") === col("__vid")).drop("__vid")
-      .join(vset, col("v") === col("__vid")).drop("__vid")
-      .distinct()
-      .localCheckpoint()
-
-    def signature(edges: DataFrame): (Long, Long) = {
-      // bit_xor: order-insensitive and overflow-free (ANSI sum of hashes
-      // throws on long overflow)
-      val r = edges.agg(
-        count(lit(1)).as("n"),
-        coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)).as("h")).head()
-      (r.getLong(0), r.getLong(1))
-    }
-
-    var sig = signature(e)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      // ---- large-star: (v, m) for v ∈ N(u), v > u; m = min(N(u) ∪ u)
-      val both = e.select(col("u"), col("v"))
-        .union(e.select(col("v").as("u"), col("u").as("v")))
-      val mins = both.groupBy(col("u"))
-        .agg(least(min(col("v")), first(col("u"))).as("m"))
-      val large = both.join(mins, "u")
-        .filter(col("v") > col("u"))
-        .select(least(col("v"), col("m")).as("u"),
-          greatest(col("v"), col("m")).as("v"))
-      // ---- small-star on the large-star output: group by the LARGER
-      // endpoint U; every smaller neighbor and U attach to min(N(U)).
-      // large-star output has u < v strictly (m = min(N(u) ∪ u) ≤ u < v),
-      // so no self-loop filter is needed. Checkpoint before branching —
-      // `canon` feeds the groupBy AND the join (the plan-branch
-      // re-execution trap).
-      val canon = large.distinct()
-        .select(col("v").as("bu"), col("u").as("bv")) // bu > bv
-        .localCheckpoint()
-      val smallMins = canon.groupBy(col("bu")).agg(min(col("bv")).as("m"))
-      val small = canon.join(smallMins, "bu")
-        // one pass: each joined row re-attaches BOTH endpoints to m
-        .select(explode(array(col("bv"), col("bu"))).as("x"), col("m"))
-        .filter(col("x") =!= col("m"))
-        .select(least(col("x"), col("m")).as("u"),
-          greatest(col("x"), col("m")).as("v"))
-        .distinct()
-        .localCheckpoint()
-      val nextSig = signature(small)
-      converged = nextSig == sig
-      sig = nextSig
-      e = small
-      i += 1
-    }
-    require(converged, s"connectedComponentsStar did not converge in $maxIter rounds")
-    // final edges are stars (v, componentMin): comp = min over attached
-    // roots; untouched vertices are their own component
-    val comp = e.select(col("v").as("id"), col("u").as("c"))
-      .union(e.select(col("u").as("id"), col("u").as("c")))
-      .groupBy(col("id")).agg(min(col("c")).as("__c"))
-    vertices.select(col(idCol).as("id"))
-      .join(comp, Seq("id"), "left")
       .select(col("id"), coalesce(col("__c"), col("id")).as("comp"))
   }
 

@@ -141,20 +141,9 @@ object Multimodal {
 
   /** Encode an RGB top-down raster as PNG via `javax.imageio` — the
     * lossless fixture generator for [[decodeImageIo]] (PNG round trips
-    * exactly; JPEG fixtures use [[encodeJpeg]] and assert decode
-    * determinism, not round-trip equality).
+    * exactly).
     */
-  def encodePng(w: Int, h: Int, rgb: Array[Byte]): Array[Byte] =
-    encodeViaImageIo(w, h, rgb, "png")
-
-  /** Encode an RGB top-down raster as JPEG via `javax.imageio` (lossy —
-    * see [[encodePng]] for the round-trip-exact fixture path).
-    */
-  def encodeJpeg(w: Int, h: Int, rgb: Array[Byte]): Array[Byte] =
-    encodeViaImageIo(w, h, rgb, "jpg")
-
-  private def encodeViaImageIo(w: Int, h: Int, rgb: Array[Byte],
-      format: String): Array[Byte] = {
+  def encodePng(w: Int, h: Int, rgb: Array[Byte]): Array[Byte] = {
     require(w > 0 && h > 0 && rgb.length == w * h * 3,
       s"need $w x $h x 3 = ${w * h * 3} bytes, got ${rgb.length}")
     val img = new java.awt.image.BufferedImage(w, h,
@@ -167,8 +156,8 @@ object Multimodal {
       i += 1
     }
     val baos = new java.io.ByteArrayOutputStream()
-    require(javax.imageio.ImageIO.write(img, format, baos),
-      s"no ImageIO writer for $format")
+    require(javax.imageio.ImageIO.write(img, "png", baos),
+      "no ImageIO writer for png")
     baos.toByteArray
   }
 

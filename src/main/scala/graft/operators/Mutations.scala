@@ -1,9 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
+import org.apache.spark.sql.types.{DoubleType, StructType}
 
 /** Copy-on-write mutation emulation (reference: writable parser —
   * src/ts/parser.ts:279-299,744-899; edit log src/ts/writer.ts:207-290).

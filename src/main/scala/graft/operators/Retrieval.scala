@@ -59,20 +59,6 @@ object Retrieval {
     bm25TopKFromPostings(bm25Postings(corpus, idCol, toksCol), idCol,
       queries, qidCol, qtermsCol, k, k1, b, excludeSelf, maxDfFrac)
 
-  /** [[bm25TopK]] through the max-score pruned serving path
-    * ([[bm25TopKFromPostingsMaxScore]]) — output PROVABLY bit-equal to
-    * [[bm25TopK]], the exact fold runs only over candidates whose
-    * provable score interval can reach the top-k floor.
-    */
-  def bm25TopKMaxScore(
-      corpus: DataFrame, idCol: String, toksCol: String,
-      queries: DataFrame, qidCol: String, qtermsCol: String,
-      k: Int, k1: Double = 1.2, b: Double = 0.75,
-      excludeSelf: Boolean = false,
-      maxDfFrac: Double = 1.0): DataFrame =
-    bm25TopKFromPostingsMaxScore(bm25Postings(corpus, idCol, toksCol),
-      idCol, queries, qidCol, qtermsCol, k, k1, b, excludeSelf, maxDfFrac)
-
   /** The per-document posting relation `(idCol, dl, term, tf)` — the
     * BM25 index artifact [[graft.operators.IndexStore.saveBm25]]
     * persists and [[bm25TopKFromPostings]] serves. Postings are a
@@ -209,24 +195,6 @@ object Retrieval {
     bm25FoldRank(refold, k)
   }
 
-  def bm25TopKFromPostingsDense(
-      postings: DataFrame, idCol: String,
-      queries: DataFrame, qidCol: String, qtermsCol: String,
-      k: Int, k1: Double = 1.2, b: Double = 0.75,
-      excludeSelf: Boolean = false,
-      maxDfFrac: Double = 1.0,
-      vocabCap: Int = 4096, panelCap: Int = 100000,
-      assumeStable: Boolean = false): DataFrame = {
-    bm25Validate(k, k1, b, maxDfFrac)
-    val p = bm25Prep(postings, idCol, maxDfFrac, stable = assumeStable)
-    val dfC = bm25CollectVocab(p, vocabCap)
-      .getOrElse(throw new IllegalArgumentException(
-        s"dense BM25 kernel needs vocab <= $vocabCap surviving terms " +
-          "- use the max-score postings path"))
-    bm25DenseFromPostings(p, dfC, queries, qidCol, qtermsCol,
-      k, k1, b, excludeSelf, panelCap)
-  }
-
   /** Auto-routing serve path over a posting relation: the dense-vocab
     * kernel when the surviving vocabulary fits `vocabCap` (the
     * join-degenerate regime — measured on the target corpus) and ids
@@ -290,25 +258,6 @@ object Retrieval {
       bm25TopKFromPostingsMaxScore(bm25Postings(corpus, idCol, toksCol),
         idCol, queries, qidCol, qtermsCol, k, k1, b, excludeSelf,
         maxDfFrac))
-  }
-
-  /** [[bm25TopK]] through the dense-vocab kernel, inline corpus form
-    * (throws when the vocabulary exceeds the cap — [[bm25TopKAuto]]
-    * falls back instead).
-    */
-  def bm25TopKDense(
-      corpus: DataFrame, idCol: String, toksCol: String,
-      queries: DataFrame, qidCol: String, qtermsCol: String,
-      k: Int, k1: Double = 1.2, b: Double = 0.75,
-      excludeSelf: Boolean = false,
-      maxDfFrac: Double = 1.0,
-      vocabCap: Int = 4096): DataFrame = {
-    bm25Validate(k, k1, b, maxDfFrac)
-    bm25TryDenseInline(corpus, idCol, toksCol, queries, qidCol,
-        qtermsCol, k, k1, b, excludeSelf, maxDfFrac, vocabCap)
-      .getOrElse(throw new IllegalArgumentException(
-        s"dense BM25 kernel needs vocab <= $vocabCap surviving terms " +
-          "and long ids - use bm25TopKAuto or the postings paths"))
   }
 
   /** Inline corpus-form dense scoring, or None when the surviving

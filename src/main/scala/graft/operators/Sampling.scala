@@ -264,8 +264,7 @@ object Sampling {
     * derived from an expensive kernel (quality score, token count over
     * full text), `localCheckpoint()` the narrow (id, keys, tokens)
     * projection first so the kernel is evaluated once, not once per
-    * prefix-sum pass. [[selectTokenBudgetSharded]] is the
-    * per-shard-budget twin.
+    * prefix-sum pass.
     */
   def selectTokenBudget(df: DataFrame, tokens: Column, budget: Long,
       order: Seq[SortKey]): DataFrame = {
@@ -282,30 +281,6 @@ object Sampling {
     runningTotal(base.withColumn("n_tok", col("n_tok").cast("long")),
         order, "n_tok", "cum_tok")
       .filter(col("cum_tok") <= budget)
-  }
-
-  /** Distributed token-budget twin of [[selectTokenBudget]] — the
-    * [[Curation.packSequencesSharded]] contract: rows are hashed into
-    * `shards` and each shard runs the same greedy selection in `order`
-    * against a per-shard budget of `budget / shards` (per-shard window —
-    * parallel across shards, no global exchange bottleneck). Output adds
-    * `shard` beside `n_tok`/`cum_tok`; total selected tokens ≤ `budget`.
-    * The selection differs from the total-order variant only at shard-
-    * budget boundaries (each shard greedily fills its own slice), the
-    * standard price of sharded greedy packing.
-    */
-  def selectTokenBudgetSharded(df: DataFrame, tokens: Column, budget: Long,
-      order: Seq[SortKey], shards: Int, hashCol: Column): DataFrame = {
-    require(budget > 0, "budget must be positive")
-    require(shards > 0 && budget >= shards,
-      "need at least one token of budget per shard")
-    require(order.nonEmpty, "deterministic selection needs an order")
-    val w = Window.partitionBy(col("shard")).orderBy(order.map(_.order): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.withColumn("shard", pmod(hash(hashCol), lit(shards)).cast("long"))
-      .withColumn("n_tok", tokens)
-      .withColumn("cum_tok", sum(col("n_tok")).over(w))
-      .filter(col("cum_tok") <= budget / shards)
   }
 
   /** Deterministic global training-order shuffle + round-robin shard

@@ -30,8 +30,6 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     vec_dot(a, b) / (vec_l2norm(a) * vec_l2norm(b))
 
-  def dotProduct(a: Column, b: Column): Column = vec_dot(a, b)
-
   def l2Norm(a: Column): Column = vec_l2norm(a)
 
   /** Exact top-k neighbors for each query vector.
@@ -63,47 +61,6 @@ object Similarity {
       .filter(col("rank") <= k)
   }
 
-  /** Two-stage quantized top-k: scan int8-quantized vectors (4× less
-    * memory traffic than float32 — at 100 TB the quantized corpus column
-    * is the one that fits in cache/shuffle), keep `rescoreFactor`·k
-    * candidates per query by integer dot, then fetch ONLY the survivors'
-    * float vectors for an exact cosine re-rank. The candidate scan carries
-    * just (id, bytes); full vectors never enter the pair loop.
-    */
-  def quantizedTopK(
-      queries: DataFrame, corpus: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      scale: Double = 0.05, rescoreFactor: Int = 4): DataFrame = {
-    import graft.functions.VectorExprs.{vec_dot_q8, vec_q8}
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-      vec_q8(col(vecCol), scale).as("__qq"), col(vecCol).as("__qv"),
-      vec_l2norm(col(vecCol)).as("__qn"))
-      .filter(col("__qn") > 0)) // zero-norm guard (see bruteForceTopK)
-    val cand = corpus
-      .select(col(idCol).as("match_id"), vec_q8(col(vecCol), scale).as("__cq"))
-      .crossJoin(q.select(col("query_id"), col("__qq")))
-      .filter(col("match_id") =!= col("query_id"))
-      .select(col("query_id"), col("match_id"),
-        vec_dot_q8(col("__qq"), col("__cq")).as("__qdot"))
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("__qdot").desc, col("match_id").asc)
-    val survivors = cand.withColumn("__qr", row_number().over(wq))
-      .filter(col("__qr") <= k.toLong * rescoreFactor) // Long: k*factor can pass Int.MaxValue in full-rescore use
-      .select("query_id", "match_id")
-    val cExact = corpus.select(col(idCol).as("match_id"),
-      col(vecCol).as("__cv"), vec_l2norm(col(vecCol)).as("__cn"))
-      .filter(col("__cn") > 0) // zero-norm guard (see bruteForceTopK)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("match_id").asc)
-    survivors.join(cExact, "match_id")
-      .join(q.select(col("query_id"), col("__qv"), col("__qn")), "query_id")
-      .select(col("query_id"), col("match_id"),
-        (vec_dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")))
-          .as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
-
   /** Exact all-pairs cosine pairs at or above `threshold` — the semantic-
     * dedup pair generator. The boundary rule is round(cos, 4) >= threshold
     * (both engines compute the dot/norms left-to-right in double, so the
@@ -113,9 +70,9 @@ object Similarity {
     * the pair loop streams through CartesianProduct tiles and the
     * threshold filter drops pairs inside the loop — no pair row below the
     * threshold ever materializes. Exact-by-contract, so O(n²) compares:
-    * at 100 TB gate through [[topPairsLsh]]-style banding first when the
-    * threshold sits in the high-similarity regime, or bound the corpus
-    * (per-partition / per-label blocks) when it does not.
+    * at 100 TB gate through [[cosinePairsLshAuto]]'s banding first when
+    * the threshold sits in the high-similarity regime, or bound the
+    * corpus (per-partition / per-label blocks) when it does not.
     */
   def cosinePairs(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double): DataFrame = {
@@ -151,8 +108,8 @@ object Similarity {
     * hyperplane-band geometry that reaches ≥99.9% recall keeps ≥65% of
     * ALL pairs as candidates (16/4 → 23% kept but 68% recall; 24/8 →
     * 66% kept, 96% recall), i.e. the gate costs more than it prunes and
-    * still misses top pairs. Use [[topPairsLsh]] when the pairs of
-    * interest are in the genuinely-gateable high-similarity regime.
+    * still misses top pairs. Use [[topPairsLshScaled]] when the pairs
+    * of interest are in the genuinely-gateable high-similarity regime.
     */
   def topPairs(df: DataFrame, idCol: String, vecCol: String, n: Int,
       maxRows: Long = 1L << 20): DataFrame = {
@@ -180,35 +137,6 @@ object Similarity {
       .select(col("id_a"), col("id_b"),
         (vec_dot(col("__va"), col("__vb")) / (col("__na") * col("__nb")))
           .as("cos"))
-      .orderBy(col("cos").desc, col("id_a").asc, col("id_b").asc)
-      .limit(n)
-  }
-
-  /** LSH-gated global top-n pairs with EXACT rescoring — the 100 TB path
-    * for the high-similarity (near-dup) regime. The `planes`-bit
-    * hyperplane signature is split into `bands` sub-keys; pairs sharing
-    * any band self-join per (band, value) bucket — never all-pairs — and
-    * every candidate is rescored with the exact codegen cosine before the
-    * global TakeOrdered(n).
-    *
-    * Default geometry r=7 bits × 9 bands (63 planes, one long): a pair at
-    * cos 0.9 (p = 1−θ/π = 0.856 per bit) bands together with
-    * P = 1−(1−0.856⁷)^9 ≈ 0.975, at cos 0.99 P ≈ 1−1e-5, while background
-    * (cos≈0) pairs pass at ~7%. APPROXIMATE by design below cos ≈ 0.9 —
-    * see [[topPairs]] for the exact contract and the measured reason a
-    * global-top-n over near-orthogonal data cannot be gated.
-    *
-    * Plan shape: the band self-join carries ONLY (id, band, value) — the
-    * vector payloads would otherwise be materialized into every banded
-    * pair row (the cross-join-payload trap). Candidates are deduped as id
-    * pairs, then the two vectors are joined back for ONE exact rescore
-    * per candidate, and the result is a TakeOrdered(n).
-    */
-  def topPairsLsh(
-      df: DataFrame, idCol: String, vecCol: String, n: Int, dim: Int,
-      planes: Int = 63, bands: Int = 9): DataFrame = {
-    require(planes % bands == 0, s"bands ($bands) must divide planes ($planes)")
-    rescoredBandPairs(df, idCol, vecCol, dim, planes / bands, bands)
       .orderBy(col("cos").desc, col("id_a").asc, col("id_b").asc)
       .limit(n)
   }
@@ -257,11 +185,22 @@ object Similarity {
     (r, b)
   }
 
-  /** [[topPairsLsh]] with [[scaledLshGeometry]] derived from a count of
-    * the input — the form to reach for when the corpus size isn't known
-    * up front. The count is one narrow job over `df`; `localCheckpoint()`
-    * first if the input plan is expensive (the pair machinery evaluates
-    * it again for signatures).
+  /** LSH-gated global top-n pairs with EXACT rescoring — the 100 TB path
+    * for the high-similarity (near-dup) regime. The hyperplane signature
+    * is cut into `b` bands of `r` bits ([[scaledLshGeometry]] of a count
+    * of the input); pairs sharing any band self-join per (band, value)
+    * bucket — never all-pairs — and every candidate is rescored with the
+    * exact codegen cosine before the global TakeOrdered(n). At the 7-bit
+    * floor with the default 9 bands a pair at cos 0.9 (p = 1−θ/π = 0.856
+    * per bit) bands together with P = 1−(1−0.856⁷)^9 ≈ 0.975, at cos 0.99
+    * P ≈ 1−1e-5, while background (cos≈0) pairs pass at ~7%.
+    * APPROXIMATE by design below cos ≈ 0.9 —
+    * see [[topPairs]] for the exact contract and the measured reason a
+    * global top-n over near-orthogonal data cannot be gated.
+    *
+    * The count is one narrow job over `df`; `localCheckpoint()` first if
+    * the input plan is expensive (the pair machinery evaluates it again
+    * for signatures).
     */
   def topPairsLshScaled(
       df: DataFrame, idCol: String, vecCol: String, n: Int, dim: Int,
@@ -273,100 +212,6 @@ object Similarity {
     rescoredBandPairs(df, idCol, vecCol, dim, r, b)
       .orderBy(col("cos").desc, col("id_a").asc, col("id_b").asc)
       .limit(n)
-  }
-
-  /** [[topPairsLsh]] with the same knee-aware geometry dispatch as
-    * [[cosinePairsLshAuto]]: a hand band geometry is honored only while
-    * its expected occupancy `n / 2^planesPerBand` stays at or under
-    * `occupancyCap` ([[autoLshGeometry]] — measured crossover, see its
-    * scaladoc); past it [[scaledLshGeometry]] takes over and the switch
-    * is logged. `n` comes from `knownCount` or one narrow count job.
-    */
-  def topPairsLshAuto(
-      df: DataFrame, idCol: String, vecCol: String, n: Int, dim: Int,
-      planesPerBand: Int, bands: Int,
-      targetCos: Double = 0.99, maxMiss: Double = 0.01,
-      occupancyCap: Long = 16, targetBucket: Int = 16,
-      maxPlanesPerBand: Int = 20,
-      knownCount: Option[Long] = None): DataFrame = {
-    val rows = knownCount.getOrElse(df.count())
-    val (r, b, switched) = autoLshGeometry(rows, planesPerBand, bands,
-      targetCos, maxMiss, occupancyCap, targetBucket, maxPlanesPerBand)
-    if (switched) log.warn(
-      s"topPairsLshAuto: n=$rows exceeds hand geometry " +
-        s"${planesPerBand}x$bands occupancy cap (n/2^$planesPerBand > " +
-        s"$occupancyCap/bucket) — switching to scaled geometry ${r}x$b")
-    else log.info(
-      s"topPairsLshAuto: n=$rows within occupancy cap — keeping hand " +
-        s"geometry ${planesPerBand}x$bands")
-    rescoredBandPairs(df, idCol, vecCol, dim, r, b)
-      .orderBy(col("cos").desc, col("id_a").asc, col("id_b").asc)
-      .limit(n)
-  }
-
-  /** LSH-gated threshold pairs with EXACT rescoring — the 100 TB default
-    * for semantic dedup. Same banded candidate generation as
-    * [[topPairsLsh]] (payload-free band self-join, one exact rescore per
-    * candidate), but the output contract is [[cosinePairs]]'s:
-    * round(cos, 4) >= threshold, engine-exact boundary.
-    *
-    * APPROXIMATE-recall by construction: a qualifying pair not sharing
-    * any band is missed. Per-pair miss rate is (1 − p^r)^b where
-    * p = 1 − θ/π per plane — with the default 7-bit × 9-band geometry
-    * ~1e-7 at cos 0.997, ~1e-5 at cos 0.99, 2.4% at cos 0.9, hopeless at
-    * cos ≲ 0.7 (see [[topPairs]] for the measured ungateable regime).
-    *
-    * GEOMETRY MUST SCALE WITH THE CORPUS: a band key has 2^r values, so
-    * at fixed r bucket occupancy grows ~n/2^r and candidate pairs grow
-    * ~n²/2^r — the 10× rehearsal measured the 7-bit default going
-    * super-linear (13× time at 10× rows). Choose
-    * `planesPerBand ≈ log2(n / 16)` (keeps expected bucket size ~16) and
-    * raise `bands` to keep (1 − p^r)^b small for the similarity of the
-    * pairs you must not miss; candidate work then stays ~linear in n.
-    */
-  def cosinePairsLsh(
-      df: DataFrame, idCol: String, vecCol: String, threshold: Double,
-      dim: Int, planesPerBand: Int = 7, bands: Int = 9): DataFrame =
-    rescoredBandPairs(df, idCol, vecCol, dim, planesPerBand, bands)
-      .select(col("id_a"), col("id_b"), round(col("cos"), 4).as("cos"))
-      .filter(col("cos") >= threshold)
-
-  /** [[cosinePairsLsh]] with [[scaledLshGeometry]] derived from a count
-    * of the input — for corpora whose size outruns a hand-picked band
-    * width (the 30× rehearsal in PLANS.md: a fixed width crosses its
-    * quadratic knee once occupancy ~n/2^r grows).
-    *
-    * `targetCos` here is the similarity of the pairs that MUST be
-    * recalled (e.g. the known near-dup similarity of a planted or
-    * measured dup population) — NOT the rescore `threshold`, which can
-    * sit well below it; the default `maxMiss` 1e-8 makes the expected
-    * number of missed must-recall pairs negligible even over millions
-    * of dup pairs. The count is one narrow job over `df`;
-    * `localCheckpoint()` first if the input plan is expensive.
-    *
-    * MEASURED TRADEOFF (round 8, decorrelated rehearsal data): a tight
-    * `maxMiss` needs ~1.5× the bands of a hand-tuned geometry, so the
-    * hand form wins while its buckets stay at or under design
-    * occupancy (q92 12×12: 1.9 s vs 5.3 s cold at 2.2k vectors) — but
-    * the crossover arrives WITH the design occupancy, not decades past
-    * it: at occupancy ~18 the scaled form already wins 13.3 → 11.1 s
-    * (72.6k vectors) and at occupancy 54 it wins 141 → 48 s (220k).
-    * (The round-7 version of this note claimed the hand form held to
-    * 1.8M vectors; that was measured on the correlated-replica-noise
-    * corpus the sf1 oracle gate invalidated.) Prefer
-    * [[cosinePairsLshAuto]], which encodes this crossover as a
-    * dispatch rule instead of a doc.
-    */
-  def cosinePairsLshScaled(
-      df: DataFrame, idCol: String, vecCol: String, threshold: Double,
-      dim: Int, targetCos: Double, maxMiss: Double = 1e-8,
-      targetBucket: Int = 16, maxPlanesPerBand: Int = 20): DataFrame = {
-    val (r, b) =
-      scaledLshGeometry(df.count(), targetCos, maxMiss, targetBucket,
-        maxPlanesPerBand)
-    rescoredBandPairs(df, idCol, vecCol, dim, r, b)
-      .select(col("id_a"), col("id_b"), round(col("cos"), 4).as("cos"))
-      .filter(col("cos") >= threshold)
   }
 
   /** Geometry routing for [[cosinePairsLshAuto]]: keep the supplied hand
@@ -405,24 +250,33 @@ object Similarity {
     }
   }
 
-  /** [[cosinePairsLsh]] with knee-aware geometry dispatch — the form to
-    * deploy when the corpus may outgrow a hand-tuned band width. A hand
-    * geometry measured at deployment scale beats the analytic one (q92:
-    * 12×12 won at every rehearsed scale up to its knee — see
-    * [[cosinePairsLshScaled]]), but a fixed width crosses its quadratic
-    * knee silently once occupancy `n/2^r` outruns it, and at 100 TB
-    * nobody re-reads a scaladoc before the job dies — so the routing is
-    * code, not advice: the hand geometry is used only while
-    * `n / 2^planesPerBand ≤ occupancyCap` ([[autoLshGeometry]]), and the
-    * choice is logged either way.
+  /** LSH-gated threshold pairs with EXACT rescoring — the 100 TB default
+    * for semantic dedup. Banded candidate generation as in
+    * [[topPairsLshScaled]] (payload-free band self-join, one exact
+    * rescore per candidate), with [[cosinePairs]]'s output contract:
+    * round(cos, 4) >= threshold, engine-exact boundary. APPROXIMATE
+    * recall by construction: a qualifying pair sharing no band is
+    * missed, at the per-pair rate (1 − p^r)^b with p = 1 − θ/π per plane
+    * — with a 7-bit × 9-band geometry ~1e-7 at cos 0.997, ~1e-5 at cos
+    * 0.99, 2.4% at cos 0.9, hopeless at cos ≲ 0.7.
+    *
+    * Geometry is dispatched on the corpus size. A hand geometry measured
+    * at deployment scale beats the analytic one (q92: 12×12 won at every
+    * rehearsed scale up to its knee), but a fixed width crosses its
+    * quadratic knee silently once occupancy `n/2^r` outruns it, so the
+    * routing is code, not advice: the hand geometry is used only while
+    * `n / 2^planesPerBand ≤ occupancyCap` ([[autoLshGeometry]]), past it
+    * [[scaledLshGeometry]] takes over, and the choice is logged either
+    * way.
     *
     * `targetCos`/`maxMiss` describe the pairs that MUST be recalled if
-    * the scaled branch is taken (see [[cosinePairsLshScaled]]) — pass
-    * the hand geometry's own design miss rate for continuity across the
-    * switch. `n` is taken from `knownCount` when the caller already has
-    * it; otherwise one narrow count job over `df` (`localCheckpoint()`
-    * first if the input plan is expensive — the pair machinery evaluates
-    * it again for signatures).
+    * the scaled branch is taken — the similarity of a planted or
+    * measured dup population, NOT the rescore `threshold`, which can sit
+    * well below it; pass the hand geometry's own design miss rate for
+    * continuity across the switch. `n` is taken from `knownCount` when
+    * the caller already has it; otherwise one narrow count job over `df`
+    * (`localCheckpoint()` first if the input plan is expensive — the
+    * pair machinery evaluates it again for signatures).
     */
   def cosinePairsLshAuto(
       df: DataFrame, idCol: String, vecCol: String, threshold: Double,
@@ -1213,8 +1067,8 @@ object Similarity {
     * the reconstruction norm read off the codes via the squared
     * codebook — ONE double per corpus row, computed once), keeps
     * `rescoreFactor·k` per query, then fetches ONLY the survivors'
-    * float vectors for the exact re-rank — [[quantizedTopK]]'s shape
-    * with a 32× (vs its 4×) compressed scan. Returns
+    * float vectors for the exact re-rank — a 32× compressed candidate
+    * scan (int8 quantization gives 4×). Returns
     * `(query_id, match_id, cos, rank)` with EXACT cosines.
     */
   def pqTopK(

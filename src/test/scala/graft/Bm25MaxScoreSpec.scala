@@ -34,6 +34,12 @@ class Bm25MaxScoreSpec extends SparkSpec {
       (id, Seq.fill(len)(vocab(rng.nextInt(vocab.size))))
     }
 
+  /** The dense kernel scores inside a typed `mapPartitions`; the
+    * postings paths are joins and windows only.
+    */
+  private def denseScored(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.executedPlan.toString.contains("MapPartitions")
+
   private def run(docs: Seq[(Long, Seq[String])],
       queries: Seq[(Long, Seq[String])], k: Int,
       k1: Double = 1.2, b: Double = 0.75,
@@ -41,16 +47,19 @@ class Bm25MaxScoreSpec extends SparkSpec {
       path: String): Seq[(Long, Long, Double, Int)] = {
     val d = docs.toDF("id", "toks")
     val q = queries.toDF("qid", "qterms")
+    // the router's routes, picked through its own input: a zero vocab
+    // cap leaves only the max-score postings path, the default cap
+    // fits these small vocabularies and takes the dense kernel
     val out = path match {
-      case "maxscore" => Retrieval.bm25TopKMaxScore(d, "id", "toks",
-        q, "qid", "qterms", k, k1, b, excludeSelf, maxDfFrac)
-      case "dense" => Retrieval.bm25TopKDense(d, "id", "toks",
-        q, "qid", "qterms", k, k1, b, excludeSelf, maxDfFrac)
-      case "auto" => Retrieval.bm25TopKAuto(d, "id", "toks",
+      case "maxscore" => Retrieval.bm25TopKAuto(d, "id", "toks",
+        q, "qid", "qterms", k, k1, b, excludeSelf, maxDfFrac, vocabCap = 0)
+      case "dense" => Retrieval.bm25TopKAuto(d, "id", "toks",
         q, "qid", "qterms", k, k1, b, excludeSelf, maxDfFrac)
       case _ => Retrieval.bm25TopK(d, "id", "toks",
         q, "qid", "qterms", k, k1, b, excludeSelf, maxDfFrac)
     }
+    if (path != "reference")
+      assert(denseScored(out) == (path == "dense"), s"[$path] route")
     out.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
       .toSeq.sortBy(r => (r._1, r._4))
@@ -63,7 +72,7 @@ class Bm25MaxScoreSpec extends SparkSpec {
       tag: String): Unit = {
     val want = run(docs, queries, k, k1, b, excludeSelf, maxDfFrac,
       path = "reference")
-    for (path <- Seq("maxscore", "dense", "auto")) {
+    for (path <- Seq("maxscore", "dense")) {
       val got = run(docs, queries, k, k1, b, excludeSelf, maxDfFrac, path)
       // exact double comparison on purpose: raw bits, no tolerance
       assert(got.size === want.size, s"[$tag/$path] row count")
@@ -135,15 +144,22 @@ class Bm25MaxScoreSpec extends SparkSpec {
       tag = "all-ties-self")
   }
 
-  test("dense kernel vocab-cap guard raises instead of degrading") {
+  test("a vocabulary over the dense cap routes to max-score") {
     val docs = (0L until 5L).map(id => (id, Seq(s"t$id", "common")))
-    val queries = Seq((0L, Seq("common")))
-    intercept[IllegalArgumentException] {
-      Retrieval.bm25TopKFromPostingsDense(
-        Retrieval.bm25Postings(docs.toDF("id", "toks"), "id", "toks"),
-        "id", queries.toDF("qid", "qterms"), "qid", "qterms",
-        k = 2, vocabCap = 3)
-    }
+    val queries = Seq((0L, Seq("common"))).toDF("qid", "qterms")
+    val postings =
+      Retrieval.bm25Postings(docs.toDF("id", "toks"), "id", "toks")
+    // six surviving terms over a cap of three: the dense kernel must not
+    // run on a truncated vocabulary
+    val got = Retrieval.bm25TopKFromPostingsAuto(postings, "id", queries,
+      "qid", "qterms", k = 2, vocabCap = 3)
+    assert(!denseScored(got))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getInt(3)))
+      .toSeq.sortBy(r => (r._1, r._4))
+    assert(rows(got) === rows(Retrieval.bm25TopKFromPostings(postings, "id",
+      queries, "qid", "qterms", k = 2)))
   }
 
   test("maxscore FromPostings == unpruned FromPostings on a prebuilt " +
@@ -164,9 +180,10 @@ class Bm25MaxScoreSpec extends SparkSpec {
     val got = rows(Retrieval.bm25TopKFromPostingsMaxScore(postings, "id",
       queries, "qid", "qterms", k = 6, excludeSelf = true))
     assert(got === want)
-    val gotDense = rows(Retrieval.bm25TopKFromPostingsDense(postings,
-      "id", queries, "qid", "qterms", k = 6, excludeSelf = true))
-    assert(gotDense === want)
+    val denseDf = Retrieval.bm25TopKFromPostingsAuto(postings,
+      "id", queries, "qid", "qterms", k = 6, excludeSelf = true)
+    assert(denseScored(denseDf))
+    assert(rows(denseDf) === want)
     // the store-serving shape: postings declared file-backed
     val dir = java.nio.file.Files
       .createTempDirectory("graft_bm25stable").toString

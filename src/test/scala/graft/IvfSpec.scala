@@ -71,7 +71,11 @@ class IvfSpec extends SparkSpec {
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = key(Similarity.topPairs(df, "vec_id", "embedding", 10))
-    val gated = key(Similarity.topPairsLsh(df, "vec_id", "embedding", 10, dim))
+    // 50 vectors: the scaled geometry sits at its 7-bit × 9-band floor,
+    // the hand-tuned default of the gated path
+    assert(Similarity.scaledLshGeometry(df.count()) == ((7, 9)))
+    val gated = key(Similarity.topPairsLshScaled(df, "vec_id", "embedding",
+      10, dim))
     assert(exact == gated, s"gated missed ${exact.diff(gated)}, " +
       s"extra ${gated.diff(exact)}")
   }
@@ -94,7 +98,11 @@ class IvfSpec extends SparkSpec {
       .select("id_a", "id_b", "cos").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val exact = key(Similarity.cosinePairs(df, "vec_id", "embedding", 0.9))
-    val gatedDf = Similarity.cosinePairsLsh(df, "vec_id", "embedding", 0.9, dim)
+    // the 7-bit × 9-band hand geometry, kept by the router: 50 vectors
+    // sit far below its occupancy cap
+    assert(!Similarity.autoLshGeometry(df.count(), 7, 9, 0.99)._3)
+    val gatedDf = Similarity.cosinePairsLshAuto(df, "vec_id", "embedding",
+      0.9, dim, planesPerBand = 7, bands = 9, targetCos = 0.99)
     val gated = key(gatedDf)
     assert(exact == gated, s"gated missed ${exact.diff(gated)}, " +
       s"extra ${gated.diff(exact)}")

@@ -139,45 +139,36 @@ class OperatorsSpec extends SparkSpec {
     assert(dist == expected)
   }
 
-  test("connectedComponentsStar: deep chain converges in O(log n) rounds") {
+  test("connectedComponents: deep chain, ghost ids, random graphs") {
     // a 64-node path is the adversarial case for min-label propagation
-    // (64 rounds); the alternating-star algorithm must land the same
-    // labels within the 30-round cap (actual: ~log n)
+    // (64 rounds, past the 50-round cap): the default route finishes it
+    // with the local union-find endgame and must label it all 1
     val n = 64
     val vertices = (1L to n.toLong).toDF("id")
     val chain = (1L until n.toLong).map(i => (i, i + 1)).toDF("a", "b")
-    val got = Dedup.connectedComponentsStar(vertices, "id", chain, "a", "b")
+    val got = Dedup.connectedComponents(vertices, "id", chain, "a", "b")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.length == n && got.forall(_._2 == 1L))
-    // mixed graph: star results equal propagation results
-    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (11L, 12L), (10L, 12L))
-      .toDF("a", "b")
-    val vs = Seq(1L, 2L, 3L, 10L, 11L, 12L, 20L).toDF("id")
-    val star = Dedup.connectedComponentsStar(vs, "id", pairs, "a", "b")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val prop = Dedup.connectedComponents(vs, "id", pairs, "a", "b")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(star == prop)
     // pair endpoints outside the vertex set relay nothing and never
-    // become labels — same contract as the propagation variant
+    // become labels, on both routes
     val ghostPairs = Seq((5L, 1L), (1L, 10L)).toDF("a", "b")
     val ghostVs = Seq(5L, 10L).toDF("id")
-    val ghost = Dedup.connectedComponentsStar(ghostVs, "id", ghostPairs, "a", "b")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(ghost == Map(5L -> 5L, 10L -> 10L))
-    // seeded random graphs: both algorithms must agree exactly
+    for (limit <- Seq(1000000L, 0L)) {
+      val ghost = Dedup.connectedComponents(ghostVs, "id", ghostPairs, "a",
+          "b", localEdgeLimit = limit)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      assert(ghost == Map(5L -> 5L, 10L -> 10L), s"localEdgeLimit=$limit")
+    }
+    // seeded random graphs: the union-find endgame and the distributed
+    // propagation loop (localEdgeLimit = 0) must agree exactly
     val rnd = new scala.util.Random(7)
     for (_ <- 1 to 3) {
       val nV = 60
       val vsR = (1L to nV.toLong).toDF("id")
       val edges = Seq.fill(45)((rnd.nextInt(nV) + 1L, rnd.nextInt(nV) + 1L))
         .filter(t => t._1 != t._2).toDF("a", "b")
-      val s = Dedup.connectedComponentsStar(vsR, "id", edges, "a", "b")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       val p = Dedup.connectedComponents(vsR, "id", edges, "a", "b")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      assert(s == p, s"star vs propagation diverged: ${
-        s.collect { case (k, v) if p(k) != v => (k, v, p(k)) }.take(5)}")
       val pd = Dedup.connectedComponents(vsR, "id", edges, "a", "b",
           localEdgeLimit = 0L)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
@@ -188,7 +179,13 @@ class OperatorsSpec extends SparkSpec {
   test("lang_marker_scores byte scan == the HOF langScores pipeline") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val hof = graft.functions.TextFunctions.langScores(col("text"))
+    // the higher-order-function pipeline the kernel replaced: per
+    // language, the count of lowercased tokens among its markers
+    val toks = graft.functions.TextFunctions.tokensWs(lower(col("text")))
+    val hof = graft.functions.TextFunctions.LangMarkers.toMap.map {
+      case (lang, words) =>
+        lang -> size(filter(toks, t => t.isin(words.map(x => x: Any): _*)))
+    }
     val fast = graft.functions.TextExprs.lang_marker_scores(lower(col("text")))
     val diff = docs.select(
       hof("en").as("e1"), hof("de").as("d1"), hof("fr").as("f1"), hof("es").as("s1"),
@@ -289,9 +286,10 @@ class OperatorsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // brute force over collected shingle sets
     def shingles(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("doc_id"),
-        TextFunctions.wordShingles(col("text"), 3).as("sh"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toSet).toMap
+      .select(col("doc_id"), TextFunctions.tokensWs(col("text")).as("toks"))
+      .collect().map(r => r.getLong(0) ->
+        r.getSeq[String](1).sliding(3).filter(_.size == 3)
+          .map(_.mkString(" ")).toSet).toMap
     val sl = shingles(left); val sr = shingles(right)
     val want = (for {
       (ia, sa) <- sl.toSeq; (ib, sb) <- sr.toSeq
@@ -325,7 +323,7 @@ class OperatorsSpec extends SparkSpec {
       == Set((5L, 4L)))
   }
 
-  test("jaccardPairsLsh and jaccardPairsDense match the sparse exact plan") {
+  test("jaccardPairsLsh matches the sparse exact plan") {
     val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("id_a", "id_b", "inter", "jaccard").collect()
@@ -336,34 +334,6 @@ class OperatorsSpec extends SparkSpec {
     val lsh = pairs(Dedup.jaccardPairsLsh(docs, "doc_id", "text", 0.5))
     assert(lsh == sparse, s"LSH-gated diverged: ${lsh.diff(sparse)} extra, " +
       s"${sparse.diff(lsh)} missing")
-    val dense = pairs(Dedup.jaccardPairsDense(docs, "doc_id", "text", 0.5))
-    assert(dense == sparse, s"dense kernel diverged: ${dense.diff(sparse)} " +
-      s"extra, ${sparse.diff(dense)} missing")
-  }
-
-  test("jaccardPairsDense rejects non-positive thresholds") {
-    val df = Seq((1L, "a b c d")).toDF("doc_id", "text")
-    intercept[IllegalArgumentException] {
-      Dedup.jaccardPairsDense(df, "doc_id", "text", 0.0)
-    }
-  }
-
-  test("bitset_pack round-trip: indices -> bitmap -> popcount") {
-    import graft.functions.VectorExprs
-    val df = Seq(
-      (1L, Seq(0, 3, 64, 127)),
-      (2L, Seq(3, 64, 200))).toDF("id", "idx")
-    val packed = df.select(col("id"), VectorExprs.bitset_pack(col("idx")).as("bs"))
-    val a = packed.filter(col("id") === 1).select(col("bs").as("bs_a"))
-    val b = packed.filter(col("id") === 2).select(col("bs").as("bs_b"))
-    val inter = a.crossJoin(b)
-      .select(VectorExprs.bitset_inter(col("bs_a"), col("bs_b")))
-      .collect()(0).getLong(0)
-    assert(inter == 2L) // {3, 64} shared; 200 beyond doc-1's prefix
-    val self = packed.filter(col("id") === 1)
-      .select(VectorExprs.bitset_inter(col("bs"), col("bs")))
-      .collect()(0).getLong(0)
-    assert(self == 4L)
   }
 
   test("sorted_inter_count merges sorted distinct long sets") {
@@ -458,7 +428,13 @@ class OperatorsSpec extends SparkSpec {
     assert(dp.pixels.toSeq == rgb.toSeq)
     // JPEG: lossy — contract is decode DETERMINISM on the pinned JVM
     // reader + correct dims, never pixel equality with the source
-    val jpg = Multimodal.encodeJpeg(5, 4, rgb)
+    val jpg = {
+      val img = javax.imageio.ImageIO.read(
+        new java.io.ByteArrayInputStream(png))
+      val out = new java.io.ByteArrayOutputStream()
+      assert(javax.imageio.ImageIO.write(img, "jpg", out))
+      out.toByteArray
+    }
     val d1 = Multimodal.decode(jpg)
     val d2 = Multimodal.decode(jpg)
     assert(d1.format == "jpeg" && d1.width == 5 && d1.height == 4 &&

@@ -146,7 +146,12 @@ class OptimizationR19Spec extends SparkSpec {
     val sumGot = Dedup.containmentSummaryFrom(df, "doc_id", docMapLite,
         repPairs, t)
       .orderBy(col("doc_id")).collect().map(_.toSeq)
-    val sumWant = Dedup.containmentSummary(df, "doc_id", "text", t, 3)
+    // the inline form: a freshly built full docMap (with __byRarity) and
+    // its un-checkpointed class pairs, composed in one plan
+    val docMapInline = Dedup.perDocSetsWithClasses(df, "doc_id", "text", 3,
+      Dedup.DefaultMaxShingleDf).localCheckpoint()
+    val sumWant = Dedup.containmentSummaryFrom(df, "doc_id", docMapInline,
+        Dedup.repPairsFromDocMap(docMapInline, t - 1e-4), t)
       .orderBy(col("doc_id")).collect().map(_.toSeq)
     assert(sumGot.toSeq == sumWant.toSeq, "containment summary drift")
   }

@@ -95,8 +95,12 @@ class PlanAuditSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val emb = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
+    // the 7-bit × 9-band hand geometry: the fixture sits below its cap
+    assert(!graft.operators.Similarity
+      .autoLshGeometry(emb.count(), 7, 9, 0.99)._3)
     val p = graft.operators.Similarity
-      .cosinePairsLsh(emb, "vec_id", "e", 0.9, dim = 64)
+      .cosinePairsLshAuto(emb, "vec_id", "e", 0.9, dim = 64,
+        planesPerBand = 7, bands = 9, targetCos = 0.99)
       .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoop"), p.take(600))

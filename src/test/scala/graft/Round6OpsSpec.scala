@@ -230,9 +230,6 @@ class Round6OpsSpec extends SparkSpec {
     val tp = Similarity.topPairs(corpus, "vec_id", "embedding", 10)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(tp.toSet == Set((1L, 2L)))
-    val qt = Similarity.quantizedTopK(q, corpus, "vec_id", "embedding", 2)
-      .collect().map(_.getLong(1))
-    assert(!qt.contains(3L) && qt.length == 2)
     val ann = Similarity.annTopK(q, corpus, "vec_id", "embedding", 2, 2)
       .collect().map(_.getLong(1))
     assert(!ann.contains(3L))

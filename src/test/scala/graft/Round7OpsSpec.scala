@@ -294,8 +294,15 @@ class Round7OpsSpec extends SparkSpec {
       (id + 1000L, v.map(_ + 0.001)) }
     val df = (base ++ planted).toDF("id", "vec")
       .select(col("id"), col("vec").cast("array<double>").as("vec"))
-    val got = Similarity.cosinePairsLshScaled(df, "id", "vec",
-        threshold = 0.95, dim = dim, targetCos = 0.99)
+    // the geometry scaled to the corpus, which the router keeps: its
+    // occupancy n/2^r stays under the cap
+    val n = df.count()
+    val (r, b) = Similarity.scaledLshGeometry(n, targetCos = 0.99,
+      maxMiss = 1e-8)
+    assert(!Similarity.autoLshGeometry(n, r, b, 0.99)._3)
+    val got = Similarity.cosinePairsLshAuto(df, "id", "vec",
+        threshold = 0.95, dim = dim, planesPerBand = r, bands = b,
+        targetCos = 0.99)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = Similarity.cosinePairs(df, "id", "vec", threshold = 0.95)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -93,9 +93,16 @@ class Round8OpsSpec extends SparkSpec {
   test("cosinePairsLshScaled plumbs targetBucket/maxPlanesPerBand") {
     val df = plantedVecs()
     // tiny corpus: geometry clamps to the r=7 floor either way; the
-    // point is the parameters reach the geometry without error
-    val got = Similarity.cosinePairsLshScaled(df, "id", "vec", 0.95,
-        dim = 16, targetCos = 0.99, targetBucket = 8, maxPlanesPerBand = 10)
+    // point is the parameters reach the geometry without error. The
+    // scaled geometry, handed to the router as its hand geometry, stays
+    // under the occupancy cap, so the router runs exactly that geometry
+    val n = df.count()
+    val (r, b) = Similarity.scaledLshGeometry(n, targetCos = 0.99,
+      maxMiss = 1e-8, targetBucket = 8, maxPlanesPerBand = 10)
+    assert(!Similarity.autoLshGeometry(n, r, b, 0.99)._3)
+    val got = Similarity.cosinePairsLshAuto(df, "id", "vec", 0.95,
+        dim = 16, planesPerBand = r, bands = b, targetCos = 0.99,
+        targetBucket = 8, maxPlanesPerBand = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = Similarity.cosinePairs(df, "id", "vec", 0.95)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -108,15 +115,18 @@ class Round8OpsSpec extends SparkSpec {
     val planted = Similarity.cosinePairs(df, "id", "vec", threshold = 0.98)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(planted.size >= 20)
-    def top20(knownCount: Option[Long]) =
-      Similarity.topPairsLshAuto(df, "id", "vec", n = 20, dim = dim,
-          planesPerBand = 12, bands = 12, targetCos = 0.99,
-          knownCount = knownCount)
+    def top20(targetBucket: Int) =
+      Similarity.topPairsLshScaled(df, "id", "vec", n = 20, dim = dim,
+          targetCos = 0.99, targetBucket = targetBucket)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // hand branch (220 vectors) and forced-scaled branch agree: the
-    // global top 20 are all planted twins (cos ≈ 0.999999)
-    val hand = top20(None)
-    val scaled = top20(Some(5000000L))
+    // two band geometries (220 vectors: 7 bits at bucket 16, 8 bits at
+    // bucket 1) agree: the global top 20 are all planted twins
+    // (cos ≈ 0.999999)
+    val rows = df.count()
+    assert(Similarity.scaledLshGeometry(rows, 0.99, targetBucket = 16) !=
+      Similarity.scaledLshGeometry(rows, 0.99, targetBucket = 1))
+    val hand = top20(16)
+    val scaled = top20(1)
     assert(hand.subsetOf(planted) && hand.size == 20)
     assert(scaled == hand)
   }
@@ -162,32 +172,6 @@ class Round8OpsSpec extends SparkSpec {
         .collect().map(row).toSet
       val prefix = Dedup.containmentPairsPrefix(df, "id", "text", threshold, 2)
         .select("id_a", "id_b", "inter", "containment")
-        .collect().map(row).toSet
-      assert(prefix == exact,
-        s"seed=$si t=$threshold missed=${exact -- prefix} extra=${prefix -- exact}")
-    }
-  }
-
-  test("jaccardPairsPrefix == jaccardPairs on fuzz corpora") {
-    import org.scalacheck.Gen
-    import org.scalacheck.rng.Seed
-    import graft.operators.Dedup
-    val wordGen = Gen.choose('a', 'f').map(_.toString)
-    val docGen: Gen[String] =
-      Gen.choose(0, 10).flatMap(n => Gen.listOfN(n, wordGen)).map(_.mkString(" "))
-    val corpusGen: Gen[Seq[String]] =
-      Gen.choose(2, 9).flatMap(n => Gen.listOfN(n, docGen))
-    def row(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))
-    for (si <- 21 to 40; threshold <- Seq(0.3, 0.6)) {
-      val docs = corpusGen.pureApply(Gen.Parameters.default, Seed(si.toLong))
-      val df = docs.zipWithIndex.map { case (d, i) => (i.toLong, d) }
-        .toDF("id", "text")
-      val exact = Dedup.jaccardPairs(df, "id", "text", threshold, 2)
-        .select("id_a", "id_b", "inter", "jaccard")
-        .collect().map(row).toSet
-      val prefix = Dedup.jaccardPairsPrefix(df, "id", "text", threshold, 2)
-        .select("id_a", "id_b", "inter", "jaccard")
         .collect().map(row).toSet
       assert(prefix == exact,
         s"seed=$si t=$threshold missed=${exact -- prefix} extra=${prefix -- exact}")

@@ -115,36 +115,6 @@ class SamplingSpec extends SparkSpec {
     assert(got2.toSeq == Seq(1, 2))
   }
 
-  test("selectTokenBudgetSharded == per-shard total-order selection") {
-    val rnd = new java.util.SplittableRandom(5L)
-    val rows = (1 to 200).map(i =>
-      (i.toLong, 10L + rnd.nextInt(90), rnd.nextDouble()))
-    val df = rows.toDF("id", "tok", "q")
-    val shards = 4
-    val budget = 4000L
-    val order = Seq(SortKey.desc(col("q")), SortKey(col("id")))
-    val got = Sampling.selectTokenBudgetSharded(df, col("tok"), budget,
-      order, shards, col("id"))
-    // contract: every row lands in pmod(hash(id), shards), and within
-    // each shard the selection IS the total-order greedy prefix at the
-    // per-shard budget
-    val byShard = got.select("shard", "id").as[(Long, Long)].collect()
-      .groupBy(_._1).map { case (s, rs) => (s, rs.map(_._2).toSet) }
-    val shardOf = df.select(col("id"),
-        pmod(hash(col("id")), lit(shards)).cast("long").as("s"))
-      .as[(Long, Long)].collect().groupBy(_._2)
-    for ((s, members) <- shardOf) {
-      val sub = df.filter(col("id").isin(members.map(_._1).toSeq: _*))
-      val expect = Sampling.selectTokenBudget(sub, col("tok"),
-          budget / shards, order)
-        .select("id").as[Long].collect().toSet
-      assert(byShard.getOrElse(s, Set.empty[Long]) == expect, s"shard $s")
-    }
-    // global budget honored
-    val tot = got.agg(sum(col("n_tok"))).as[Long].collect().head
-    assert(tot <= budget)
-  }
-
   test("runningTotal == single-partition window running sum") {
     import org.apache.spark.sql.expressions.Window
     val rnd = new java.util.SplittableRandom(3L)

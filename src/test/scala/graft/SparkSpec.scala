@@ -3,15 +3,20 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session base: one lazy session per suite (spark_guide.md). */
+/** Session base: every suite gets its own isolated session over the
+  * one SparkContext the test JVM shares. SQL conf, temp views and
+  * registered functions written by one suite are invisible to the next,
+  * so no result depends on which suites ran before. The session is made
+  * the active one and initialized by [[GraftSession.init]] alone —
+  * kernels register per session (`functions.Kernels.call` registers in
+  * `SparkSession.active`).
+  */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = {
+    val s = SparkSpec.root.newSession()
+    SparkSession.setActiveSession(s)
+    GraftSession.init(s)
+  }
 
   def writeTmp(name: String, content: String): String = {
     val dir = java.nio.file.Files.createTempDirectory("graftspec")
@@ -23,6 +28,15 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  // built once per test JVM; suites only ever see a newSession() of it
+  private lazy val root: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .appName("graft-specs")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
   // every writeTmp dir is removed when the test JVM exits — a full
   // suite run creates ~150 of them otherwise
   private val dirs = java.util.concurrent.ConcurrentHashMap
