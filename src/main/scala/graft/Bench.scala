@@ -427,8 +427,35 @@ object Bench {
         if (dt > 2.0 || sinceGc >= 16) { System.gc(); sinceGc = 0 }
         (name, dt, ok)
     }
+    // One row per pass: wall seconds, classes compiled by Spark's code
+    // generator during the pass (CodegenMetrics), metaspace and RSS at
+    // its end. A steady pass that still compiles hundreds of classes
+    // means the codegen cache evicted what the pass reuses.
+    val passRows = scala.collection.mutable.ArrayBuffer[String]()
+    def timedPass(tag: String) = {
+      import scala.jdk.CollectionConverters._
+      val compiles = org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME
+      val c0 = compiles.getCount
+      val t0 = System.nanoTime()
+      val rs = runPass(tag)
+      val sec = (System.nanoTime() - t0) / 1e9
+      val meta = java.lang.management.ManagementFactory
+        .getMemoryPoolMXBeans.asScala.find(_.getName == "Metaspace")
+        .fold(-1L)(_.getUsage.getUsed >> 20)
+      val rss =
+        try java.nio.file.Files.readAllLines(
+            java.nio.file.Paths.get("/proc/self/status")).asScala
+          .find(_.startsWith("VmRSS:"))
+          .fold(-1L)(_.split("\\s+")(1).toLong >> 10)
+        catch { case scala.util.control.NonFatal(_) => -1L }
+      passRows += (s"""{"tag":"$tag","sec":${f"$sec%.2f"},""" +
+        s""""codegen_compiles":${compiles.getCount - c0},""" +
+        s""""metaspace_mb":$meta,"rss_mb":$rss}""")
+      rs
+    }
     settle("cold")
-    val results = runPass("cold")
+    val results = timedPass("cold")
     // Steady-state second pass (codegen/JIT warm, shuffle-file caches
     // primed): recorded per query beside the cold numbers so ONE cold
     // outlier on a noisy box can never dominate the round verdict (the
@@ -438,7 +465,7 @@ object Bench {
     // otherwise pay the catalog twice).
     val steady =
       if (sys.env.get("SPARK_GRAFT_STEADY").contains("0")) Nil
-      else { settle("steady"); runPass("steady") }
+      else { settle("steady"); timedPass("steady") }
 
     settle("parse")
     val (parseMbps, parseMbpsBest) = parseMbps0()
@@ -641,6 +668,7 @@ object Bench {
     val buildJson =
       if (buildRows.isEmpty) ""
       else s""","queries_build":${buildRows.mkString("[", ",", "]")}"""
+    val passJson = s""","passes":${passRows.mkString("[", ",", "]")}"""
     // adjudication advisories (empty fields omitted): contaminated/
     // forgiven regression evidence, cold-pass drift vs committed cold,
     // raw-steady-over-cold — see the blocks above for semantics
@@ -653,7 +681,7 @@ object Bench {
       advisArr("cold_contaminated", coldContam) +
       advisArr("steady_over_cold", steadyOverCold)
     val detail =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${qmap(results)}$steadyJson,"failed":$failed,"regressions":$regJson$advisJson$assertSummary,"parse_mbps":$parseMbps,"parse_mbps_best":$parseMbpsBest,"parse_spread":$parseSpread,"contaminated":$contaminated$envJson$memJson$buildJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${qmap(results)}$steadyJson,"failed":$failed,"regressions":$regJson$advisJson$assertSummary,"parse_mbps":$parseMbps,"parse_mbps_best":$parseMbpsBest,"parse_spread":$parseSpread,"contaminated":$contaminated$envJson$memJson$buildJson$passJson,"sf":"$sfDir"}"""
     // full runs only: a SPARK_GRAFT_QUERIES spot run must not clobber the
     // committed full-catalog artifact. SPARK_GRAFT_DETAIL redirects the
     // full map elsewhere (rehearsal sweeps record per-query factors

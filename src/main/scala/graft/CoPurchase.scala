@@ -26,7 +26,7 @@ object CoPurchase {
     * per process per sfDir and served from parquet thereafter.
     */
   def pairCounts(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(TmpDirs.buildOnce("copurchase_rel", dir) { out =>
+    Tables.artifact(s, TmpDirs.buildOnce("copurchase_rel", dir) { out =>
       val op = Tables(s, dir, "lineitem")
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
         .distinct()

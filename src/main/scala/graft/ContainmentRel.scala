@@ -47,11 +47,11 @@ object ContainmentRel {
 
   /** (id, __n, __rep, __m, __second) — class-annotated per-doc sets. */
   def docMap(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, dir)}/docmap")
+    Tables.artifact(s, s"${ensure(s, dir)}/docmap")
 
   /** (id_a, id_b, inter, n_a, n_b) — class-representative pairs at the
     * 0.6 pigeonhole bound.
     */
   def repPairs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, dir)}/reppairs")
+    Tables.artifact(s, s"${ensure(s, dir)}/reppairs")
 }

@@ -11,6 +11,16 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** Entries in Spark's JVM-wide cache of generated classes
+    * (`spark.sql.codegen.cache.maxEntries`, a static conf read at the
+    * first codegen; Spark's default is 100). One pass over the catalog
+    * uses about 2,500 distinct classes, and an LRU cache smaller than
+    * a cyclic working set misses on nearly every access, so at 100 (or
+    * 2,000) every pass recompiles most of them. PLANS.md "Codegen
+    * cache" has the counts this is sized from.
+    */
+  val CodegenCacheEntries: Int = 4096
+
   def builder(master: String = "local[*]",
       shufflePartitions: Int = 32): SparkSession.Builder =
     SparkSession.builder()
@@ -19,6 +29,8 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries",
+        CodegenCacheEntries.toString)
 
   /** Register every graft kernel ([[functions.Kernels]]: vector, sketch,
     * text, sketch-gate, range-bucket and aggregate functions, plus

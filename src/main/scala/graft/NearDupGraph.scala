@@ -41,11 +41,11 @@ object NearDupGraph {
 
   /** (id_a, id_b, inter, jaccard) — exact LSH-gated jaccard ≥ 0.5 pairs. */
   def pairs05(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, dir)}/pairs")
+    Tables.artifact(s, s"${ensure(s, dir)}/pairs")
 
   /** (id, comp) — connected-component labels over [[pairs05]], one row
     * per document.
     */
   def labels05(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, dir)}/labels")
+    Tables.artifact(s, s"${ensure(s, dir)}/labels")
 }

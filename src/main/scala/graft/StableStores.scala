@@ -108,6 +108,7 @@ object StableStores {
           build(tmp.getPath)
           java.nio.file.Files.writeString(
             tmp.toPath.resolve("_FINGERPRINT"), fp): Unit
+          Tables.forget(dir)
           TmpDirs.deleteRec(new java.io.File(dir))
           try
             java.nio.file.Files.move(tmp.toPath,

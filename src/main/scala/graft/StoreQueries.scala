@@ -457,7 +457,7 @@ object StoreQueries {
     val (resident, batches) = ingest2Parts(s, dir)
     val outDir = ingest2Dir(s, dir)
     val admitted = batches.zipWithIndex.map { case (b, k) =>
-      b.join(s.read.parquet(s"$outDir/status_$k.parquet")
+      b.join(Tables.artifact(s, s"$outDir/status_$k.parquet")
         .filter(col("status") === "keep").select(col("id")), Seq("id"))
     }.reduce(_ unionByName _)
     tok(resident.unionByName(admitted))
@@ -468,7 +468,7 @@ object StoreQueries {
     * exhaustive exact Jaccard (resident set GROWING batch to batch). */
   def q204_neardup_ingest(s: SparkSession, dir: String): DataFrame = {
     val outDir = ingest2Dir(s, dir)
-    (0 to 2).map(k => s.read.parquet(s"$outDir/status_$k.parquet"))
+    (0 to 2).map(k => Tables.artifact(s, s"$outDir/status_$k.parquet"))
       .reduce(_ unionByName _)
       .select(col("batch"), col("id"), col("status"), col("match_id"))
       .orderBy(col("batch"), col("id"))
@@ -667,7 +667,7 @@ object StoreQueries {
     */
   def q206_neardup_sig_store(s: SparkSession, dir: String): DataFrame = {
     val out = sigStoreDir(s, dir)
-    (0 to 2).map(k => s.read.parquet(s"$out/status_$k.parquet"))
+    (0 to 2).map(k => Tables.artifact(s, s"$out/status_$k.parquet"))
       .reduce(_ unionByName _)
       .select(col("batch"), col("id"), col("status"), col("match_id"))
       .orderBy(col("batch"), col("id"))
@@ -867,7 +867,7 @@ object StoreQueries {
     */
   def q211_neardup_admit_stream(s: SparkSession, dir: String): DataFrame = {
     val root = admitStreamDir(s, dir)
-    s.read.parquet(s"$root/status")
+    Tables.artifact(s, s"$root/status")
       .select(col("batch"), col("id"), col("status"), col("match_id"))
       .orderBy(col("batch"), col("id"))
   }

@@ -9,15 +9,34 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  // Memoize analyzed plans per (session, path): avoids re-listing files
-  // and re-reading parquet footers on every one of the catalog's ~46
-  // queries. This caches PLANS, not data — each query still scans.
+  // Memoize analyzed plans per (session, path): a reopened path pays no
+  // file listing and no parquet footer-inference job. Base tables and
+  // the build-once artifacts graft writes itself ([[artifact]]) are both
+  // read through this memo. This caches PLANS, not data — each query
+  // still scans.
   private val planCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    planCache.computeIfAbsent((spark, sfDir, name),
-      { case (s, d, n) => load(s, d, n) })
+    planCache.computeIfAbsent((spark, s"$sfDir/$name.parquet"),
+      _ => load(spark, sfDir, name))
+
+  /** A parquet artifact graft wrote and never appends to (the
+    * [[TmpDirs.buildOnce]] relations, the write-once status files under
+    * a [[StableStores]] dir), read once per session. A store that grows
+    * after it is opened (an `IndexStore` `codes.parquet`) must not come
+    * through here: its memoized file listing would miss the appends.
+    */
+  def artifact(spark: SparkSession, path: String): DataFrame =
+    planCache.computeIfAbsent((spark, path), _ => spark.read.parquet(path))
+
+  /** Drop every memoized plan at or under `root` — called before a build
+    * (re)writes that dir, so no session keeps a stale listing of it.
+    */
+  private[graft] def forget(root: String): Unit =
+    planCache.keySet.removeIf { case (_, p) =>
+      p == root || p.startsWith(root + "/")
+    }: Unit
 
   private def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") {

@@ -53,6 +53,10 @@ object TmpDirs {
     * column pruning and predicate pushdown on every consumer. NOT a
     * cross-run cache: a fresh process rebuilds from its inputs (the
     * cross-process path is [[StableStores]]).
+    *
+    * Consumers read the written relation through [[Tables.artifact]],
+    * so each session lists it and infers its parquet schema once; a
+    * build first drops any memoized plan under its dir.
     */
   def buildOnce(name: String, dir: String)(build: String => Unit): String = {
     val canonical = new java.io.File(dir).getCanonicalPath
@@ -60,6 +64,7 @@ object TmpDirs {
     val key = s"$name|$canonical"
     this.synchronized {
       if (!built.contains(key)) {
+        Tables.forget(out)
         deleteRec(new java.io.File(out))
         val t0 = System.nanoTime()
         try build(out)

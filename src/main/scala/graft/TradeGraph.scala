@@ -24,7 +24,7 @@ object TradeGraph {
     * per process per sfDir and served from parquet thereafter.
     */
   def pairOrders(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(TmpDirs.buildOnce("tradegraph_rel", dir) { out =>
+    Tables.artifact(s, TmpDirs.buildOnce("tradegraph_rel", dir) { out =>
       // r19 build diet (r18 verdict item 3, guide §2.4/§3.1): the r18
       // form (broadcast join → distinct(c,s,o) → groupBy(c,s)) paid
       // TWO full-width post-join exchanges — the broadcast join left

@@ -82,6 +82,8 @@ object Main {
         .config("spark.sql.shuffle.partitions",
           sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "32"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries",
+          graft.GraftSession.CodegenCacheEntries.toString)
         .getOrCreate())
 
   private def scan(spark: SparkSession, a: Args): DataFrame = {

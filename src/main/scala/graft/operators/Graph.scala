@@ -9,15 +9,15 @@ import org.apache.spark.sql.functions._
   * [[Dedup.connectedComponents]] (the other resident graph operator).
   *
   * Scale shape: the edge list is the only big relation; every
-  * iteration is one keyed join (edges ⋈ per-node rates on src) plus
+  * iteration is one keyed join (edges ⋈ per-node ranks on src) plus
   * one combinable aggregation (contributions by dst) — the standard
   * distributed PageRank step. The edge relation is repartitioned by
   * src and localCheckpointed ONCE (the checkpoint preserves the hash
   * partitioning, so the per-iteration join shuffles only the
-  * node-sized rate side, never the edges again), everything else that
-  * is reused — out-degrees, the node set, each iteration's ranks — is
-  * node-sized and localCheckpointed so lineage doesn't stack across
-  * iterations. The 100× rehearsal of the first cut (which
+  * node-sized rank side, never the edges again), everything else that
+  * is reused — the node set with its out-degrees, each iteration's
+  * ranks — is node-sized and localCheckpointed so lineage doesn't
+  * stack across iterations. The 100× rehearsal of the first cut (which
   * checkpointed an edges⋈outdeg relation and re-shuffled the full
   * edge mass twice per iteration) measured 529 s / steady OOM at
   * ~120M directed edges; this shape is the fix.
@@ -90,7 +90,7 @@ object Graph {
     // nulls (min() skips them), min ≤ 0 detects the corrupting weights,
     // isnan catches NaN (which compares ABOVE all doubles in Spark, so
     // min ≤ 0 alone would miss it). Unweighted keeps the bare plan.
-    val out = (weightCol match {
+    val outStrength = weightCol match {
       case None => e.groupBy(col("__src")).agg(sum(col("__w")).as("__od"))
       case Some(_) => e.groupBy(col("__src"))
         .agg(sum(col("__w")).as("__odRaw"), min(col("__w")).as("__wmin"),
@@ -104,27 +104,30 @@ object Graph {
                 "> 0 (violating src node: "),
               col("__src").cast("string"), lit(")"))))
             .otherwise(col("__odRaw")).as("__od"))
-    }).localCheckpoint()
-    val nodes = e.select(col("__src").as("node"))
-      .union(e.select(col("__dst").as("node")))
-      .distinct().localCheckpoint()
-    val n = nodes.count()
+    }
+    // every node with its out-strength (null for a node without
+    // out-edges, which no edge reads): the ranks carry `__od` from here
+    // on, so an iteration joins the edges with the ranks directly. The
+    // weighted check above runs inside this checkpoint, before any
+    // iteration.
+    val (nodes, n) = PlanUtil.checkpointCounted(
+      e.select(col("__src").as("node"))
+        .union(e.select(col("__dst").as("node")))
+        .distinct()
+        .join(outStrength, col("node") === col("__src"), "left")
+        .select(col("node"), col("__od")))
     val teleport = (1.0 - damping) / n
     var ranks = nodes.withColumn("r", lit(1.0) / n)
     var it = 0
     var converged = false
     while (it < iters && !converged) {
-      // r/od folded into a node-sized rate relation BEFORE touching the
-      // edges: the big join carries one double per edge and the edge
-      // side is already src-partitioned, so only the rates shuffle
-      val rate = ranks.join(out, col("node") === col("__src"))
-        .select(col("__src").as("__rsrc"), (col("r") / col("__od"))
-          .as("__rate"))
-      val contrib = e.join(rate, col("__src") === col("__rsrc"))
+      // the edge side is already src-partitioned, so only the node-sized
+      // ranks shuffle; a contribution is (r/od)·w, in that association
+      val contrib = e.join(ranks, col("__src") === col("node"))
         .groupBy(col("__dst"))
-        .agg(sum(col("__rate") * col("__w")).as("__c"))
+        .agg(sum((col("r") / col("__od")) * col("__w")).as("__c"))
       val next = nodes.join(contrib, col("node") === col("__dst"), "left")
-        .select(col("node"), (lit(teleport) +
+        .select(col("node"), col("__od"), (lit(teleport) +
           lit(damping) * coalesce(col("__c"), lit(0.0))).as("r"))
         .localCheckpoint()
       if (tol > 0) {
@@ -144,7 +147,7 @@ object Graph {
     }
     if (tol > 0 && !converged) log.info(
       s"pageRank: iteration cap $iters reached without convergence")
-    ranks
+    ranks.select(col("node"), col("r"))
   }
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -209,10 +212,10 @@ object Graph {
     val e0 = edges.select(
         least(srcCol, dstCol).as("u"), greatest(srcCol, dstCol).as("v"))
       .filter(col("u") =!= col("v"))
-    val e = (if (assumeDistinct) e0 else e0.distinct())
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      // feeds degrees AND the orientation join
+    // feeds degrees AND the orientation join; m = its edge count
+    val (e, m) = PlanUtil.checkpointCounted(
+      if (assumeDistinct) e0 else e0.distinct(),
+      Some(org.apache.spark.storage.StorageLevel.DISK_ONLY))
     val deg = e.select(col("u").as("node"))
       .union(e.select(col("v").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))
@@ -241,7 +244,6 @@ object Graph {
     // and user-specified repartition counts are exempt from AQE
     // coalescing. Bonus: w1/w2 inherit ONE src-hash exchange instead
     // of the two the sort-merge join would plan.
-    val m = e.count()
     val sp = edges.sparkSession.conf
       .get("spark.sql.shuffle.partitions", "32").toInt
     val bigCensus = m > 16000000L
@@ -270,8 +272,8 @@ object Graph {
     // machinery; ~0.3 GB at 120M edges / fpp 0.02) prunes the wedge
     // stream map-side to ~triangles + fpp·wedges BEFORE the shuffled
     // semi join — the standard distributed-triangle shape at edge
-    // counts where the exact edge set no longer broadcasts. The count
-    // is a cheap job: e is already checkpointed.
+    // counts where the exact edge set no longer broadcasts. `m` came
+    // with e's checkpoint, so choosing the shape runs no job.
     val closing0 = oriented.select(col("src").as("b"), col("dst").as("c"))
     val tris =
       if (m <= broadcastEdgeLimit)
@@ -437,8 +439,9 @@ object Graph {
     * so lineage never stacks. Per round: one edge-mass join + one
     * distinct + one node-keyed anti-join. Rounds are bounded by
     * min(eccentricity, maxHops) — the loop stops as soon as a frontier
-    * comes back empty (the count is the same action that materializes
-    * the round's checkpoint, so the driver check costs no extra job).
+    * comes back empty. The frontier's size is an Observation on the
+    * action that materializes the round's checkpoint, so the driver
+    * check adds no job of its own.
     *
     * Duplicate edges are deduplicated up front so a multi-edge cannot
     * fan the frontier join out; seed ids keep the caller's type (must
@@ -452,18 +455,19 @@ object Graph {
       .distinct()
       .repartition(col("__u"))
       .localCheckpoint()
-    var visited = seeds.select(seedCol.as("node")).distinct()
-      .withColumn("dist", lit(0)).localCheckpoint()
+    val (seeded, nSeeds) = PlanUtil.checkpointCounted(
+      seeds.select(seedCol.as("node")).distinct().withColumn("dist", lit(0)))
+    var visited = seeded
     var frontier = visited.select(col("node"))
     var hop = 0
-    var exhausted = frontier.count() == 0
+    var exhausted = nSeeds == 0
     while (hop < maxHops && !exhausted) {
-      val next = e.join(frontier.select(col("node").as("__u")), Seq("__u"))
-        .select(col("__v").as("node")).distinct()
-        .join(visited.select(col("node")), Seq("node"), "left_anti")
-        .withColumn("dist", lit(hop + 1))
-        .localCheckpoint()
-      if (next.count() == 0) exhausted = true
+      val (next, nNext) = PlanUtil.checkpointCounted(
+        e.join(frontier.select(col("node").as("__u")), Seq("__u"))
+          .select(col("__v").as("node")).distinct()
+          .join(visited.select(col("node")), Seq("node"), "left_anti")
+          .withColumn("dist", lit(hop + 1)))
+      if (nNext == 0) exhausted = true
       else {
         visited = visited.union(next).localCheckpoint()
         frontier = next.select(col("node"))

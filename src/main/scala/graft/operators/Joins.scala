@@ -97,11 +97,11 @@ object Joins {
     * side of the big table. When the small side is selective but too big
     * to broadcast-join cheaply — the 100 TB fact-to-filtered-dimension
     * case — the shuffle carries only probable matches instead of the
-    * whole fact table. `expectedItems` defaults to one count job on the
-    * small side.
+    * whole fact table. `expectedItems` defaults to the small side's row
+    * count, observed on its checkpoint.
     *
-    * The small side's plan is referenced three times (count, bloom
-    * build, the join probe side) — it is `localCheckpoint`ed here so an
+    * The small side's plan is referenced twice (bloom build, the join
+    * probe side) — it is `localCheckpoint`ed here so an
     * expensive filtered-dimension plan computes ONCE (the
     * connectedComponents lesson: multiply-referenced relations
     * re-execute, and AQE broadcast re-planning defeats ReusedExchange).
@@ -118,10 +118,10 @@ object Joins {
       bigKey: String, smallKey: String,
       expectedItems: Option[Long] = None,
       fpp: Double = 0.01): DataFrame = {
-    val smallCk = small.localCheckpoint()
-    // count off the checkpointed relation (near-free: partitions are
-    // already materialized); expectedItems only overrides SIZING
-    val cnt = smallCk.count()
+    // the count rides the checkpoint's own action as an Observation
+    // (a count() after it would be a second action of two jobs);
+    // expectedItems only overrides SIZING
+    val (smallCk, cnt) = PlanUtil.checkpointCounted(small)
     // empty small side: stat.bloomFilter's aggregate yields a null
     // buffer (readFrom NPEs — found by the equality fuzz spec), and the
     // semi join is empty by definition anyway

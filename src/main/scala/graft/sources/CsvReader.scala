@@ -640,7 +640,6 @@ object CsvReader {
   // ----------------------------------------------------------- FILE path
 
   private def filePath(spark: SparkSession, path: String, opts: CsvOptions): CsvScan = {
-    import spark.implicits._
     // tiny driver-side sample for detection + header resolution — comment
     // and empty lines are invisible to the parser (parser.zig:324-338), so
     // they can't become the header
@@ -753,7 +752,6 @@ object CsvReader {
     */
   private def linePath(spark: SparkSession, linesDf: DataFrame, opts: CsvOptions,
       linebreak: String, window: Option[(Seq[String], Boolean)]): CsvScan = {
-    import spark.implicits._
     // contiguous global line index (narrow; no shuffle)
     val schema0 = linesDf.schema.add(LineNo, LongType, nullable = false)
     val indexed = spark.createDataFrame(

@@ -35,6 +35,8 @@ object SparkSpec {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.codegen.cache.maxEntries",
+      GraftSession.CodegenCacheEntries.toString)
     .getOrCreate()
 
   // every writeTmp dir is removed when the test JVM exits — a full
