@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextExprs, TextFunctions}
@@ -869,19 +869,18 @@ object Dedup {
     // would execute twice (measured: q92 6.3 s → 3.4 s at sf0.1)
     val p0 = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .localCheckpoint()
-    val e = p0
+    val (e, edgeCount) = PlanUtil.checkpointCounted(p0
       .union(p0.select(col("dst").as("src"), col("src").as("dst")))
       .join(vset, col("src") === col("__vid")).drop("__vid")
       .join(vset, col("dst") === col("__vid")).drop("__vid")
-      .distinct()
-      .localCheckpoint()
+      .distinct())
 
     // Small-graph endgame (the standard finish of distributed CC — Kiveris
     // et al. §6 contract locally once the edge set fits): a near-dup edge
     // list under the threshold is solved with one driver union-find instead
     // of O(diameter) rounds × 3 jobs each. The distributed loop below
-    // remains the path for larger graphs.
-    val edgeCount = e.count()
+    // remains the path for larger graphs. `edgeCount` came with e's
+    // checkpoint.
     val idType = e.schema("src").dataType
     val comparableId = idType match {
       case _: org.apache.spark.sql.types.NumericType => true
@@ -1469,13 +1468,20 @@ object Dedup {
       k: Int = 4, w: Int = 4, minShared: Int = 2,
       maxFingerprintDf: Long = 1000L): DataFrame = {
     require(minShared >= 1, "minShared must be >= 1")
-    val fp = winnowingFingerprints(df, idCol, textCol, k, w)
+    // a fingerprint's df counts the input rows holding it (the kernel
+    // emits each once per row), so no df exceeds the input's row count:
+    // observed on fp's checkpoint, an input of at most maxFingerprintDf
+    // rows skips a prune that could drop nothing
+    val input = Observation()
+    val fp = winnowingFingerprints(
+        df.observe(input, count(lit(1)).as("rows")), idCol, textCol, k, w)
       .localCheckpoint() // feeds df-prune, both join sides AND sizes
+    val inputRows = input.get("rows").asInstanceOf[Long]
     // pruning creates a NEW relation worth its own checkpoint; with
     // pruning disabled `fp` is already checkpointed — a second
     // localCheckpoint would re-materialize the corpus-sized relation
     // into the storage pool for nothing
-    val sized = if (maxFingerprintDf > 0) {
+    val sized = if (maxFingerprintDf > 0 && inputRows > maxFingerprintDf) {
       val hot = fp.groupBy(col("fingerprint"))
         .agg(count(lit(1)).as("__df"))
         .filter(col("__df") > maxFingerprintDf)

@@ -16,11 +16,11 @@ import org.apache.spark.sql.functions._
   * partitioning, so the per-iteration join shuffles only the
   * node-sized rank side, never the edges again), everything else that
   * is reused — the node set with its out-degrees, each iteration's
-  * ranks — is node-sized and localCheckpointed so lineage doesn't
-  * stack across iterations. The 100× rehearsal of the first cut (which
-  * checkpointed an edges⋈outdeg relation and re-shuffled the full
-  * edge mass twice per iteration) measured 529 s / steady OOM at
-  * ~120M directed edges; this shape is the fix.
+  * ranks but the last — is node-sized and localCheckpointed so
+  * lineage doesn't stack across iterations. The 100× rehearsal of the
+  * first cut (which checkpointed an edges⋈outdeg relation and
+  * re-shuffled the full edge mass twice per iteration) measured 529 s
+  * / steady OOM at ~120M directed edges; this shape is the fix.
   */
 object Graph {
 
@@ -81,55 +81,70 @@ object Graph {
     require(typed.schema(0).dataType == typed.schema(1).dataType,
       s"src/dst types must agree, got ${typed.schema.map(_.dataType)}")
     val e = typed.repartition(col("__src")).localCheckpoint()
+    // every node with its out-strength `__od`, in ONE aggregation over
+    // both endpoint columns: a src row carries its edge weight and an
+    // out-edge mark, a dst row neither, so a node without out-edges (no
+    // edge reads its `__od`) gets null. The ranks carry `__od` from here
+    // on, so an iteration joins the edges with the ranks directly.
+    //
     // weighted path: validate the scaladoc contract LOUDLY inside the
     // out-strength value (a zero/negative strength would make
     // rate = r/0 = Inf and NaN-poison the rank vector SILENTLY —
     // double division doesn't ANSI-throw; null weights would silently
     // drop edges from the contribution join). The check rides the
-    // aggregate the path already pays: count(__w) < count(*) detects
-    // nulls (min() skips them), min ≤ 0 detects the corrupting weights,
-    // isnan catches NaN (which compares ABOVE all doubles in Spark, so
-    // min ≤ 0 alone would miss it). Unweighted keeps the bare plan.
-    val outStrength = weightCol match {
-      case None => e.groupBy(col("__src")).agg(sum(col("__w")).as("__od"))
-      case Some(_) => e.groupBy(col("__src"))
+    // aggregate the path already pays: count(__w) < count(__out)
+    // detects nulls (min() skips them), min ≤ 0 detects the corrupting
+    // weights, isnan catches NaN (which compares ABOVE all doubles in
+    // Spark, so min ≤ 0 alone would miss it); it runs inside this
+    // checkpoint, before any iteration. Unweighted keeps the bare plan.
+    val ends = e.select(col("__src").as("node"), col("__w"),
+        lit(1).as("__out"))
+      .union(e.select(col("__dst").as("node"),
+        lit(null).cast("double").as("__w"),
+        lit(null).cast("int").as("__out")))
+      .groupBy(col("node"))
+    val (nodes, n) = PlanUtil.checkpointCounted(weightCol match {
+      case None => ends.agg(sum(col("__w")).as("__od"))
+      case Some(_) => ends
         .agg(sum(col("__w")).as("__odRaw"), min(col("__w")).as("__wmin"),
-          count(lit(1)).as("__ne"), count(col("__w")).as("__nw"))
-        .select(col("__src"),
-          when(col("__nw") < col("__ne") || col("__wmin") <= 0.0 ||
-              isnan(col("__wmin")) || isnan(col("__odRaw")) ||
-              col("__odRaw") === lit(Double.PositiveInfinity),
+          count(col("__out")).as("__ne"), count(col("__w")).as("__nw"))
+        .select(col("node"),
+          when(col("__ne") > 0 && (col("__nw") < col("__ne") ||
+              col("__wmin") <= 0.0 || isnan(col("__wmin")) ||
+              isnan(col("__odRaw")) ||
+              col("__odRaw") === lit(Double.PositiveInfinity)),
             raise_error(concat(
               lit("pageRank: edge weights must be non-null, finite and " +
                 "> 0 (violating src node: "),
-              col("__src").cast("string"), lit(")"))))
+              col("node").cast("string"), lit(")"))))
             .otherwise(col("__odRaw")).as("__od"))
-    }
-    // every node with its out-strength (null for a node without
-    // out-edges, which no edge reads): the ranks carry `__od` from here
-    // on, so an iteration joins the edges with the ranks directly. The
-    // weighted check above runs inside this checkpoint, before any
-    // iteration.
-    val (nodes, n) = PlanUtil.checkpointCounted(
-      e.select(col("__src").as("node"))
-        .union(e.select(col("__dst").as("node")))
-        .distinct()
-        .join(outStrength, col("node") === col("__src"), "left")
-        .select(col("node"), col("__od")))
+    })
     val teleport = (1.0 - damping) / n
     var ranks = nodes.withColumn("r", lit(1.0) / n)
     var it = 0
     var converged = false
     while (it < iters && !converged) {
       // the edge side is already src-partitioned, so only the node-sized
-      // ranks shuffle; a contribution is (r/od)·w, in that association
+      // ranks shuffle; a contribution is (r/od)·w, in that association.
+      // Each node adds one 0.0 contribution carrying its `__od`, so the
+      // one aggregation by node also keeps the nodes without in-edges
+      // (at the teleport mass) — no join back to the node set; x + 0.0
+      // is x, so every sum is that of the edge contributions alone
       val contrib = e.join(ranks, col("__src") === col("node"))
-        .groupBy(col("__dst"))
-        .agg(sum((col("r") / col("__od")) * col("__w")).as("__c"))
-      val next = nodes.join(contrib, col("node") === col("__dst"), "left")
-        .select(col("node"), col("__od"), (lit(teleport) +
-          lit(damping) * coalesce(col("__c"), lit(0.0))).as("r"))
-        .localCheckpoint()
+        .select(col("__dst").as("node"),
+          ((col("r") / col("__od")) * col("__w")).as("__c"),
+          lit(null).cast("double").as("__od"))
+      val step = contrib
+        .union(nodes.select(col("node"), lit(0.0).as("__c"), col("__od")))
+        .groupBy(col("node"))
+        .agg(max(col("__od")).as("__od"), sum(col("__c")).as("__c"))
+        .select(col("node"), col("__od"),
+          (lit(teleport) + lit(damping) * col("__c")).as("r"))
+      // the last fixed-count iteration is read once, by the caller's own
+      // action: checkpointing it would be one more action writing what
+      // that action then reads back
+      val next =
+        if (tol == 0 && it == iters - 1) step else step.localCheckpoint()
       if (tol > 0) {
         // node-keyed join of two checkpointed node-sized relations +
         // a 1-row aggregate — the edges never re-enter the plan here
@@ -378,12 +393,12 @@ object Graph {
     */
   def partitionModularity(edges: DataFrame, srcCol: Column, dstCol: Column,
       labels: DataFrame, nodeCol: Column, labelCol: Column): DataFrame = {
-    val e = edges.select(
+    // feeds degrees AND the intra-label join; m = its edge count
+    val (e, m) = PlanUtil.checkpointCounted(edges.select(
         least(srcCol, dstCol).as("u"), greatest(srcCol, dstCol).as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull &&
         col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint() // feeds m, degrees AND the intra-label join
+      .distinct())
     // exact duplicate (node, label) rows would double-count the node's
     // degree and its intra edges through the joins; a node listed under
     // MULTIPLE labels still contributes to each (overlapping-community
@@ -402,7 +417,6 @@ object Graph {
       .groupBy(col("node")).agg(count(lit(1)).as("__d"))
       .join(lab, Seq("node"))
       .groupBy(col("label")).agg(sum(col("__d")).as("degree_sum"))
-    val m = e.count()
     require(m > 0, "partitionModularity: empty edge set")
     val byLabel = degl.join(intra, Seq("label"), "left_outer")
       .select(col("label"), coalesce(col("intra_edges"), lit(0L))

@@ -10,9 +10,11 @@ import graft.operators.{Graph, IndexStore, Joins, PlanUtil}
 /** Spark jobs per operation: no job for an answer graft already holds.
   * A build-once artifact reopened in the same session is served from
   * the `Tables` plan memo, counts after a checkpoint come from an
-  * Observation on the checkpointing action, and PageRank's iterations
-  * join the edges with the ranks directly. Jobs are counted by job
-  * group through the status tracker once the listener bus has drained.
+  * Observation on the checkpointing action, PageRank's iterations join
+  * the edges with the ranks directly and aggregate once, and a
+  * winnowing df prune that could drop nothing does not run. Jobs are
+  * counted by job group through the status tracker once the listener
+  * bus has drained.
   */
 class JobBudgetSpec extends SparkSpec {
   import spark.implicits._
@@ -145,6 +147,48 @@ class JobBudgetSpec extends SparkSpec {
     assert(jobs <= 5, s"bloomPrunedSemiJoin ran $jobs jobs")
   }
 
+  test("connectedComponents: the edge count that picks the union-find " +
+      "endgame is the mirrored edge count") {
+    // a 64-node path: 63 pairs mirror to 126 directed edges, and the
+    // distributed loop would need 64 rounds, past its 50-round cap —
+    // so the endgame must run at a limit of 126 and must not at 125
+    val n = 64L
+    val vertices = spark.range(1, n + 1).toDF("id")
+    val chain = (1L until n).map(i => (i, i + 1)).toDF("a", "b")
+    val labels = operators.Dedup.connectedComponents(vertices, "id", chain,
+        "a", "b", localEdgeLimit = 126L)
+      .collect().map(_.getLong(1))
+    assert(labels.length == n && labels.forall(_ == 1L))
+    val e = intercept[IllegalArgumentException] {
+      operators.Dedup.connectedComponents(vertices, "id", chain, "a", "b",
+        localEdgeLimit = 125L)
+    }
+    assert(e.getMessage.contains("did not converge"))
+  }
+
+  test("winnowingPairs: an input of at most maxFingerprintDf rows skips " +
+      "the df prune and gives the unpruned pairs") {
+    // a shared four-token prefix gives every doc the same first window
+    // minimum: a fingerprint with df 3
+    val docs = Seq(
+      (1L, "lorem ipsum dolor sit alpha beta gamma delta epsilon zeta"),
+      (2L, "lorem ipsum dolor sit alpha beta gamma delta epsilon eta"),
+      (3L, "lorem ipsum dolor sit kappa lambda mu nu xi omicron"))
+      .toDF("id", "text")
+    def pairs(maxDf: Long) = operators.Dedup.winnowingPairs(docs, "id",
+      "text", k = 2, w = 2, minShared = 1, maxFingerprintDf = maxDf)
+    val unpruned = rows(pairs(0L))
+    val (skipped, jobsSkip) = jobsOf(rows(pairs(3L)))
+    val (pruned, jobsPrune) = jobsOf(rows(pairs(2L)))
+    assert(skipped == unpruned)
+    // past the row count the prune still runs and drops the df-3 prefix
+    // fingerprint: docs 1 and 3 share nothing else
+    assert(unpruned.exists(_.startsWith("[1,3,")))
+    assert(!pruned.exists(_.startsWith("[1,3,")))
+    assert(pruned.exists(_.startsWith("[1,2,")))
+    assert(jobsSkip < jobsPrune, s"$jobsSkip vs $jobsPrune")
+  }
+
   private val graph = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 2L),
     (5L, 1L), (1L, 4L)).toDF("s", "d")
 
@@ -155,14 +199,15 @@ class JobBudgetSpec extends SparkSpec {
     assert(ranks.keySet == Set(1L, 2L, 3L, 4L, 5L))
     // node 5 has no in-edge: it settles at the teleport mass (1 - d)/N
     assert(ranks(5L) == (1.0 - 0.85) / 5)
-    // edges, nodes ⟕ out-strength, two iterations and the collect; a
-    // separate out-strength checkpoint, a count() and a rate join per
-    // iteration made it 20
-    assert(jobs <= 15, s"pageRank(iters = 2) ran $jobs jobs")
+    // edges, nodes with their out-strength, the first iteration and a
+    // collect that runs the second; a separate out-strength checkpoint,
+    // a count(), a rate join and a join back to the node set per
+    // iteration and a checkpoint of the last made it 20
+    assert(jobs <= 10, s"pageRank(iters = 2) ran $jobs jobs")
     val (_, jobsW) = jobsOf(Graph.pageRank(
       graph.withColumn("w", col("s") + 1), col("s"), col("d"), iters = 2,
       weightCol = Some(col("w"))).collect())
-    assert(jobsW <= 15, s"weighted pageRank(iters = 2) ran $jobsW jobs")
+    assert(jobsW <= 10, s"weighted pageRank(iters = 2) ran $jobsW jobs")
   }
 
   test("triangleCounts: m is the canonical edge count and the census " +
