@@ -147,27 +147,6 @@ object Dedup {
 
   // ---------------------------------------------------------------- minhash
 
-  /** LSH candidate pairs from signatures: band the signature
-    * (bands × rowsPerBand = numHashes), hash each band, self-join per
-    * (band, bandHash) bucket. Returns (id_a, id_b) with id_a < id_b.
-    */
-  def lshCandidates(
-      sig: DataFrame, idCol: String,
-      bands: Int, rowsPerBand: Int): DataFrame = {
-    // one-kernel band derivation (SketchExprs.BandHashes, value-equal
-    // to the per-band xxhash64(slice(...)) columns it replaced — that
-    // form paid `bands` boxed slice copies per row, 13.4 s of a 21 s
-    // admission step at 495k docs)
-    val banded = sig.select(col(idCol),
-      posexplode(graft.functions.SketchExprs.band_hashes(
-        col("sig"), bands, rowsPerBand)).as(Seq("__band", "__bh")))
-    val l = banded.select(col(idCol).as("id_a"), col("__band"), col("__bh"))
-    val r = banded.select(col(idCol).as("id_b"), col("__band"), col("__bh"))
-    l.join(r, Seq("__band", "__bh"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
-  }
-
   /** Estimated Jaccard from signatures: fraction of equal components. */
   def estimateJaccard(sig: DataFrame, idCol: String, pairs: DataFrame,
       numHashes: Int = 128): DataFrame = {
@@ -180,8 +159,10 @@ object Dedup {
         (eq.cast("double") / numHashes).as("est_jaccard"))
   }
 
-  /** Full MinHash-LSH near-dup pipeline: signatures → banding → candidate
-    * pairs → signature-estimated Jaccard ≥ threshold.
+  /** Full MinHash-LSH near-dup pipeline: signatures ([[sigPrep]]) →
+    * banding ([[bandCandidates]]) → signature-estimated Jaccard ≥
+    * threshold. The estimate is the sketch's own answer; the exact twin
+    * is [[jaccardPairsLsh]].
     */
   def minhashNearDupPairs(
       df: DataFrame, idCol: String, textCol: String,
@@ -189,53 +170,27 @@ object Dedup {
       numHashes: Int = 128, bands: Int = 32): DataFrame = {
     require(bands > 0 && numHashes % bands == 0,
       s"bands ($bands) must divide numHashes ($numHashes)")
-    // The signature relation feeds FOUR plan branches (both band-join
-    // sides + both estimate sides); a bare repartition is NOT shared
-    // across them — AQE re-plans the broadcast sides under their own
-    // BroadcastExchange, so ReusedExchange never matches and the per-row
-    // sketch ran once per branch (executed-plan-verified, 4 scans).
-    // Widen a single-file corpus so sketching runs on every core, then
-    // localCheckpoint materializes the |docs| × numHashes longs once.
-    // shingle-less docs would carry all-sentinel signatures that match
-    // each other 128/128 (est_jaccard = 1.0) while the exact twin
-    // (jaccardPairs, inter >= 1) emits nothing for them — drop up front.
-    // Shingle once, filter on the column, THEN minhash: filtering on a
-    // re-tokenization would run the trim+split regex twice per row
-    // (Filter and Project don't share subexpressions).
-    val sig = PlanUtil.widenIfNarrow(df.select(col(idCol), col(textCol)))
-      .select(col(idCol),
-        graft.functions.SketchExprs.shingle_hashes(
-          TextFunctions.tokensWs(col(textCol)), shingleWords).as("__sh"))
-      .filter(size(col("__sh")) > 0)
-      .select(col(idCol),
-        graft.functions.SketchExprs.minhash_array(col("__sh"), numHashes)
-          .as("sig"))
-      .localCheckpoint()
-    val cand = lshCandidates(sig, idCol, bands, numHashes / bands)
-    estimateJaccard(sig, idCol, cand, numHashes)
+    val sig = sigPrep(df, idCol, textCol, "id", shingleWords, numHashes)
+    val cand = bandCandidates(sig.withColumnRenamed("id", "id_a"),
+      sig.withColumnRenamed("id", "id_b"), bands, numHashes / bands,
+      col("id_a") < col("id_b"))
+    estimateJaccard(sig.withColumnRenamed("__sig", "sig"), "id", cand,
+        numHashes)
       .filter(col("est_jaccard") >= threshold)
   }
 
-  /** Cross-TABLE near-duplicate join (record linkage / entity
-    * resolution): all (left, right) pairs whose distinct word-shingle
-    * Jaccard ≥ `threshold`. LSH-gated — minhash signatures band-join
-    * ACROSS the two tables, so work is proportional to band collisions,
-    * never |L|·|R|; each candidate is then verified EXACTLY with a sorted
-    * merge-scan intersection over the docs' shingle-hash sets. Default
-    * band geometry (r=2 × 64 bands): P(candidate | jaccard=t) =
-    * 1-(1-t²)^64 ≈ 1-1e-8 at t=0.5 — effectively total recall at the
-    * thresholds this gates.
-    */
-  /** (outId, __sh sorted-shingle-hashes, __sig minhash) relation for one
-    * side of a cross-table band join, localCheckpointed: each side feeds
-    * a band branch and a verify branch with DIFFERENT column sets, so
-    * after pruning the subtrees aren't identical and ReusedExchange
-    * can't share them — the checkpoint materializes the scan once. Docs
-    * shorter than shingleWords have NO shingles: they can never reach a
-    * positive Jaccard, but their all-sentinel minhash signatures would
-    * band-collide with EVERY other empty doc and 0/0 division yields
-    * NaN — which Spark orders ABOVE every number, so `NaN >= threshold`
-    * would pass. Drop them up front.
+  /** The one signature builder of the MinHash family: (outId, `__sh`
+    * sorted distinct shingle hashes, `__sig` MinHash signature), widened
+    * (single-file corpora) and checkpointed once. Every consumer reads
+    * it from several plan branches (band sides, verify sides) with
+    * different column sets, so after pruning the subtrees differ and
+    * ReusedExchange can't share them — the checkpoint materializes the
+    * scan and the sketch once. Docs shorter than shingleWords have NO
+    * shingles: they can never reach a positive Jaccard, but their
+    * all-sentinel signatures would band-collide with EVERY other empty
+    * doc (estimate 1.0) and 0/0 division yields NaN — which Spark
+    * orders ABOVE every number, so `NaN >= threshold` would pass. Drop
+    * them up front.
     * DISK_ONLY checkpoint: the relation carries corpus-sized `__sh`
     * shingle-hash arrays, and the default MEMORY_AND_DISK unroll
     * heap-buffers each partition first (the r13 unroll-OOM class) —
@@ -254,46 +209,72 @@ object Dedup {
       .localCheckpoint(eager = true,
         org.apache.spark.storage.StorageLevel.DISK_ONLY)
 
-  /** Explode a [[sigPrep]] relation to its (id, band, bandHash) keys
-    * (one-kernel derivation — see [[lshCandidates]]).
+  /** The key columns of a [[sigPrep]]-shaped relation: everything but
+    * the sketch.
     */
-  private def sigBands(df: DataFrame, id: String, bands: Int,
-      rowsPerBand: Int): DataFrame =
-    df.select(col(id),
-      posexplode(graft.functions.SketchExprs.band_hashes(
-        col("__sig"), bands, rowsPerBand)).as(Seq("__band", "__bh")))
+  private def sigKeys(df: DataFrame): Seq[String] =
+    df.columns.toSeq.filterNot(c => c == "__sh" || c == "__sig")
 
-  /** Exact sorted-merge Jaccard verification of (id_a, id_b) candidates
-    * against two [[sigPrep]] relations; keeps pairs with
-    * round(jaccard, 4) ≥ threshold.
+  /** LSH band candidates: the signatures of `a` (keyed `id_a`) and `b`
+    * (keyed `id_b` plus any tag columns) cut into `bands` ×
+    * `rowsPerBand` components, each band hashed (one kernel,
+    * [[graft.functions.SketchExprs.BandHashes]]; the per-band
+    * xxhash64(slice(...)) columns it replaced paid `bands` boxed slice
+    * copies per row, 13.4 s of a 21 s admission step at 495k docs) and
+    * joined per (band, bandHash) bucket. Returns each colliding
+    * (id_a, b's keys) row that passes `keep` once.
+    */
+  private def bandCandidates(a: DataFrame, b: DataFrame, bands: Int,
+      rowsPerBand: Int, keep: Column = lit(true)): DataFrame = {
+    def banded(df: DataFrame) = df.select(sigKeys(df).map(col) :+
+      posexplode(graft.functions.SketchExprs.band_hashes(
+        col("__sig"), bands, rowsPerBand)).as(Seq("__band", "__bh")): _*)
+    banded(a).join(banded(b), Seq("__band", "__bh"))
+      .filter(keep).drop("__band", "__bh").distinct()
+  }
+
+  /** Exact sorted-merge Jaccard verification of [[bandCandidates]]
+    * rows against their two [[sigPrep]] relations; keeps pairs with
+    * round(jaccard, 4) ≥ threshold. Returns (id_a, b's keys, inter,
+    * jaccard).
     */
   private def verifyJaccard(cand: DataFrame, a: DataFrame, b: DataFrame,
-      threshold: Double): DataFrame =
+      threshold: Double): DataFrame = {
+    val bKeys = sigKeys(b)
+    val keys = "id_a" +: bKeys
     cand
       .join(a.select(col("id_a"), col("__sh").as("__sha")), "id_a")
-      .join(b.select(col("id_b"), col("__sh").as("__shb")), "id_b")
-      .select(col("id_a"), col("id_b"),
+      .join(b.select(bKeys.map(col) :+ col("__sh").as("__shb"): _*), bKeys)
+      .select(keys.map(col) ++ Seq(
         graft.functions.VectorExprs
           .sorted_inter_count(col("__sha"), col("__shb")).as("inter"),
-        size(col("__sha")).as("__na"), size(col("__shb")).as("__nb"))
-      .select(col("id_a"), col("id_b"), col("inter"),
+        size(col("__sha")).as("__na"), size(col("__shb")).as("__nb")): _*)
+      .select(keys.map(col) ++ Seq(col("inter"),
         round(col("inter").cast("double") /
-          (col("__na") + col("__nb") - col("inter")), 4).as("jaccard"))
+          (col("__na") + col("__nb") - col("inter")), 4).as("jaccard")): _*)
       .filter(col("jaccard") >= threshold)
+  }
 
+  /** Cross-TABLE near-duplicate join (record linkage / entity
+    * resolution): all (left, right) pairs whose distinct word-shingle
+    * Jaccard ≥ `threshold`. LSH-gated — minhash signatures band-join
+    * ACROSS the two tables, so work is proportional to band collisions,
+    * never |L|·|R|; each candidate is then verified EXACTLY with a sorted
+    * merge-scan intersection over the docs' shingle-hash sets. Default
+    * band geometry (r=2 × 64 bands): P(candidate | jaccard=t) =
+    * 1-(1-t²)^64 ≈ 1-1e-8 at t=0.5 — effectively total recall at the
+    * thresholds this gates.
+    */
   def fuzzyJoin(left: DataFrame, leftId: String, leftText: String,
       right: DataFrame, rightId: String, rightText: String,
       threshold: Double, shingleWords: Int = 3,
       numHashes: Int = 128, bands: Int = 64): DataFrame = {
     require(numHashes % bands == 0, s"bands ($bands) must divide numHashes")
-    val rpb = numHashes / bands
     val a = sigPrep(left, leftId, leftText, "id_a", shingleWords, numHashes)
     val b = sigPrep(right, rightId, rightText, "id_b", shingleWords,
       numHashes)
-    val cand = sigBands(a, "id_a", bands, rpb)
-      .join(sigBands(b, "id_b", bands, rpb), Seq("__band", "__bh"))
-      .select(col("id_a"), col("id_b")).distinct()
-    verifyJaccard(cand, a, b, threshold)
+    verifyJaccard(bandCandidates(a, b, bands, numHashes / bands), a, b,
+      threshold)
   }
 
   // ------------------------------------------------------------ exact jaccard
@@ -732,10 +713,8 @@ object Dedup {
     * together with P≈0.006, so the verify set stays tiny. Results equal
     * [[jaccardPairs]] (same hash space, exact verification).
     *
-    * Plan shape: the shingle relation is widened (single-file corpora)
-    * and localCheckpoint'ed once — a shared repartition is NOT reused
-    * across branches that end under a broadcast join (AQE re-plans them
-    * in their own BroadcastExchange; 4 scans observed before the fix).
+    * Plan shape: [[sigPrep]] (one checkpoint of shingles and
+    * signatures) → [[bandCandidates]] self-join → [[verifyJaccard]].
     */
   def jaccardPairsLsh(
       df: DataFrame, idCol: String, textCol: String,
@@ -743,41 +722,13 @@ object Dedup {
       numHashes: Int = 128, bands: Int = 64): DataFrame = {
     require(bands > 0 && numHashes % bands == 0,
       s"bands ($bands) must divide numHashes ($numHashes)")
-    import graft.functions.{SketchExprs, VectorExprs}
-    // base feeds 4 consumers (both band sides + both verify sides) and
-    // sig feeds 2; a bare repartition does NOT get shared — AQE wraps the
-    // broadcast sides in BroadcastExchange over a re-planned subtree, so
-    // ReusedExchange never matches and the shingle scan ran 4×
-    // (executed-plan-verified). Widen single-file corpora so shingling
-    // parallelizes; localCheckpoint materializes each relation once.
-    // shingle-less docs (shorter than shingleWords) never form a valid
-    // pair (sparse jaccardPairs needs inter >= 1) but their all-sentinel
-    // signatures would band-collide pairwise and produce 0/0 = NaN
-    // jaccards, which pass any >= threshold filter (Spark orders NaN
-    // above every number) — drop them before signing
-    val base = PlanUtil
-      .widenIfNarrow(df.select(col(idCol).as("id"), col(textCol).as("__t")))
-      .select(col("id"),
-        SketchExprs.shingle_hashes(
-          TextFunctions.tokensWs(col("__t")), shingleWords).as("shingles"))
-      .filter(size(col("shingles")) > 0)
-      .localCheckpoint()
-    val sig = base.select(col("id"),
-        SketchExprs.minhash_array(col("shingles"), numHashes).as("sig"))
-      .localCheckpoint()
-    val cand = lshCandidates(sig, "id", bands, numHashes / bands)
-    val a = base.select(col("id").as("id_a"), col("shingles").as("__sa"),
-      size(col("shingles")).as("n_a"))
-    val b = base.select(col("id").as("id_b"), col("shingles").as("__sb"),
-      size(col("shingles")).as("n_b"))
-    cand.join(a, "id_a").join(b, "id_b")
-      .select(col("id_a"), col("id_b"),
-        VectorExprs.sorted_inter_count(col("__sa"), col("__sb")).as("inter"),
-        (col("n_a") + col("n_b")).as("__ns"))
-      .select(col("id_a"), col("id_b"), col("inter"),
-        round(col("inter").cast("double") / (col("__ns") - col("inter")), 4)
-          .as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    // both sides renamed from one neutral id: the verify's two
+    // broadcast sides then plan identically and share one exchange
+    val sig = sigPrep(df, idCol, textCol, "id", shingleWords, numHashes)
+    val (a, b) = (sig.withColumnRenamed("id", "id_a"),
+      sig.withColumnRenamed("id", "id_b"))
+    verifyJaccard(bandCandidates(a, b, bands, numHashes / bands,
+      col("id_a") < col("id_b")), a, b, threshold)
   }
 
   // ---------------------------------------------------------------- simhash
@@ -1004,50 +955,23 @@ object Dedup {
     * in duplicate either way); chain-collapsing transitivity is
     * [[connectedComponents]]' job, not an admission filter's.
     *
-    * Scale shape: both pair generations share ONE [[sigPrep]] signature
-    * relation per side (the batch is shingled and signed once, not once
-    * per generation) and are band-gated with exact sorted-merge
-    * verification ([[verifyJaccard]]) — work is candidate-proportional
-    * and the corpus is touched only by its (re-usable) signature scan;
-    * the verdict assembly is two keyed aggregates + two left joins on
-    * the batch ids. Nothing is quadratic in corpus or batch size.
+    * Scale shape: one [[sigPrep]] per side, then [[admitStep]] — one
+    * band join of the batch against corpus ∪ batch, one exact
+    * sorted-merge verify ([[verifyJaccard]]), one aggregate and one
+    * left join on the batch ids. Work is candidate-proportional and the
+    * corpus is touched only by its (re-usable) signature scan; nothing
+    * is quadratic in corpus or batch size.
     */
   def incrementalNearDup(corpus: DataFrame, corpusId: String,
       corpusText: String, batch: DataFrame, batchId: String,
       batchText: String, threshold: Double, shingleWords: Int = 3,
       numHashes: Int = 128, bands: Int = 64): DataFrame = {
     require(numHashes % bands == 0, s"bands ($bands) must divide numHashes")
-    val rpb = numHashes / bands
-    // the batch relation feeds BOTH pair generations — shingle and sign
-    // it once (calling fuzzyJoin + jaccardPairsLsh would each build and
-    // checkpoint their own copy, doubling the batch-side sketch work)
-    val b = sigPrep(batch, batchId, batchText, "id_a", shingleWords,
-      numHashes)
-    val c = sigPrep(corpus, corpusId, corpusText, "id_b", shingleWords,
-      numHashes)
-    val bBands = sigBands(b, "id_a", bands, rpb)
-    val candCross = bBands
-      .join(sigBands(c, "id_b", bands, rpb), Seq("__band", "__bh"))
-      .select(col("id_a"), col("id_b")).distinct()
-    val corpusMatch = verifyJaccard(candCross, b, c, threshold)
-      .groupBy(col("id_a"))
-      .agg(min(col("id_b")).as("__corpus_match"))
-    val bAsRight = b.withColumnRenamed("id_a", "id_b")
-    val candWithin = bBands
-      .join(sigBands(bAsRight, "id_b", bands, rpb), Seq("__band", "__bh"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
-    val batchMatch = verifyJaccard(candWithin, b, bAsRight, threshold)
-      .groupBy(col("id_b"))
-      .agg(min(col("id_a")).as("__batch_match"))
-    batch.select(col(batchId))
-      .join(corpusMatch, col(batchId) === col("id_a"), "left").drop("id_a")
-      .join(batchMatch, col(batchId) === col("id_b"), "left").drop("id_b")
-      .select(col(batchId),
-        when(col("__corpus_match").isNotNull, lit("corpus_dup"))
-          .when(col("__batch_match").isNotNull, lit("batch_dup"))
-          .otherwise(lit("keep")).as("status"),
-        coalesce(col("__corpus_match"), col("__batch_match")).as("match_id"))
+    admitStep(batch,
+      sigPrep(batch, batchId, batchText, "id_a", shingleWords, numHashes),
+      sigPrep(corpus, corpusId, corpusText, "id_b", shingleWords,
+        numHashes),
+      batchId, threshold, bands, numHashes / bands)
   }
 
   /** Multi-batch near-dup ADMISSION LOOP — k sequential arriving
@@ -1098,35 +1022,33 @@ object Dedup {
     }
   }
 
-  /** One admission step of the loop: verdict frame for `batch` (the
-    * raw arriving relation — no-shingle docs still get a row) whose
-    * signatures are `b` (a [[sigPrep]] "id_a" relation), against the
-    * standing `corpusSigs` ("id_b" relation). Returns the checkpointed
+  /** One admission step: verdict frame for `batch` (the raw arriving
+    * relation — no-shingle docs still get a row) whose signatures are
+    * `b` (a [[sigPrep]] "id_a" relation), against the standing
+    * `corpusSigs` ("id_b" relation). The batch meets corpus ∪ batch in
+    * ONE band join, each right-hand row tagged by side; a within-batch
+    * candidate counts only for its larger id. One verify and one
+    * aggregate per batch doc then give the smallest corpus match and
+    * the smallest smaller-id batch match, and one left join onto the
+    * batch gives the verdict. Corpus and batch ids meet in one column
+    * under Spark's union type widening. Returns the checkpointed
     * (batchId, status, match_id) frame — consumed twice (caller +
     * commit decision); batch-sized, so the default level is fine.
     */
   private[graft] def admitStep(batch: DataFrame, b: DataFrame,
       corpusSigs: DataFrame, batchId: String, threshold: Double,
       bands: Int, rpb: Int): DataFrame = {
-    val bBands = sigBands(b, "id_a", bands, rpb)
-    val candCross = bBands
-      .join(sigBands(corpusSigs, "id_b", bands, rpb),
-        Seq("__band", "__bh"))
-      .select(col("id_a"), col("id_b")).distinct()
-    val corpusMatch = verifyJaccard(candCross, b, corpusSigs, threshold)
-      .groupBy(col("id_a")).agg(min(col("id_b")).as("__corpus_match"))
-    val bAsRight = b.withColumnRenamed("id_a", "id_b")
-    val candWithin = bBands
-      .join(sigBands(bAsRight, "id_b", bands, rpb), Seq("__band", "__bh"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
-    val batchMatch = verifyJaccard(candWithin, b, bAsRight, threshold)
-      .groupBy(col("id_b")).agg(min(col("id_a")).as("__batch_match"))
+    val others = corpusSigs.withColumn("__corpus", lit(true))
+      .unionByName(b.withColumnRenamed("id_a", "id_b")
+        .withColumn("__corpus", lit(false)))
+    val cand = bandCandidates(b, others, bands, rpb,
+      col("__corpus") || col("id_b") < col("id_a"))
+    val matches = verifyJaccard(cand, b, others, threshold)
+      .groupBy(col("id_a"))
+      .agg(min(when(col("__corpus"), col("id_b"))).as("__corpus_match"),
+        min(when(!col("__corpus"), col("id_b"))).as("__batch_match"))
     batch.select(col(batchId))
-      .join(corpusMatch, col(batchId) === col("id_a"), "left")
-      .drop("id_a")
-      .join(batchMatch, col(batchId) === col("id_b"), "left")
-      .drop("id_b")
+      .join(matches, col(batchId) === col("id_a"), "left")
       .select(col(batchId),
         when(col("__corpus_match").isNotNull, lit("corpus_dup"))
           .when(col("__batch_match").isNotNull, lit("batch_dup"))
@@ -1187,9 +1109,11 @@ object Dedup {
       val b = sigPrep(batch, batchId, batchText, "id_a", sw, nh)
       val status = admitStep(batch, b, corpusSigs, batchId, threshold,
         bands, nh / bands)
+      // checkpointed: the append's duplicate-id guard and its write
+      // both read the committed rows
       IndexStore.appendCodes(spark, storeDir,
         committedSigs(b, status, batchId)
-          .withColumnRenamed("id_b", idCol), idCol)
+          .withColumnRenamed("id_b", idCol).localCheckpoint(), idCol)
       status
     }
   }

@@ -137,7 +137,10 @@ object IndexStore {
     * `batchCodes` must be the encode shape matching the store kind
     * ([[Similarity.pqEncode]] / [[Similarity.ivfAssign]] /
     * [[Similarity.ivfPqEncode]] output, produced with the LOADED
-    * index). Ids already present are rejected — a silent duplicate
+    * index). A batch whose columns differ in type from the stored
+    * `codes.parquet` is rejected (a LONG-id store read back over an
+    * appended INT-id file fails at scan time). Ids already present are
+    * rejected — a silent duplicate
     * would double-count in every probe; the overlap probe is one
     * semi-join of the code scan against the broadcast batch ids with
     * `limit(1)`, so it short-circuits on the first hit. Gate arrivals
@@ -177,17 +180,25 @@ object IndexStore {
       case "ivf2"  => Seq(col(idCol), col("list"))
       case other   => sys.error(s"appendCodes: unknown store kind '$other' in $dir")
     }
+    val codes = spark.read.parquet(s"$dir/codes.parquet")
+    val batch = batchCodes.select(cols: _*)
+    // types compared without nullability: a parquet read makes every
+    // column nullable
+    val (stored, arriving) = (codes.select(cols: _*).schema, batch.schema)
+    require(stored.map(_.dataType.catalogString) ==
+        arriving.map(_.dataType.catalogString),
+      s"appendCodes: batch columns ${arriving.catalogString} differ in " +
+        s"type from $dir/codes.parquet ${stored.catalogString}")
     // distinct: bm25 postings carry many rows per id — the guard only
     // needs the id set on the broadcast side
-    val dup = spark.read.parquet(s"$dir/codes.parquet")
-      .join(broadcast(batchCodes.select(col(idCol)).distinct()),
+    val dup = codes
+      .join(broadcast(batch.select(col(idCol)).distinct()),
         Seq(idCol), "left_semi")
       .limit(1).count()
     require(dup == 0L,
       s"appendCodes: batch contains ids already present in $dir — " +
         "dedup/admit the batch (q129 shape) before appending")
-    batchCodes.select(cols: _*)
-      .write.mode("append").parquet(s"$dir/codes.parquet")
+    batch.write.mode("append").parquet(s"$dir/codes.parquet")
   }
 
   /** Load an IVF store: (index, nprobe, assignment relation). */

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{IndexStore, Similarity}
+import graft.operators.{Dedup, IndexStore, Similarity}
 
 /** IndexStore round trips: codebooks/centroids/codes must come back
   * bit-identical, and the ANN queries must produce IDENTICAL results
@@ -191,6 +191,29 @@ class IndexStoreSpec extends SparkSpec {
       IndexStore.appendCodes(spark, dir, batch, "id")
     }
     assert(dup.getMessage.contains("already present"))
+  }
+
+  test("appendCodes rejects a batch whose column types differ from the " +
+    "store's and names both schemas") {
+    val docs = Seq((1L, "the quick brown fox jumps over"),
+      (2L, "a lazy dog sleeps in the sun")).toDF("id", "text")
+    val dir = tmpDir("sigtypes")
+    IndexStore.saveSig(spark, dir, Dedup.sigRelation(docs, "id", "text"),
+      "id", 3, 128)
+    val intIds = Dedup.sigRelation(
+      Seq((3, "an entirely different sentence about graphs"))
+        .toDF("id", "text"), "id", "text")
+    val e = intercept[IllegalArgumentException] {
+      IndexStore.appendCodes(spark, dir, intIds, "id")
+    }
+    assert(e.getMessage.contains("struct<id:int,__sh:array<bigint>") &&
+      e.getMessage.contains("struct<id:bigint,__sh:array<bigint>"),
+      e.getMessage)
+    // nothing was appended, and a LONG-id batch still goes in
+    IndexStore.appendCodes(spark, dir, intIds.select(
+      col("id").cast("long").as("id"), col("__sh"), col("__sig")), "id")
+    assert(IndexStore.loadSig(spark, dir)._4.select(col("id")).as[Long]
+      .collect().sorted.toSeq == Seq(1L, 2L, 3L))
   }
 
   test("load rejects a store of the wrong kind, and meta/codebook " +

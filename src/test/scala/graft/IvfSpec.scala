@@ -54,7 +54,7 @@ class IvfSpec extends SparkSpec {
     assert(Similarity.DriverSampleNlistCap === 512)
   }
 
-  test("topPairsLsh equals exact topPairs in the near-dup regime") {
+  test("topPairsLshScaled equals exact topPairs in the near-dup regime") {
     import spark.implicits._
     val rnd = new java.util.SplittableRandom(7L)
     val dim = 64
@@ -80,7 +80,7 @@ class IvfSpec extends SparkSpec {
       s"extra ${gated.diff(exact)}")
   }
 
-  test("cosinePairsLsh equals exact cosinePairs in the gateable regime") {
+  test("cosinePairsLshAuto equals exact cosinePairs in the gateable regime") {
     import spark.implicits._
     val rnd = new java.util.SplittableRandom(11L)
     val dim = 64

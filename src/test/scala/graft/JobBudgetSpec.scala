@@ -5,7 +5,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.operators.{Graph, IndexStore, Joins, PlanUtil}
+import graft.functions.{SketchExprs, VectorExprs}
+import graft.operators.{Dedup, Graph, IndexStore, Joins, PlanUtil}
 
 /** Spark jobs per operation: no job for an answer graft already holds.
   * A build-once artifact reopened in the same session is served from
@@ -187,6 +188,110 @@ class JobBudgetSpec extends SparkSpec {
     assert(!pruned.exists(_.startsWith("[1,3,")))
     assert(pruned.exists(_.startsWith("[1,2,")))
     assert(jobsSkip < jobsPrune, s"$jobsSkip vs $jobsPrune")
+  }
+
+  /** The [[Dedup.sigRelation]] of `df` keyed `id` → `as`. */
+  private def sigs(df: DataFrame, as: String): DataFrame =
+    Dedup.sigRelation(df, "id", "text").withColumnRenamed("id", as)
+
+  /** The admission step as two band joins — the batch against the
+    * corpus, then against itself — each verified and aggregated on its
+    * own, then two left joins onto the batch: the oracle for the merged
+    * one-join step.
+    */
+  private def twoJoinAdmit(batch: DataFrame, b: DataFrame, c: DataFrame,
+      threshold: Double, bands: Int, rpb: Int): DataFrame = {
+    def banded(df: DataFrame, id: String) = df.select(col(id),
+      posexplode(SketchExprs.band_hashes(col("__sig"), bands, rpb))
+        .as(Seq("__band", "__bh")))
+    def verified(cand: DataFrame, l: DataFrame, r: DataFrame) = cand
+      .join(l.select(col("id_a"), col("__sh").as("__sa")), "id_a")
+      .join(r.select(col("id_b"), col("__sh").as("__sb")), "id_b")
+      .withColumn("__i", VectorExprs.sorted_inter_count(col("__sa"),
+        col("__sb")))
+      .filter(round(col("__i").cast("double") / (size(col("__sa")) +
+        size(col("__sb")) - col("__i")), 4) >= threshold)
+    val bRight = b.withColumnRenamed("id_a", "id_b")
+    val cross = banded(b, "id_a").join(banded(c, "id_b"),
+      Seq("__band", "__bh")).select("id_a", "id_b").distinct()
+    val within = banded(b, "id_a").join(banded(bRight, "id_b"),
+        Seq("__band", "__bh"))
+      .filter(col("id_a") < col("id_b")).select("id_a", "id_b").distinct()
+    val corpusMatch = verified(cross, b, c).groupBy("id_a")
+      .agg(min(col("id_b")).as("__cm"))
+    val batchMatch = verified(within, b, bRight).groupBy("id_b")
+      .agg(min(col("id_a")).as("__bm"))
+    batch.select(col("id"))
+      .join(corpusMatch, col("id") === col("id_a"), "left").drop("id_a")
+      .join(batchMatch, col("id") === col("id_b"), "left").drop("id_b")
+      .select(col("id"),
+        when(col("__cm").isNotNull, lit("corpus_dup"))
+          .when(col("__bm").isNotNull, lit("batch_dup"))
+          .otherwise(lit("keep")).as("status"),
+        coalesce(col("__cm"), col("__bm")).as("match_id"))
+  }
+
+  test("admitStep: one band join admits a batch within its job budget") {
+    val d = Tables(spark, sf, "documents")
+      .select(col("doc_id").as("id"), col("text"))
+    val (corpus, batch) = (d.filter(col("id") % 7 =!= 0),
+      d.filter(col("id") % 7 === 0))
+    val (b, c) = (sigs(batch, "id_a"), sigs(corpus, "id_b"))
+    val (status, jobs) = jobsOf(Dedup.admitStep(batch, b, c, "id", 0.5,
+      64, 2))
+    assert(rows(status) == rows(twoJoinAdmit(batch, b, c, 0.5, 64, 2)))
+    // the band join, verify, aggregate and verdict join, checkpointed;
+    // separate corpus and within-batch joins, verifies and aggregates
+    // made it 11
+    assert(jobs <= 8, s"admitStep ran $jobs jobs")
+  }
+
+  test("admitStep equals the two-join admission on fuzzed batches " +
+      "(colliding ids, shingle-less docs, planted near-copies)") {
+    val verdicts = for (seed <- 1L to 6L; threshold <- Seq(0.3, 0.5, 0.8))
+        yield {
+      val rnd = new java.util.SplittableRandom(seed)
+      val vocab = Array.tabulate(30)(i => s"w$i")
+      def text(): String = Seq.fill(4 + rnd.nextInt(10))(
+        vocab(rnd.nextInt(vocab.length))).mkString(" ")
+      def nearCopy(t: String): String = {
+        val w = t.split(" ")
+        w.updated(rnd.nextInt(w.length), "MUT").mkString(" ")
+      }
+      def shingleLess(): String =
+        Seq.fill(rnd.nextInt(3))(vocab(rnd.nextInt(vocab.length)))
+          .mkString(" ")
+      // corpus ids 0..39, batch ids 30..69: ids 30..39 sit on both
+      // sides, and batch docs 30..32 copy the corpus doc of their id
+      val corpus = (0L until 40L).map(id =>
+        (id, if (rnd.nextInt(8) == 0) shingleLess() else text()))
+      val batch = (30L until 70L).foldLeft(Vector.empty[(Long, String)]) {
+        case (acc, id) =>
+          val t = rnd.nextInt(6) match {
+            case _ if id == 30L => corpus(30)._2
+            case _ if id < 33L => nearCopy(corpus(id.toInt)._2)
+            case 0 => nearCopy(corpus(rnd.nextInt(corpus.size))._2)
+            case 1 => corpus(rnd.nextInt(corpus.size))._2
+            case 2 if acc.nonEmpty => nearCopy(acc(rnd.nextInt(acc.size))._2)
+            case 3 => shingleLess()
+            case _ => text()
+          }
+          acc :+ (id -> t)
+      }
+      val (cDf, bDf) = (corpus.toDF("id", "text"), batch.toDF("id", "text"))
+      val (b, c) = (sigs(bDf, "id_a"), sigs(cDf, "id_b"))
+      val got = Dedup.admitStep(bDf, b, c, "id", threshold, 64, 2)
+      assert(rows(got) == rows(twoJoinAdmit(bDf, b, c, threshold, 64, 2)),
+        s"seed $seed, threshold $threshold")
+      got.collect().map(r => (r.getString(1), r.getLong(0) < 40L &&
+        !r.isNullAt(2) && r.getLong(2) == r.getLong(0))).toSet
+    }
+    // every verdict occurs, and some batch doc matches the corpus doc
+    // that carries its own id
+    val seen = verdicts.flatten.toSet
+    assert(Set("corpus_dup", "batch_dup", "keep").subsetOf(seen.map(_._1)),
+      seen)
+    assert(seen.contains(("corpus_dup", true)), seen)
   }
 
   private val graph = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 2L),

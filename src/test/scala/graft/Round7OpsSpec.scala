@@ -283,7 +283,8 @@ class Round7OpsSpec extends SparkSpec {
     assert(rs == rs.sorted)
   }
 
-  test("cosinePairsLshScaled finds exactly the threshold pairs (planted)") {
+  test("cosinePairsLshAuto at the scaled geometry finds exactly the " +
+      "threshold pairs (planted)") {
     import graft.operators.Similarity
     val dim = 16
     val rnd = new java.util.SplittableRandom(11L)

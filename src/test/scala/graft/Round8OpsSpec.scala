@@ -90,7 +90,7 @@ class Round8OpsSpec extends SparkSpec {
     assert(scaled == exact, s"scaled branch missed=${(exact -- scaled).size}")
   }
 
-  test("cosinePairsLshScaled plumbs targetBucket/maxPlanesPerBand") {
+  test("cosinePairsLshAuto plumbs targetBucket/maxPlanesPerBand") {
     val df = plantedVecs()
     // tiny corpus: geometry clamps to the r=7 floor either way; the
     // point is the parameters reach the geometry without error. The
@@ -109,7 +109,7 @@ class Round8OpsSpec extends SparkSpec {
     assert(got == exact)
   }
 
-  test("topPairsLshAuto recovers planted top pairs on both branches") {
+  test("topPairsLshScaled recovers planted top pairs at two band geometries") {
     val dim = 16
     val df = plantedVecs(dim)
     val planted = Similarity.cosinePairs(df, "id", "vec", threshold = 0.98)
