@@ -283,8 +283,7 @@ class Round7OpsSpec extends SparkSpec {
     assert(rs == rs.sorted)
   }
 
-  test("cosinePairsLshAuto at the scaled geometry finds exactly the " +
-      "threshold pairs (planted)") {
+  test("cosinePairsLshAuto (scaled geometry) finds the planted threshold pairs") {
     import graft.operators.Similarity
     val dim = 16
     val rnd = new java.util.SplittableRandom(11L)
