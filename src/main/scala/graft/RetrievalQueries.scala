@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorExprs
-import graft.functions.VectorExprs.vec_dot
 import graft.operators.{Retrieval, Similarity}
 
 /** ANN/retrieval family: in-memory vector search and lexical retrieval
@@ -245,9 +244,11 @@ object RetrievalQueries {
     * broadcast-panel NL joins over the checkpointed corpus (panel ×
     * corpus rows, never corpus²); ranks are panel-keyed windows.
     *
-    * Parity: Jaccard is an int/int division; cos mirrors q87's
-    * left-to-right `vec_dot`/`list_inner_product` accumulation with
-    * one fixed parenthesization; the RRF fold order is pinned by
+    * Parity: Jaccard is an int/int division; cos is
+    * [[Similarity.bruteForceTopK]]'s, which mirrors q87's left-to-right
+    * `vec_dot`/`list_inner_product` accumulation with one fixed
+    * parenthesization (each norm the square root of the same
+    * left-to-right self-dot); the RRF fold order is pinned by
     * rrfFuse (scaladoc) and mirrored as t_lex + t_cos; ranks break
     * ties on the candidate id, fusion ranks on (score, id).
     */
@@ -279,23 +280,10 @@ object RetrievalQueries {
       .select(col("qid").as("query_id"), col("cid").as("match_id"),
         col("r").as("rank"))
       .localCheckpoint() // ≤50·|panel| rows; feeds fuse + display join
-    // zero-norm guard INSIDE the value (round-5 rule: NaN cos would
-    // head every desc top-k; null ranks last) — mirrored in the oracle
-    val cos = corpus.join(
-        broadcast(panel.select(col("id").as("qid"), col("v").as("qv"))),
-        col("id") =!= col("qid"))
-      .select(col("qid"), col("id").as("cid"),
-        when(vec_dot(col("qv"), col("qv")) > 0 &&
-            vec_dot(col("v"), col("v")) > 0,
-          vec_dot(col("qv"), col("v")) /
-            (sqrt(vec_dot(col("qv"), col("qv"))) *
-              sqrt(vec_dot(col("v"), col("v"))))).as("cos"))
-    val wc = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("cid"))
-    val cosr = cos.filter(col("cos").isNotNull)
-      .withColumn("r", row_number().over(wc))
-      .filter(col("r") <= 50)
-      .select(col("qid").as("query_id"), col("cid").as("match_id"),
-        col("r").as("rank"))
+    // zero-norm vectors drop out on both sides (NaN cos would head
+    // every desc top-k) — mirrored in the oracle
+    val cosr = Similarity.bruteForceTopK(panel, corpus, "id", "v", 50)
+      .select(col("query_id"), col("match_id"), col("rank"))
       .localCheckpoint()
     Retrieval.rrfFuse(Seq(lexr, cosr), k = 10)
       .join(lexr.withColumnRenamed("rank", "lex_rank"),
@@ -376,23 +364,10 @@ object RetrievalQueries {
         "qid", "qterms", k = 50, excludeSelf = true)
       .select(col("query_id"), col("match_id"), col("rank"))
       .localCheckpoint() // ≤50·|panel| rows; feeds fuse + display join
-    // zero-norm guard INSIDE the value (round-5 rule: NaN cos would
-    // head every desc top-k; null ranks last) — mirrored in the oracle
-    val cos = corpus.join(
-        broadcast(panel.select(col("id").as("qid"), col("v").as("qv"))),
-        col("id") =!= col("qid"))
-      .select(col("qid"), col("id").as("cid"),
-        when(vec_dot(col("qv"), col("qv")) > 0 &&
-            vec_dot(col("v"), col("v")) > 0,
-          vec_dot(col("qv"), col("v")) /
-            (sqrt(vec_dot(col("qv"), col("qv"))) *
-              sqrt(vec_dot(col("v"), col("v"))))).as("cos"))
-    val wc = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("cid"))
-    val cosr = cos.filter(col("cos").isNotNull)
-      .withColumn("r", row_number().over(wc))
-      .filter(col("r") <= 50)
-      .select(col("qid").as("query_id"), col("cid").as("match_id"),
-        col("r").as("rank"))
+    // zero-norm vectors drop out on both sides (NaN cos would head
+    // every desc top-k) — mirrored in the oracle
+    val cosr = Similarity.bruteForceTopK(panel, corpus, "id", "v", 50)
+      .select(col("query_id"), col("match_id"), col("rank"))
       .localCheckpoint()
     Retrieval.rrfFuse(Seq(bm25r, cosr), k = 10)
       .join(bm25r.withColumnRenamed("rank", "bm25_rank"),

@@ -39,25 +39,40 @@ object Similarity {
     */
   def bruteForceTopK(
       queries: DataFrame, corpus: DataFrame,
-      idCol: String, vecCol: String, k: Int): DataFrame = {
-    // zero-norm vectors have no direction: their cosine is 0/0 = NaN and
-    // Spark ranks NaN ABOVE every number, so one zero embedding would head
-    // every query's top-k (same guard as cosinePairs on both sides here
-    // and in every scoring path below)
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("__qv"), vec_l2norm(col(vecCol)).as("__qn"))
-      .filter(col("__qn") > 0))
-    val c = corpus.select(col(idCol).as("match_id"),
-      col(vecCol).as("__cv"), vec_l2norm(col(vecCol)).as("__cn"))
-      .filter(col("__cn") > 0)
-    val scored = c.crossJoin(q)
-      .filter(col("match_id") =!= col("query_id"))
+      idCol: String, vecCol: String, k: Int): DataFrame =
+    rankExact(side(corpus, idCol, vecCol, query = false)
+      .crossJoin(broadcast(side(queries, idCol, vecCol, query = true))), k)
+
+  /** One side of a top-k route: `(query_id, __qv, __qn)` for the queries,
+    * `(match_id, __cv, __cn)` for the corpus, with the L2 norm computed
+    * once per row. Zero-norm vectors are dropped: they have no direction,
+    * their cosine is 0/0 = NaN, and Spark ranks NaN ABOVE every number, so
+    * one zero embedding would head every query's top-k (the same guard as
+    * cosinePairs on both sides, and in every scoring path below).
+    */
+  private def side(df: DataFrame, idCol: String, vecCol: String,
+      query: Boolean): DataFrame = {
+    val (id, v, n) =
+      if (query) ("query_id", "__qv", "__qn") else ("match_id", "__cv", "__cn")
+    df.select(col(idCol).as(id), col(vecCol).as(v),
+        vec_l2norm(col(vecCol)).as(n))
+      .filter(col(n) > 0)
+  }
+
+  /** The exact refine-and-rank step every top-k route ends in: `cand`
+    * pairs the two [[side]]s' columns; self matches are dropped, each
+    * pair scores its exact cosine off the per-row norms, and the `k`
+    * best per query survive, ties broken by match id. Returns
+    * `(query_id, match_id, cos, rank)`.
+    */
+  private def rankExact(cand: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cos").desc, col("match_id").asc)
+    cand.filter(col("match_id") =!= col("query_id"))
       .select(col("query_id"), col("match_id"),
         (vec_dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")))
           .as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("match_id").asc)
-    scored.withColumn("rank", row_number().over(w))
+      .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
   }
 
@@ -365,48 +380,26 @@ object Similarity {
 
     /** ids of the `n` nearest centroids (squared L2) as array<int>.
       * d²(v,c) = |v|² − 2·v·c + |c|²; |v|² is row-constant, so the argmin
-      * ranks by |c|² − 2·v·c — ONE vec_dot per centroid per row. Struct
-      * sort (d, then i) reproduces the stable dist-then-centroid-id order.
-      */
-    def assign(vec: Column, n: Int): Column = {
-      val scored = centroids.zipWithIndex.map { case (c, ci) =>
-        val cn2 = c.map(x => x * x).sum
-        struct(
-          (lit(cn2) - lit(2.0) * vec_dot(vec, typedlit(c.toSeq))).as("d"),
-          lit(ci).as("i"))
-      }
-      transform(slice(array_sort(array(scored.toSeq: _*)), 1, n), _.getField("i"))
-    }
-
-    /** Kernel variant of [[assign]] for LARGE nlist: the per-centroid
-      * struct form above bakes nlist separate `vec_dot` Columns into
-      * one projection — plan size and boxed per-coefficient element
-      * access both grow with nlist (the LshBands lesson: 144 vec_dot
-      * columns paid ~500M unboxings); this computes ALL centroid dots
-      * in ONE [[graft.functions.VectorExprs.AffineMap]] call over a
-      * primitive flat matrix and ranks with array HOFs. Ranking is
-      * bit-identical to [[assign]] — same `|c|² − 2·v·c` arithmetic
-      * (0-seeded left-to-right dot, multiply-before-subtract), same
-      * (d, then centroid id) tie order — spec-pinned in IvfSpec.
-      * Malformed (short/null-slot) vectors yield null rather than a
-      * fabricated assignment (the AffineMap convention).
+      * ranks by |c|² − 2·v·c. All centroid dots come from ONE
+      * [[graft.functions.VectorExprs.AffineMap]] call over a primitive
+      * flat matrix (0-seeded left-to-right, like [[vec_dot]]) and rank
+      * with array HOFs; the struct sort (d, then i) keeps the stable
+      * dist-then-centroid-id order. A per-centroid `vec_dot` Column form
+      * would bake nlist expressions into one projection — plan size and
+      * boxed per-coefficient access both grow with nlist (the LshBands
+      * lesson); IvfSpec keeps that form as this one's bit-for-bit
+      * oracle. Malformed (short/null-slot) vectors yield null rather
+      * than a fabricated assignment (the AffineMap convention).
       */
     def assignK(vec: Column, n: Int): Column = {
-      val half = centroids.map(c => c.map(x => x * x).sum)
+      val cn2 = centroids.map(c => c.map(x => x * x).sum)
       val dots = graft.functions.VectorExprs.affine_map(
         vec, centroids.flatten, new Array[Double](centroids.length))
       val scored = transform(dots, (d, i) => struct(
-        (element_at(lit(half), i + lit(1)) - lit(2.0) * d).as("d"),
+        (element_at(lit(cn2), i + lit(1)) - lit(2.0) * d).as("d"),
         i.as("i")))
       transform(slice(array_sort(scored), 1, n), _.getField("i"))
     }
-
-    /** [[assign]] below the kernel knee, [[assignK]] past it: the
-      * struct form wins tiny plans (no array materialization), the
-      * kernel wins as soon as nlist stops being a handful.
-      */
-    def assignAuto(vec: Column, n: Int): Column =
-      if (nlist <= 16) assign(vec, n) else assignK(vec, n)
   }
 
   object IvfIndex {
@@ -432,7 +425,8 @@ object Similarity {
 
     /** The driver-side k-means++ + Lloyd core behind [[train]], over an
       * in-memory sample — shared with the per-supercluster child books
-      * of [[Similarity.IvfIndex2]].
+      * of [[Similarity.IvfIndex2]] and the per-subspace PQ codebooks
+      * ([[PqIndex.train]]).
       */
     private[operators] def lloydArrays(sample: Array[Array[Double]],
         nlist: Int, seed: Long, maxIter: Int): Array[Array[Double]] = {
@@ -681,53 +675,51 @@ object Similarity {
     // the stored lists by id instead. The list values are a pure
     // function of (vector, centroids), both bit-stable through the
     // store, so served == inline exactly (q195 asserts it end-to-end).
-    val bucketedCorpus = assigned match {
-      case Some(a) => corpus.select(col(idCol).as("match_id"),
-          col(vecCol).as("__cv"), vec_l2norm(col(vecCol)).as("__cn"))
-        .filter(col("__cn") > 0)
-        .join(a.select(col(idCol).as("match_id"), col("list").as("__list")),
-          "match_id")
-      case None =>
-        // CONTRACT (r14 measured boundary, PLANS.md "IVF nlist-4096
-        // cap"): the inline branch pays O(n·nlist·dim) corpus
-        // assignment PER PROBE JOB; at the geometry clamp
-        // (nlist = 4096 ⇔ √n > 4096 ⇔ n > ~16.8M) that pass did not
-        // finish train+probe in 100 min on 32 cores. Past the cap the
-        // ONLY sanctioned serving path is a persisted assignment
-        // (ivfAssign → IndexStore.saveIvf → `assigned`, the q195
-        // shape — the corpus pass is paid once per index build, not
-        // per probe). The count job below runs only when nlist is at
-        // the clamp — never for in-catalog geometries.
-        if (idx.centroids.length >= IvfInlineNlistCap) {
-          val n = corpus.count()
-          require(n <= IvfInlineCorpusCap,
-            s"ivfTopK: inline per-probe corpus assignment at " +
-              s"nlist=${idx.centroids.length} over n=$n rows is past " +
-              s"the measured compute ceiling ($IvfInlineCorpusCap) — " +
-              "persist the assignment (Similarity.ivfAssign / " +
-              "IndexStore.saveIvf) and serve through `assigned` " +
-              "(the q195 store path)")
-        }
-        corpus.select(col(idCol).as("match_id"),
-          col(vecCol).as("__cv"),
-          idx.assignAuto(col(vecCol), 1)(0).as("__list"),
-          vec_l2norm(col(vecCol)).as("__cn"))
-          .filter(col("__cn") > 0) // zero-norm guard (see bruteForceTopK)
+    val lists = assigned.toLeft {
+      // CONTRACT (r14 measured boundary, PLANS.md "IVF nlist-4096
+      // cap"): the inline branch pays O(n·nlist·dim) corpus
+      // assignment PER PROBE JOB; at the geometry clamp
+      // (nlist = 4096 ⇔ √n > 4096 ⇔ n > ~16.8M) that pass did not
+      // finish train+probe in 100 min on 32 cores. Past the cap the
+      // ONLY sanctioned serving path is a persisted assignment
+      // (ivfAssign → IndexStore.saveIvf → `assigned`, the q195
+      // shape — the corpus pass is paid once per index build, not
+      // per probe). The count job below runs only when nlist is at
+      // the clamp — never for in-catalog geometries.
+      if (idx.centroids.length >= IvfInlineNlistCap) {
+        val n = corpus.count()
+        require(n <= IvfInlineCorpusCap,
+          s"ivfTopK: inline per-probe corpus assignment at " +
+            s"nlist=${idx.centroids.length} over n=$n rows is past " +
+            s"the measured compute ceiling ($IvfInlineCorpusCap) — " +
+            "persist the assignment (Similarity.ivfAssign / " +
+            "IndexStore.saveIvf) and serve through `assigned` " +
+            "(the q195 store path)")
+      }
+      (v: Column) => idx.assignK(v, 1)(0)
     }
-    val probes = queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("__qv"),
-      explode(idx.assignAuto(col(vecCol), nprobe)).as("__list"),
-      vec_l2norm(col(vecCol)).as("__qn"))
-      .filter(col("__qn") > 0)
+    ivfProbeTopK(queries, corpus, idCol, vecCol, k, lists,
+      idx.assignK(_, nprobe))
+  }
 
-    val scored = bucketedCorpus.join(broadcast(probes), Seq("__list"))
-      .filter(col("match_id") =!= col("query_id"))
-      .select(col("query_id"), col("match_id"),
-        (vec_dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")))
-          .as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("match_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+  /** The probe core of [[ivfTopK]] and [[ivf2TopK]]: each corpus row
+    * takes its list from a persisted `(idCol, list)` assignment joined
+    * by id (`Left`) or assigns it inline (`Right`); each query explodes
+    * its `probe` lists and meets only the corpus rows filed under them.
+    */
+  private def ivfProbeTopK(queries: DataFrame, corpus: DataFrame,
+      idCol: String, vecCol: String, k: Int,
+      lists: Either[DataFrame, Column => Column],
+      probe: Column => Column): DataFrame = {
+    val c = side(corpus, idCol, vecCol, query = false)
+    val bucketed = lists match {
+      case Left(a) => c.join(a.select(col(idCol).as("match_id"),
+        col("list").as("__list")), "match_id")
+      case Right(assign) => c.withColumn("__list", assign(col("__cv")))
+    }
+    val probes = side(queries, idCol, vecCol, query = true)
+      .withColumn("__list", explode(probe(col("__qv"))))
+    rankExact(bucketed.join(broadcast(probes), Seq("__list")), k)
   }
 
   /** The guarded IVF corpus-assignment relation `(idCol, list)` — what
@@ -740,7 +732,7 @@ object Similarity {
       index: IvfIndex): DataFrame =
     corpus
       .filter(vec_l2norm(col(vecCol)) > 0)
-      .select(col(idCol), index.assignAuto(col(vecCol), 1)(0).as("list"))
+      .select(col(idCol), index.assignK(col(vecCol), 1)(0).as("list"))
 
   // ------------------------------------------------------- two-level IVF
 
@@ -803,7 +795,8 @@ object Similarity {
         .filter(vec_l2norm(col(vecCol)) > 0)
         .filter(pmod(xxhash64(col(idCol)), lit(p)) === 0)
         .select(col(idCol).as("__id"), col(vecCol).as("__v"),
-          supIdx.assignAuto(col(vecCol), 1)(0).as("__s"))
+          supIdx.assignK(col(vecCol), 1)(0).as("__s"))
+        .filter(col("__s").isNotNull) // malformed vectors: no cell
         .withColumn("__rn", row_number().over(
           Window.partitionBy(col("__s")).orderBy(col("__id"))))
         .filter(col("__rn") <= samplePerSup)
@@ -856,26 +849,9 @@ object Similarity {
       queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int,
       index: IvfIndex2, assigned: DataFrame,
-      kSup: Int, kChild: Int): DataFrame = {
-    val bucketedCorpus = corpus.select(col(idCol).as("match_id"),
-        col(vecCol).as("__cv"), vec_l2norm(col(vecCol)).as("__cn"))
-      .filter(col("__cn") > 0)
-      .join(assigned.select(col(idCol).as("match_id"),
-        col("list").as("__list")), "match_id")
-    val probes = queries.select(col(idCol).as("query_id"),
-        col(vecCol).as("__qv"),
-        explode(index.lists(col(vecCol), kSup, kChild)).as("__list"),
-        vec_l2norm(col(vecCol)).as("__qn"))
-      .filter(col("__qn") > 0)
-    val scored = bucketedCorpus.join(broadcast(probes), Seq("__list"))
-      .filter(col("match_id") =!= col("query_id"))
-      .select(col("query_id"), col("match_id"),
-        (vec_dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")))
-          .as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("match_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
+      kSup: Int, kChild: Int): DataFrame =
+    ivfProbeTopK(queries, corpus, idCol, vecCol, k, Left(assigned),
+      index.lists(_, kSup, kChild))
 
   /** Bucketed ANN top-k: corpus bucketed by LSH signature; each query
     * probes only its own bucket. Returns (query_id, match_id, cos, rank)
@@ -885,19 +861,11 @@ object Similarity {
       queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int, dim: Int,
       planes: Int = 12): DataFrame = {
-    val sigQ = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
-      lshSignature(col(vecCol), dim, planes).as("__bucket"))
-      .filter(vec_l2norm(col("__qv")) > 0) // zero-norm guard (see bruteForceTopK)
-    val sigC = corpus.select(col(idCol).as("match_id"), col(vecCol).as("__cv"),
-      lshSignature(col(vecCol), dim, planes).as("__bucket"))
-      .filter(vec_l2norm(col("__cv")) > 0)
-    val scored = sigC.join(broadcast(sigQ), Seq("__bucket"))
-      .filter(col("match_id") =!= col("query_id"))
-      .select(col("query_id"), col("match_id"),
-        cosine(col("__qv"), col("__cv")).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("match_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    val c = side(corpus, idCol, vecCol, query = false)
+      .withColumn("__bucket", lshSignature(col("__cv"), dim, planes))
+    val q = side(queries, idCol, vecCol, query = true)
+      .withColumn("__bucket", lshSignature(col("__qv"), dim, planes))
+    rankExact(c.join(broadcast(q), Seq("__bucket")), k)
   }
 
   /** Product-quantization codebooks (Jégou et al., TPAMI'11): the
@@ -980,7 +948,7 @@ object Similarity {
       val books = Array.tabulate(m) { s =>
         val sub = sample.map(v =>
           java.util.Arrays.copyOfRange(v, s * dsub, (s + 1) * dsub))
-        kmeansFit(sub, ksub, seed + s, maxIter)
+        IvfIndex.lloydArrays(sub, ksub, seed + s, maxIter)
       }
       PqIndex(books)
     }
@@ -993,72 +961,6 @@ object Similarity {
         m: Int = 8, ksub: Int = 16, seed: Long = 42L): PqIndex =
       cache.computeIfAbsent((cacheKey, vecCol, m, ksub, seed),
         _ => train(corpus, vecCol, m, ksub, seed))
-
-    /** k-means++ seeding + Lloyd's, fixed seed — the same construction
-      * as [[IvfIndex.train]] (kept separate: refactoring the proven IVF
-      * trainer would perturb q46's measured recall floors).
-      */
-    private def kmeansFit(sample: Array[Array[Double]], k: Int,
-        seed: Long, maxIter: Int): Array[Array[Double]] = {
-      val dim = sample.head.length
-      val rnd = new java.util.SplittableRandom(seed)
-      def d2(a: Array[Double], b: Array[Double]): Double = {
-        var s = 0.0; var i = 0
-        while (i < dim) { val d = a(i) - b(i); s += d * d; i += 1 }
-        s
-      }
-      val centers = new Array[Array[Double]](k)
-      centers(0) = sample(rnd.nextInt(sample.length)).clone()
-      val minD2 = sample.map(d2(_, centers(0)))
-      var c = 1
-      while (c < k) {
-        val total = minD2.sum
-        var pick = rnd.nextDouble() * total
-        var idx = 0
-        while (idx < sample.length - 1 && pick > minD2(idx)) {
-          pick -= minD2(idx); idx += 1
-        }
-        centers(c) = sample(idx).clone()
-        var i = 0
-        while (i < sample.length) {
-          val d = d2(sample(i), centers(c))
-          if (d < minD2(i)) minD2(i) = d
-          i += 1
-        }
-        c += 1
-      }
-      var iter = 0
-      while (iter < maxIter) {
-        val sums = Array.fill(k)(new Array[Double](dim))
-        val counts = new Array[Int](k)
-        var i = 0
-        while (i < sample.length) {
-          var best = 0; var bestD = Double.MaxValue; var ci = 0
-          while (ci < k) {
-            val d = d2(sample(i), centers(ci))
-            if (d < bestD) { bestD = d; best = ci }
-            ci += 1
-          }
-          val s = sums(best); val v = sample(i)
-          var kk = 0
-          while (kk < dim) { s(kk) += v(kk); kk += 1 }
-          counts(best) += 1
-          i += 1
-        }
-        var ci = 0
-        while (ci < k) {
-          if (counts(ci) > 0) {
-            val s = sums(ci)
-            var kk = 0
-            while (kk < dim) { s(kk) /= counts(ci); kk += 1 }
-            centers(ci) = s
-          }
-          ci += 1
-        }
-        iter += 1
-      }
-      centers
-    }
   }
 
   /** Two-stage PQ top-k: the candidate scan scores every corpus CODE
@@ -1078,9 +980,8 @@ object Similarity {
       codes: Option[DataFrame] = None): DataFrame = {
     import graft.functions.VectorExprs.pq_adc
     val ones = typedlit(Seq.fill(index.dim)(1.0))
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("__qv"), vec_l2norm(col(vecCol)).as("__qn"))
-      .filter(col("__qn") > 0 && size(col(vecCol)) === index.dim))
+    val q = broadcast(side(queries, idCol, vecCol, query = true)
+      .filter(size(col("__qv")) === index.dim))
     // `codes` = a PERSISTED encoded corpus ([[pqEncode]] shape, e.g.
     // loaded via IndexStore) — the scan then never touches the encode
     // tree at all; reconstruction norms are re-derived from the codes
@@ -1095,8 +996,7 @@ object Similarity {
     // alias-substituted down to the scan by predicate pushdown,
     // inlining the entire encode tree into the Filter condition —
     // measured 1.8 MB plan lines and a 7× slowdown on the IVF-PQ twin
-    val cand = codesRel.crossJoin(q.select(col("query_id"), col("__qv"),
-        col("__qn")))
+    val cand = codesRel.crossJoin(q)
       .filter(col("match_id") =!= col("query_id"))
       .select(col("query_id"), col("match_id"),
         when(col("__rn") > 0,
@@ -1122,8 +1022,8 @@ object Similarity {
     * [[ivfPqTopK]]): keep the `rescoreFactor·k` best approximate
     * candidates per query, fetch ONLY those survivors' float vectors,
     * re-rank on EXACT cosine. `cand` must carry
-    * (query_id, match_id, __acos); `q` must carry
-    * (query_id, __qv, __qn) and be the already-filtered query panel.
+    * (query_id, match_id, __acos); `q` must be the already-filtered
+    * query [[side]].
     */
   private def rescoreExact(cand: DataFrame, q: DataFrame,
       corpus: DataFrame, idCol: String, vecCol: String,
@@ -1133,18 +1033,8 @@ object Similarity {
     val survivors = cand.withColumn("__qr", row_number().over(wq))
       .filter(col("__qr") <= k.toLong * rescoreFactor)
       .select("query_id", "match_id")
-    val cExact = corpus.select(col(idCol).as("match_id"),
-      col(vecCol).as("__cv"), vec_l2norm(col(vecCol)).as("__cn"))
-      .filter(col("__cn") > 0)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("match_id").asc)
-    survivors.join(cExact, "match_id")
-      .join(q.select(col("query_id"), col("__qv"), col("__qn")), "query_id")
-      .select(col("query_id"), col("match_id"),
-        (vec_dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")))
-          .as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    rankExact(survivors.join(side(corpus, idCol, vecCol, query = false),
+      "match_id").join(q, "query_id"), k)
   }
 
   /** Train a [[PqIndex]] on coarse-quantization RESIDUALS — the IVF-PQ
@@ -1161,7 +1051,7 @@ object Similarity {
     val resid = corpus
       .filter(vec_l2norm(col(vecCol)) > 0)
       .select(zip_with(col(vecCol),
-        element_at(cents, coarse.assignAuto(col(vecCol), 1)(0) + 1),
+        element_at(cents, coarse.assignK(col(vecCol), 1)(0) + 1),
         (a, b) => a - b).as("__res"))
     PqIndex.trainCached(cacheKey, resid, "__res", m, ksub, seed)
   }
@@ -1211,12 +1101,10 @@ object Similarity {
     // lines, 9.4 MiB task binaries, 7.4 s steady on a 550-row corpus);
     // the zero/NaN guard rides inside the score instead (null ranks
     // last; NaN would rank FIRST under desc — when() surfaces neither)
-    val q = queries
-      .filter(size(col(vecCol)) === pq.dim && vec_l2norm(col(vecCol)) > 0)
-      .select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
-        vec_l2norm(col(vecCol)).as("__qn"))
+    val q = side(queries, idCol, vecCol, query = true)
+      .filter(size(col("__qv")) === pq.dim)
     val probes = broadcast(q
-      .withColumn("__list", explode(coarse.assignAuto(col("__qv"), nprobe)))
+      .withColumn("__list", explode(coarse.assignK(col("__qv"), nprobe)))
       .withColumn("__qc",
         vec_dot(col("__qv"), element_at(cents, col("__list") + 1))))
     // a corpus row lives in exactly one list, so each (query, match)
@@ -1241,7 +1129,7 @@ object Similarity {
     corpus
       .filter(size(col(vecCol)) === pq.dim && vec_l2norm(col(vecCol)) > 0)
       .select(col(idCol), col(vecCol).as("__cv"),
-        coarse.assignAuto(col(vecCol), 1)(0).as("list"))
+        coarse.assignK(col(vecCol), 1)(0).as("list"))
       .withColumn("__c", element_at(cents, col("list") + 1))
       .select(col(idCol), col("list"),
         pq.encode(zip_with(col("__cv"), col("__c"), (a, b) => a - b))

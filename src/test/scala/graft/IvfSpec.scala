@@ -1,11 +1,30 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorExprs
 import graft.operators.Similarity
 import graft.streaming.Streams
 
 class IvfSpec extends SparkSpec {
+
+  /** The per-centroid struct-column form of [[Similarity.IvfIndex.assignK]]
+    * — one `vec_dot` Column per centroid, ranked by struct sort (d, then
+    * i) — kept as the kernel form's oracle.
+    */
+  private def assignStruct(idx: Similarity.IvfIndex, vec: Column,
+      n: Int): Column = {
+    val scored = idx.centroids.zipWithIndex.map { case (c, ci) =>
+      val cn2 = c.map(x => x * x).sum
+      struct(
+        (lit(cn2) - lit(2.0) * VectorExprs.vec_dot(vec, typedlit(c.toSeq)))
+          .as("d"),
+        lit(ci).as("i"))
+    }
+    transform(slice(array_sort(array(scored.toSeq: _*)), 1, n),
+      _.getField("i"))
+  }
 
   test("IVF with nprobe == nlist is exhaustive and equals brute force") {
     val emb = Tables(spark, "/root/testdata/sf0.001", "embeddings")
@@ -142,7 +161,7 @@ class IvfSpec extends SparkSpec {
       val idx = Similarity.IvfIndex.train(df, "embedding", nlist,
         seed = 5L)
       val both = df.select(col("vec_id"),
-        idx.assign(col("embedding"), nprobe).as("a"),
+        assignStruct(idx, col("embedding"), nprobe).as("a"),
         idx.assignK(col("embedding"), nprobe).as("b")).collect()
       both.foreach { r =>
         assert(r.getSeq[Int](1) == r.getSeq[Int](2),
@@ -156,7 +175,7 @@ class IvfSpec extends SparkSpec {
       Array(1.0, 0.0), Array(0.0, 1.0), Array(1.0, 0.0)))
     val tiny = Seq((1L, Array(0.9f, 0.1f)), (2L, Array(0.1f, 0.9f)))
       .toDF("vec_id", "embedding")
-    val t = tiny.select(dup.assign(col("embedding"), 3).as("a"),
+    val t = tiny.select(assignStruct(dup, col("embedding"), 3).as("a"),
       dup.assignK(col("embedding"), 3).as("b")).collect()
     t.foreach(r => assert(r.getSeq[Int](0) == r.getSeq[Int](1)))
     // short vector: kernel form surfaces null

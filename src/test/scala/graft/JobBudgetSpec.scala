@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -14,8 +15,8 @@ import graft.operators.{Dedup, Graph, IndexStore, Joins, PlanUtil}
   * Observation on the checkpointing action, PageRank's iterations join
   * the edges with the ranks directly and aggregate once, and a
   * winnowing df prune that could drop nothing does not run. Jobs are
-  * counted by job group through the status tracker once the listener
-  * bus has drained.
+  * counted by a listener on every job start, from any thread, once the
+  * listener bus has drained.
   */
 class JobBudgetSpec extends SparkSpec {
   import spark.implicits._
@@ -24,13 +25,27 @@ class JobBudgetSpec extends SparkSpec {
   // only; specs run from the repo root)
   private val sf = "perfbench/fixture/sf0.001"
 
+  /** Jobs started while `body` runs, from any thread: a streaming query
+    * runs its micro-batches on its own thread under its own job group,
+    * so a count by the caller's group would miss them. Suites in the
+    * forked test JVM run one at a time, so the global count sees only
+    * the body's jobs.
+    */
   private def jobsOf[T](body: => T): (T, Int) = {
     val sc = spark.sparkContext
-    val group = s"budget-${java.util.UUID.randomUUID()}"
-    sc.setJobGroup(group, group)
-    val r = try body finally sc.clearJobGroup()
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.incrementAndGet(): Unit
+    }
+    // earlier jobs' queued events must not reach the new listener
     TestListenerBus.drain(sc)
-    (r, sc.statusTracker.getJobIdsForGroup(group).length)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      TestListenerBus.drain(sc)
+      (r, started.get())
+    } finally sc.removeSparkListener(listener)
   }
 
   private def rows(df: DataFrame): Seq[String] =
@@ -64,6 +79,21 @@ class JobBudgetSpec extends SparkSpec {
     assert(CoPurchase.pairCounts(spark, sf).count() ==
       spark.read.parquet(TmpDirs.buildOnce("copurchase_rel", sf)(_ =>
         fail("pairCounts did not register its build"))).count())
+  }
+
+  test("jobsOf counts the jobs a streaming query runs on its own thread") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_budget_stream")
+    SparkSpec.cleanupAtExit(dir.toFile)
+    java.nio.file.Files.writeString(dir.resolve("part-0.csv"),
+      "k,v\na,1\nb,2\n")
+    val schema = new org.apache.spark.sql.types.StructType()
+      .add("k", "string").add("v", "int")
+    val stream = streaming.Streams.csvStream(spark, dir.toString, schema)
+    val (out, jobs) = jobsOf(
+      streaming.Streams.runToMemory(stream, "budget_stream"))
+    assert(out.count() == 2)
+    // the micro-batch's jobs carry the stream's job group, not ours
+    assert(jobs >= 1, s"one micro-batch counted $jobs jobs")
   }
 
   test("an appended store is not memoized: loadSig sees rows appended " +

@@ -348,7 +348,7 @@ class Round16OpsSpec extends SparkSpec {
     val cents = typedLit(coarse.centroids.map(_.toSeq).toSeq)
     val ones = typedLit(Seq.fill(8)(1.0))
     val rows = df.select(col("e"),
-        element_at(cents, coarse.assign(col("e"), 1)(0) + 1).as("c"))
+        element_at(cents, coarse.assignK(col("e"), 1)(0) + 1).as("c"))
       .withColumn("codes",
         pq.encode(zip_with(col("e"), col("c"), (a, b) => a - b)))
       .select(col("e"), col("c"), col("codes"),
